@@ -438,42 +438,23 @@ class MinHashIndex:
                 )
             )
             combined = cross.unionByName(within)
-        if epoch_id is None and on_result is None and has_history:
-            # no epoch stamp and no sink hook -> the pairs checkpoint and
-            # the append staging are INDEPENDENT jobs over the same
-            # materialized cache (the pairs plan pinned the pre-append
-            # file list when `old` was built; lakehouse reads are
-            # snapshot-isolated) — overlap them so the per-job driver
-            # fixed cost doesn't serialize (guide §2.6).  The exactly-
-            # once feeds (epoch_id/on_result set) keep the strict order:
-            # results durable BEFORE the epoch stamp commits.  Cold first
-            # batches (no history) stay sequential: their cache is NOT
-            # yet materialized (the probe agg never ran), and two
-            # concurrent consumers would compute the band rows twice.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_pairs = pool.submit(
-                    lambda: self._verified(combined).localCheckpoint(eager=True)
-                )
-                fut_append = pool.submit(self.table.append, new)
-                pairs = fut_pairs.result()
-                fut_append.result()
-            new.unpersist()
-            return pairs
         # verified pairs materialize BEFORE the append (and before the
         # cache is released) — the checkpoint also makes the returned
-        # DataFrame independent of this batch's cached/staged state
-        pairs = self._verified(combined).localCheckpoint(eager=True)
-        if on_result is not None:
-            # sink effect first: once the epoch stamp commits, the results
-            # are already durable (see docstring's crash matrix)
-            on_result(pairs)
-        self.table.append(
-            new,  # carries exactly the table's columns (incl. pbucket)
-            summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
-        )
-        new.unpersist()
+        # DataFrame independent of this batch's cached/staged state.  The
+        # order is strict: a failed checkpoint leaves the table untouched,
+        # so a retry of the same call appends exactly once.
+        try:
+            pairs = self._verified(combined).localCheckpoint(eager=True)
+            if on_result is not None:
+                # sink effect first: once the epoch stamp commits, the
+                # results are already durable (see docstring's crash matrix)
+                on_result(pairs)
+            self.table.append(
+                new,  # carries exactly the table's columns (incl. pbucket)
+                summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
+            )
+        finally:
+            new.unpersist()
         return pairs
 
     def remove_docs(self, spark, doc_ids) -> int:
@@ -717,38 +698,20 @@ class SubstringIndex:
             F.col("_nb").alias("n_docs"),
             *([PBUCKET_COL] if n_pb else []),
         )
-        if epoch_id is None and on_result is None and has_history:
-            # interactive path: profile checkpoint and append staging are
-            # independent jobs over the same materialized caches (the
-            # stored-side plan pinned the pre-append file list above) —
-            # overlap them (guide §2.6).  Exactly-once feeds keep the
-            # strict results-durable-before-stamp order below; cold first
-            # batches stay sequential (their caches are unmaterialized —
-            # two concurrent consumers would compute the gram pipeline
-            # twice).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_prof = pool.submit(
-                    lambda: prof.localCheckpoint(eager=True)
-                )
-                fut_append = pool.submit(self.table.append, append_frame)
-                out = fut_prof.result()
-                fut_append.result()
+        # profile materializes BEFORE the append (pre-append snapshot +
+        # independence from the cached/staged batch state); a failed
+        # checkpoint leaves the table untouched, so a retry appends once
+        try:
+            prof = prof.localCheckpoint(eager=True)
+            if on_result is not None:
+                on_result(prof)  # sink effect before the epoch stamp
+            self.table.append(
+                append_frame,
+                summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
+            )
+        finally:
             batch_counts.unpersist()
             grams.unpersist()
-            return out
-        # profile materializes BEFORE the append (pre-append snapshot +
-        # independence from the cached/staged batch state)
-        prof = prof.localCheckpoint(eager=True)
-        if on_result is not None:
-            on_result(prof)  # sink effect before the epoch stamp
-        self.table.append(
-            append_frame,
-            summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
-        )
-        batch_counts.unpersist()
-        grams.unpersist()
         return prof
 
     def remove_docs(

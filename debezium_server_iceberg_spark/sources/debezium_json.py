@@ -21,7 +21,7 @@ path is config-documented, not hard-wired).
 from __future__ import annotations
 
 import json
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -114,44 +114,34 @@ def infer_event_schema(
 
 
 def infer_batch_schema(
-    df: DataFrame, converter: DebeziumSchemaConverter | None = None
+    pairs: Iterable[tuple[str | None, str | None]],
+    converter: DebeziumSchemaConverter | None = None,
 ) -> InferredSchema:
     """Infer the target schema from the UNION of a batch's DISTINCT
-    embedded schemas — the schemaless-source path.
+    embedded ``(value schema, key schema)`` texts — the schemaless-source
+    path.  The texts come from the batch's routing probe
+    (``operators.router.destinations``), so inference itself runs no
+    Spark job.
 
     RDBMS topics carry one schema per batch, but a Mongo source through
     ExtractNewDocumentState emits per-DOCUMENT field sets
     (IcebergChangeConsumerMongodbTest.java:55-66): sampling one event
     would silently drop any field that only other events of the batch
-    carry.  One columnar pass collects the distinct (value, key) schema
-    texts (exactly one for RDBMS feeds — the distinct is a few bytes per
-    event, not a payload shuffle), then the tiny distinct set converts
-    driver-side and merges union-by-name with the same widening lattice
-    table evolution uses.  Merge order is sorted-schema-text, so the
-    resulting field order is deterministic across retries/replays.
+    carry.  The tiny distinct set converts driver-side and merges
+    union-by-name with the same widening lattice table evolution uses.
+    Merge order is sorted-schema-text, so the resulting field order is
+    deterministic across retries/replays.
 
-    Kafka delete TOMBSTONES (null ``value`` — ``kafka_to_envelope``
-    passes them through for downstream filters) contribute a null
-    schema text and are SKIPPED, not fatal: raising on any null would
-    turn one tombstone anywhere in a batch into a permanent poison
-    pill (foreachBatch replays the same data).  The
-    no-embedded-schema error fires only when a non-empty batch yields
+    A null value-schema text (a Kafka delete TOMBSTONE, or an event
+    without an embedded schema) is SKIPPED, not fatal: raising on any
+    null would turn one tombstone anywhere in a batch into a permanent
+    poison pill (foreachBatch replays the same data).  The
+    no-embedded-schema error fires only when a non-empty input yields
     ZERO embedded schemas."""
     from ..schema.evolution import merge_schemas
 
     conv = converter or DebeziumSchemaConverter()
-    pairs = sorted(
-        (
-            (r["vs"], r["ks"])
-            for r in df.select(
-                F.get_json_object(F.col("value"), "$.schema").alias("vs"),
-                F.get_json_object(F.col("key"), "$.schema").alias("ks"),
-            )
-            .distinct()
-            .collect()
-        ),
-        key=lambda p: (p[0] or "", p[1] or ""),
-    )
+    pairs = sorted(pairs, key=lambda p: (p[0] or "", p[1] or ""))
     merged: InferredSchema | None = None
     saw_rows = False
     for vs, ks in pairs:

@@ -5,7 +5,10 @@ Spark-first re-expression of IcebergChangeConsumer.handleBatch
 
 reference                                   here
 ---------                                   ----
-groupingBy(destination)         :142-154 -> distinct() + per-dest filter
+groupingBy(destination)         :142-154 -> destinations(): one distinct
+                                             probe per batch (sorted dests +
+                                             their schema texts), then a
+                                             per-dest filter per write
 heartbeat skip                  :186-189 -> filter_heartbeats
 table mapper                    :409-411 -> map_destination
 load/create table               :316-389 -> LakeCatalog.load_or_create
@@ -13,9 +16,10 @@ schema evolution                :136-151 -> merge_schemas + update_schema
 dedup (upsert)                  :58-125  -> dedup_batch (window row_number)
 append / delta write            :205-249 -> LakeTable.append / merge_into
 parallel per-table commit       :206-307 -> ThreadPoolExecutor over dests,
-                                             first failure re-raised so the
-                                             micro-batch fails (no offset
-                                             advance -> no data loss)
+                                             all drained, first failure
+                                             re-raised so the micro-batch
+                                             fails (no offset advance -> no
+                                             data loss)
 offset store (exactly-once)     :163-170 -> Structured Streaming checkpoint
                                              (commits only after foreachBatch
                                              returns — T3)
@@ -29,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import EngineConfig
 from ..lakehouse import LakeCatalog, parse_partition_spec
@@ -36,7 +41,12 @@ from ..operators.dedup import assert_no_null_keys, dedup_batch
 from ..operators.mapper import map_destination
 from ..operators.merge import merge_into
 from ..operators.project import conform_to_schema
-from ..operators.router import filter_heartbeats, destinations, for_destination
+from ..operators.router import (
+    SchemaPair,
+    destinations,
+    filter_heartbeats,
+    for_destination,
+)
 from ..schema.converter import DebeziumSchemaConverter
 from ..schema.evolution import merge_schemas, schemas_equal
 from ..sources.debezium_json import (
@@ -97,28 +107,65 @@ class ChangeConsumer:
             raw = filter_heartbeats(raw, heartbeat_prefix=cfg.debezium.heartbeat_prefix)
         raw = raw.cache()
         try:
-            dests = destinations(raw)
+            # the batch's one routing probe (it also fills the cache):
+            # sorted destinations, each with its distinct schema texts
+            probe = destinations(raw)
             result = BatchResult()
             workers = max(1, cfg.batch.concurrent_uploads)
-            if workers == 1 or len(dests) <= 1:
-                for d in dests:
-                    result.tables_written[d] = self._write_destination(raw, d, epoch_id)
+            if workers == 1 or len(probe) <= 1:
+                for d, pairs in probe.items():
+                    result.tables_written[d] = self._write_destination(
+                        raw, d, pairs, epoch_id
+                    )
             else:
-                # per-table parallel commit (T4); first failure propagates ->
-                # the whole micro-batch fails and will be retried
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    futs = {
-                        d: pool.submit(self._write_destination, raw, d, epoch_id)
-                        for d in dests
-                    }
-                    for d, fut in futs.items():
-                        result.tables_written[d] = fut.result(
-                            timeout=cfg.batch.upload_timeout_minutes * 60
-                        )
+                result.tables_written = self._write_concurrently(
+                    raw, probe, epoch_id, workers
+                )
             self._emit_lineage(result)
             return result
         finally:
             raw.unpersist()
+
+    def _write_concurrently(
+        self,
+        raw: DataFrame,
+        probe: dict[str, list[SchemaPair]],
+        epoch_id: int | None,
+        workers: int,
+    ) -> dict[str, int]:
+        """Per-table parallel commit (T4).  Every future is drained before
+        anything raises, so no commit is still running when the micro-batch
+        fails; the first failure propagates (the whole micro-batch is
+        retried) and carries the other destinations' failures as notes.
+        Each worker runs under the caller's Spark local properties (job
+        group, description)."""
+        timeout = self.config.batch.upload_timeout_minutes * 60
+        written: dict[str, int] = {}
+        errors: list[tuple[str, BaseException]] = []
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futs = {
+                d: pool.submit(
+                    inheritable_thread_target(raw.sparkSession)(
+                        self._write_destination
+                    ),
+                    raw,
+                    d,
+                    pairs,
+                    epoch_id,
+                )
+                for d, pairs in probe.items()
+            }
+            for d, fut in futs.items():
+                try:
+                    written[d] = fut.result(timeout=timeout)
+                except Exception as e:
+                    errors.append((d, e))
+        if errors:
+            first = errors[0][1]
+            for d, e in errors[1:]:
+                first.add_note(f"destination {d!r} also failed: {e!r}")
+            raise first
+        return written
 
     def _emit_lineage(self, result: BatchResult) -> None:
         """Post-commit OpenLineage event (W16): one RunEvent per batch with
@@ -163,8 +210,15 @@ class ChangeConsumer:
         return False
 
     def _write_destination(
-        self, raw: DataFrame, dest: str, epoch_id: int | None = None
+        self,
+        raw: DataFrame,
+        dest: str,
+        pairs: list[SchemaPair],
+        epoch_id: int | None = None,
     ) -> int:
+        """Write one destination's rows; ``pairs`` are its distinct
+        non-tombstone (value schema, key schema) texts from the routing
+        probe."""
         cfg = self.config
         ic = cfg.iceberg
         # Kafka delete tombstones (null value) are log-compaction markers,
@@ -174,22 +228,26 @@ class ChangeConsumer:
         # delete itself arrived as the preceding op='d' event, so dropping
         # the marker loses nothing (the reference's Debezium pipeline
         # suppresses them at the source via tombstones.on.delete=false,
-        # DebeziumConfig defaults).
-        df = for_destination(raw, dest).filter(F.col("value").isNotNull())
-        sample = df.select("key", "value").first()
-        if sample is None:
+        # DebeziumConfig defaults).  The probe leaves them out of
+        # ``pairs``; a tombstone-only destination has none.
+        if not pairs:
             return 0
+        df = for_destination(raw, dest).filter(F.col("value").isNotNull())
         if ic.allow_field_addition:
             # union of the batch's distinct embedded schemas: schemaless
             # sources (Mongo ExtractNewDocumentState) vary field sets
             # event-to-event, and a single sample would drop the rest
-            inferred = infer_batch_schema(df, self.converter)
+            inferred = infer_batch_schema(pairs, self.converter)
         else:
-            # field addition disabled: shape pins to a sample event — the
-            # reference's own Mongo profile runs exactly this way
+            # field addition disabled: shape pins to one sample event's
+            # schema, the first in sorted order (the same on every replay)
+            # — the reference's own Mongo profile runs exactly this way
             # (IcebergChangeConsumerMongodbTest.java allow-field-addition=false)
+            vs, ks = pairs[0]
             inferred = infer_event_schema(
-                sample["value"], sample["key"], self.converter
+                {"schema": json.loads(vs) if vs else None},
+                {"schema": json.loads(ks)} if ks else None,
+                self.converter,
             )
 
         table_name = map_destination(
@@ -274,9 +332,12 @@ class ChangeConsumer:
             self._maybe_compact(raw.sparkSession, table)
             self._maybe_publish_iceberg(raw.sparkSession, table, table_name)
             return stats.source_rows
-        conformed = conform_to_schema(events, meta.schema)
+        # parse_events yields inferred.struct's names, order and types, so
+        # the projection is needed only when the table's columns differ
+        if not schemas_equal(inferred.struct, meta.schema):
+            events = conform_to_schema(events, meta.schema)
         n_rows = table.append(
-            conformed,
+            events,
             summary={"epoch_id": epoch_id} if epoch_id is not None else None,
             branch=ic.write_branch or "main",
         )

@@ -143,12 +143,16 @@ def test_schema_evolution_field_addition(spark, warehouse):
 def test_heartbeat_filtered_and_multi_destination(spark, warehouse):
     c = build_consumer(warehouse)
     rows = [
-        customer_event(1, "a", op="c", ts_ms=1, destination="testc.inventory.t_a"),
         customer_event(2, "b", op="c", ts_ms=1, destination="testc.inventory.t_b"),
+        customer_event(1, "a", op="c", ts_ms=1, destination="testc.inventory.t_a"),
         make_event("__debezium-heartbeat.x", {"id": 9}, ["id"], "c", 1),
     ]
     res = c.handle_batch(to_df(spark, rows))
-    assert set(res.tables_written) == {"testc.inventory.t_a", "testc.inventory.t_b"}
+    # tables commit in sorted destination order, whatever the batch order
+    assert list(res.tables_written.items()) == [
+        ("testc.inventory.t_a", 1),
+        ("testc.inventory.t_b", 1),
+    ]
     assert c.catalog.list_tables("debeziumevents") == [
         "testc_inventory_t_a",
         "testc_inventory_t_b",
@@ -555,3 +559,134 @@ def test_write_branch_rejects_copy_on_write(spark, warehouse):
     )
     with pytest.raises(ValueError, match="merge-on-read"):
         c.handle_batch(to_df(spark, [customer_event(1, "a", op="c", ts_ms=1)]))
+
+
+# ------------------------------------------------ routing probe per batch
+
+
+def test_routing_probe_sorted_with_schema_texts(spark):
+    """ONE distinct probe per batch: sorted destinations (heartbeats
+    filtered first), each with its sorted distinct non-tombstone (value
+    schema, key schema) texts — empty for a tombstone-only destination,
+    a None value text for an event without an embedded schema."""
+    import json
+
+    from debezium_server_iceberg_spark.operators.router import (
+        destinations,
+        filter_heartbeats,
+    )
+
+    ev_a = customer_event(1, "a", "c", 1, destination="t.c")
+    schemaless = {"destination": "t.b", "key": None, "value": json.dumps({"payload": {"id": 1}})}
+    rows = [
+        ev_a,
+        customer_event(2, "b", "c", 1, destination="t.c", extra={"x": 1}),
+        customer_event(3, "c", "c", 1, destination="t.c"),
+        schemaless,
+        {"destination": "t.a", "key": ev_a["key"], "value": None},
+        make_event("__debezium-heartbeat.x", {"id": 9}, ["id"], "c", 1),
+    ]
+    probe = destinations(filter_heartbeats(to_df(spark, rows)))
+    assert list(probe) == ["t.a", "t.b", "t.c"]
+    assert probe["t.a"] == []
+    assert probe["t.b"] == [(None, None)]
+    pairs = probe["t.c"]
+    assert len(pairs) == 2 and pairs == sorted(pairs)
+    assert {json.loads(ks)["fields"][0]["field"] for _, ks in pairs} == {"id"}
+    fields = [{f["field"] for f in json.loads(vs)["fields"]} for vs, _ in pairs]
+    assert {"x" in f for f in fields} == {True, False}
+    # same probe whatever the input order
+    assert destinations(filter_heartbeats(to_df(spark, rows[::-1]))) == probe
+
+
+def test_event_without_embedded_schema_raises(spark, warehouse):
+    import json
+
+    c = build_consumer(warehouse)
+    row = {"destination": DEST, "key": None, "value": json.dumps({"payload": {"id": 1}})}
+    with pytest.raises(ValueError, match="no event in the batch has an embedded schema"):
+        c.handle_batch(to_df(spark, [row]))
+    assert c.catalog.list_tables("debeziumevents") == []
+
+
+# warm-batch Spark jobs: 3 append tables, and 1 merge-on-read upsert table
+APPEND_3_JOBS = 9
+UPSERT_1_JOBS = 12
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_handle_batch_job_counts_pinned(spark, warehouse):
+    """Spark jobs per warm micro-batch: the routing probe plus each
+    table's write — no per-destination sample / inference job.  A change
+    that brings a per-destination probe back moves these counts."""
+    dests = [f"testc.inventory.j_{i}" for i in range(3)]
+    app = build_consumer(warehouse, upsert=False)
+    ups = build_consumer(warehouse)
+    counts = {}
+    for epoch in range(2):  # epoch 0 creates the tables, epoch 1 is measured
+        rows = [
+            customer_event(10 * epoch + i, "a", "c", epoch, destination=d)
+            for d in dests
+            for i in range(3)
+        ]
+        batch = to_df(spark, rows)
+        j = _jobs(spark)
+        app.handle_batch(batch, epoch_id=epoch)
+        counts["append"] = _jobs(spark) - j
+        batch = to_df(
+            spark, [customer_event(i, f"v{epoch}", "u", epoch) for i in range(5)]
+        )
+        j = _jobs(spark)
+        ups.handle_batch(batch, epoch_id=epoch)
+        counts["upsert"] = _jobs(spark) - j
+    assert counts == {"append": APPEND_3_JOBS, "upsert": UPSERT_1_JOBS}
+
+
+def test_concurrent_uploads_drain_and_keep_local_properties(spark, warehouse, monkeypatch):
+    """concurrent_uploads > 1: a failing destination does not abandon the
+    other one (it commits before the batch raises), later failures ride
+    on the first as notes, and workers see the caller's job group."""
+    from debezium_server_iceberg_spark.streaming import consumer as cmod
+
+    c = build_consumer(warehouse, upsert=False)
+    c.config.batch.concurrent_uploads = 2
+    sc = spark.sparkContext
+    seen = {}
+    orig = cmod.ChangeConsumer._write_destination
+    failing = {"testc.inventory.f_a"}
+
+    def write(self, raw, dest, pairs, epoch_id=None):
+        seen[dest] = sc.getLocalProperty("spark.jobGroup.id")
+        if dest in failing:
+            raise RuntimeError(f"boom {dest}")
+        return orig(self, raw, dest, pairs, epoch_id)
+
+    monkeypatch.setattr(cmod.ChangeConsumer, "_write_destination", write)
+    rows = [
+        customer_event(1, "a", "c", 1, destination="testc.inventory.f_a"),
+        customer_event(2, "b", "c", 1, destination="testc.inventory.f_b"),
+    ]
+    sc.setJobGroup("cdc-batch", "probe test")
+    try:
+        with pytest.raises(RuntimeError, match="boom testc.inventory.f_a") as ei:
+            c.handle_batch(to_df(spark, rows))
+        assert c.catalog.list_tables("debeziumevents") == ["testc_inventory_f_b"]
+        assert read_table(c, spark, "testc_inventory_f_b").count() == 1
+        assert not getattr(ei.value, "__notes__", None)
+        failing.add("testc.inventory.f_b")
+        with pytest.raises(RuntimeError, match="boom testc.inventory.f_a") as ei:
+            c.handle_batch(to_df(spark, rows))
+        assert ei.value.__notes__ == [
+            "destination 'testc.inventory.f_b' also failed: "
+            "RuntimeError('boom testc.inventory.f_b')"
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {
+        "testc.inventory.f_a": "cdc-batch",
+        "testc.inventory.f_b": "cdc-batch",
+    }

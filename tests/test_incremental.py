@@ -1,5 +1,6 @@
 """Incremental MinHash index: batch-split results must equal one-shot LSH."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_server_iceberg_spark.functions.dedup import minhash_near_dup_pairs
@@ -161,6 +162,47 @@ def test_substring_index_maintain_compacts(spark, warehouse):
     # probes against the compacted index still see all history
     tail = idx.add_batch(docs.limit(5).select("doc_id", "text"))
     assert tail.filter(F.col("n_shared") > 0).count() > 0  # dup of history
+
+
+@pytest.mark.parametrize("kind", ["minhash", "substring"])
+def test_add_batch_failed_checkpoint_leaves_table_retry_appends_once(
+    spark, warehouse, monkeypatch, kind
+):
+    """The results checkpoint runs BEFORE the index append: when it fails,
+    the table is still at its old snapshot, and a retry of the same call
+    converges to exactly one append (a committed append under a failed
+    checkpoint would double-count on retry — SubstringIndex counts would
+    inflate for good)."""
+    from debezium_server_iceberg_spark.functions.incremental import SubstringIndex
+
+    cls = MinHashIndex if kind == "minhash" else SubstringIndex
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+        F.col("doc_id") < 60
+    )
+    half1 = docs.filter(F.col("doc_id") % 2 == 0)
+    half2 = docs.filter(F.col("doc_id") % 2 == 1)
+    cat = LakeCatalog(warehouse)
+    ref = cls.create(cat, "idx", "ref")
+    ref.add_batch(half1)
+    ref.add_batch(half2)
+
+    idx = cls.create(cat, "idx", "under_test")
+    idx.add_batch(half1)  # history: the second batch probes stored rows
+    before = idx.table.metadata().current_snapshot_id
+
+    def fail(self, *a, **kw):
+        raise RuntimeError("injected checkpoint failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "localCheckpoint", fail)
+        with pytest.raises(RuntimeError, match="injected"):
+            idx.add_batch(half2)
+    assert idx.table.metadata().current_snapshot_id == before
+
+    idx.add_batch(half2)  # the caller's retry
+    assert sorted(idx.table.to_df(spark).collect()) == sorted(
+        ref.table.to_df(spark).collect()
+    )
 
 
 def test_minhash_probe_scan_prunes_stored_files(spark, warehouse):

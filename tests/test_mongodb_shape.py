@@ -163,17 +163,82 @@ def test_kafka_tombstone_in_batch_is_skipped_not_poison(spark, warehouse):
 
 
 def test_infer_batch_schema_skips_tombstones_raises_on_none(spark):
-    """Direct-API contract: null-value rows are skipped; a non-empty
-    batch with ZERO embedded schemas still raises."""
+    """Direct-API contract over the routing probe's (value schema, key
+    schema) texts: null value texts (tombstones, schemaless events) are
+    skipped; a non-empty input with ZERO embedded schemas still raises."""
     import pytest
 
+    from debezium_server_iceberg_spark.operators.router import destinations
     from debezium_server_iceberg_spark.sources.debezium_json import infer_batch_schema
 
-    rows = [
-        mongo_event("f" * 24, {"name": "s"}, "c", 1),
-        {"destination": DEST, "key": None, "value": None},
-    ]
-    inferred = infer_batch_schema(df(spark, rows))
+    probe = destinations(df(spark, [mongo_event("f" * 24, {"name": "s"}, "c", 1)]))
+    inferred = infer_batch_schema(probe[DEST] + [(None, None)])
     assert "name" in [f.name for f in inferred.struct.fields]
     with pytest.raises(ValueError, match="no event in the batch"):
-        infer_batch_schema(df(spark, [{"destination": DEST, "key": None, "value": None}]))
+        infer_batch_schema([(None, None)])
+
+
+def test_tombstone_only_destination_reports_zero_creates_no_table(spark, warehouse):
+    """A destination whose rows are all null-value tombstones is routed
+    (reported with 0 rows) but never inferred, parsed or created."""
+    other = "testc.inventory.orders"
+    c = build(warehouse)
+    res = c.handle_batch(
+        df(
+            spark,
+            [
+                {"destination": other, "key": json.dumps({"payload": {"_id": "x"}}), "value": None},
+                {"destination": other, "key": None, "value": None},
+                mongo_event("a" * 24, {"name": "x"}, "c", 1),
+            ],
+        ),
+        epoch_id=0,
+    )
+    assert res.tables_written == {other: 0, DEST: 1}
+    assert c.catalog.list_tables("debeziumevents") == [TABLE]
+
+
+def test_mongo_mixed_documents_in_one_batch_union(spark, warehouse):
+    """Per-document field sets inside ONE batch union by name: the probe
+    carries every distinct schema text of the destination."""
+    c = build(warehouse)
+    c.handle_batch(
+        df(
+            spark,
+            [
+                mongo_event("a" * 24, {"name": "x"}, "c", 1),
+                mongo_event("b" * 24, {"name": "y", "tags": "t"}, "c", 1),
+                mongo_event("c" * 24, {"qty": 3}, "c", 1),
+            ],
+        ),
+        epoch_id=0,
+    )
+    got = {r["_id"]: r.asDict() for r in c.table_df(spark, TABLE).collect()}
+    assert {k: (v["name"], v["tags"], v["qty"]) for k, v in got.items()} == {
+        "a" * 24: ("x", None, None),
+        "b" * 24: ("y", "t", None),
+        "c" * 24: (None, None, 3),
+    }
+
+
+def test_field_addition_disabled_pins_first_sorted_schema(spark, warehouse, tmp_path):
+    """allow_field_addition=False: the table takes ONE event's schema —
+    the first in sorted schema-text order, whatever the row order — and
+    fields only other events carry are dropped, not unioned."""
+    from debezium_server_iceberg_spark.operators.router import destinations
+    from debezium_server_iceberg_spark.sources.debezium_json import infer_event_schema
+
+    rows = [
+        mongo_event("a" * 24, {"name": "x", "tags": "t"}, "c", 1),
+        mongo_event("b" * 24, {"name": "y"}, "c", 1),
+        mongo_event("c" * 24, {"name": "z", "qty": 3}, "c", 1),
+    ]
+    vs, _ = destinations(df(spark, rows))[DEST][0]
+    want = [f.name for f in infer_event_schema({"schema": json.loads(vs)}).struct.fields]
+    assert not {"tags", "qty"} <= set(want)
+    for i, order in enumerate((rows, rows[::-1], rows[1:] + rows[:1])):
+        c = build(str(tmp_path / f"wh{i}"), allow_field_addition=False)
+        c.handle_batch(df(spark, order), epoch_id=0)
+        t = c.table_df(spark, TABLE)
+        assert t.columns == want
+        assert t.count() == 3
