@@ -65,8 +65,8 @@ class EpochRegressionError(RuntimeError):
 def epoch_already_applied(
     table: LakeTable, epoch_id: int | None, key: str = "epoch_id"
 ) -> bool:
-    """Exactly-once guard for STREAMING index feeds (same contract as
-    ``ChangeConsumer._epoch_already_applied``): every streamed append
+    """Exactly-once guard for STREAMING feeds (the index feeds and the
+    change consumer's per-table writes): every streamed commit
     stamps its epoch into the snapshot summary; a replayed micro-batch
     (foreachBatch is at-least-once) is detected so the caller can skip
     BOTH effects.  Since the checkpoint guarantees epochs are monotone

@@ -12,7 +12,12 @@ parquet + an atomic JSON metadata log, Iceberg-style:
   ``v{N}.metadata.json`` with O_EXCL (optimistic concurrency — two writers
   racing on the same version: one loses and retries), mirroring Iceberg's
   Hadoop-catalog commit and the reference's commit protocols
-  (IcebergTableOperator.java:218-228, IcebergOffsetBackingStore.java:219-223).
+  (IcebergTableOperator.java:218-228, IcebergOffsetBackingStore.java:219-223);
+- every metadata change, data commit or not, goes through ONE retry loop
+  (``LakeTable._commit``: re-read, mutate, CAS), and every data write
+  through ONE stage -> commit -> abort path (``LakeTable._stage_and_commit``:
+  independent staging jobs overlap via ``session.run_overlapped``, one
+  commit follows, and a failure anywhere removes every staged file).
 
 Capability parity map (reference file:line -> here):
 - table auto-create w/ schema+PK+partition+sort  IcebergChangeConsumer.java:321-389
@@ -38,10 +43,11 @@ import shutil
 import time
 import uuid as uuidlib
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..session import run_overlapped
 from .transforms import PartitionField
 
 _HINT = "version-hint.text"
@@ -82,6 +88,12 @@ LAST_SEQ_COL = "_last_updated_sequence_number"
 
 class CommitConflict(RuntimeError):
     pass
+
+
+# LakeTable._commit: attempts per commit before a CommitConflict propagates
+_COMMIT_ATTEMPTS = 5
+# returned by a LakeTable._commit mutation that has nothing to write
+_NOTHING_TO_COMMIT = object()
 
 
 @dataclass
@@ -367,19 +379,35 @@ class LakeTable:
         meta = meta if meta is not None else self.metadata()
         return int(meta.properties.get("format-version", "2")) >= 3
 
-    def update_properties(self, retries: int = 5, **props) -> None:
-        """Metadata-only property update (Iceberg's UpdateProperties): CAS
-        through the same optimistic-concurrency commit as data writes."""
-        for attempt in range(retries):
+    def _commit(self, mutate: Callable[[TableMetadata], Any]) -> Any:
+        """The one optimistic-concurrency commit loop: read the committed
+        metadata, apply ``mutate(meta)`` in place and write the result as
+        the next version.  On :class:`CommitConflict` (a concurrent writer
+        took that version) it starts over from a fresh read, up to
+        ``_COMMIT_ATTEMPTS`` attempts with linear backoff.  Returns what
+        ``mutate`` returned; a mutation that returns ``_NOTHING_TO_COMMIT``
+        writes nothing and ``_commit`` returns None."""
+        for attempt in range(_COMMIT_ATTEMPTS):
             meta = self.metadata()
-            meta.properties.update({k: str(v) for k, v in props.items()})
+            out = mutate(meta)
+            if out is _NOTHING_TO_COMMIT:
+                return None
             try:
                 self._write_metadata(meta, expected_version=meta.version)
-                return
+                return out
             except CommitConflict:
-                if attempt == retries - 1:
+                if attempt == _COMMIT_ATTEMPTS - 1:
                     raise
                 time.sleep(0.05 * (attempt + 1))
+
+    def update_properties(self, **props) -> None:
+        """Metadata-only property update (Iceberg's UpdateProperties): CAS
+        through the same optimistic-concurrency commit as data writes."""
+        self._commit(
+            lambda meta: meta.properties.update(
+                {k: str(v) for k, v in props.items()}
+            )
+        )
 
     # ------------------------------------------------------------ manifests
 
@@ -425,7 +453,6 @@ class LakeTable:
         remove_paths: set[str],
         summary: dict[str, Any] | None = None,
         new_schema: T.StructType | None = None,
-        retries: int = 5,
         add_deletes: list[DeleteFile] | None = None,
         drop_deletes: bool = False,
         branch: str = "main",
@@ -440,8 +467,8 @@ class LakeTable:
         ``branch``: commit on a named branch ref instead of main (Iceberg's
         branch writes / WAP pattern) — the new snapshot's base is the branch
         head and only that ref advances; main is untouched."""
-        for attempt in range(retries):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> None:
             if branch == "main":
                 base_sid = meta.current_snapshot_id
             else:
@@ -470,7 +497,7 @@ class LakeTable:
                 f.seq = sid
             # v3 row lineage: assign each added file its first_row_id from
             # the table's next-row-id counter (Iceberg v3 manifest
-            # inheritance).  Assigned inside the retry loop so a conflicting
+            # inheritance).  Assigned inside the commit loop so a conflicting
             # concurrent commit can't hand out overlapping id ranges.
             if int(meta.properties.get("format-version", "2")) >= 3:
                 rid = meta.next_row_id
@@ -517,14 +544,8 @@ class LakeTable:
                 meta.refs[branch] = {"snapshot_id": sid, "type": "branch"}
             if new_schema is not None:
                 meta.schema_json = new_schema.jsonValue()
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == retries - 1:
-                    raise
-                meta.snapshots.pop()
-                time.sleep(0.05 * (attempt + 1))
+
+        self._commit(mutate)
 
     # ------------------------------------------------------------ write ops
 
@@ -643,7 +664,6 @@ class LakeTable:
             present = [c for c in sort_cols if c in out.columns]
             if present:
                 out = out.sortWithinPartitions(*present)
-        staging = os.path.join(self.data_dir, uuidlib.uuid4().hex)
         # rewrites opt in (preserve_lineage) to carrying the v3 lineage
         # columns physically — materialization: a compacted row keeps its
         # original _row_id even though the new file gets a fresh
@@ -657,30 +677,47 @@ class LakeTable:
             else []
         )
         try:
-            writer = out.select(*table_cols, *lineage_cols, *pcols).write.mode("error")
-            # rolling files (reference write.target-file-size-bytes,
-            # IcebergTableWriterFactory.java:42-46): row-count cap per file
-            max_recs = meta.properties.get("write.max-records-per-file")
-            if max_recs:
-                writer = writer.option("maxRecordsPerFile", int(max_recs))
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(staging)
-            _uniquify_staged(staging)
-            files = self._collect_stats(df.sparkSession, staging, meta)
+            files = self._write_staged(
+                out.select(*table_cols, *lineage_cols, *pcols), meta,
+                partition_by=pcols, rolling=True,
+            )
             if single_file:
                 files = self._resplit_oversize_staged(
-                    df.sparkSession, staging, files, meta, key_cols
+                    df.sparkSession, files, meta, key_cols
                 )
             return files
-        except Exception:
-            # abort: a failed stage leaves no orphan files behind (W12,
-            # writer.abort() — IcebergTableOperator.java:229-237)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
         finally:
             if cached is not None:
                 cached.unpersist()
+
+    def _write_staged(
+        self,
+        frame: DataFrame,
+        meta: TableMetadata,
+        prefix: str = "",
+        partition_by: list[str] | None = None,
+        rolling: bool = False,
+    ) -> list[DataFile]:
+        """Write ``frame`` as parquet into a fresh staging directory under
+        data_dir and return the new files' stats (not yet committed).  A
+        failed write leaves no orphan files behind (W12, writer.abort() —
+        IcebergTableOperator.java:229-237).  ``rolling`` applies the
+        ``write.max-records-per-file`` row cap per file (the reference's
+        rolling writer, IcebergTableWriterFactory.java:42-46)."""
+        staging = os.path.join(self.data_dir, prefix + uuidlib.uuid4().hex)
+        writer = frame.write.mode("error")
+        max_recs = meta.properties.get("write.max-records-per-file")
+        if rolling and max_recs:
+            writer = writer.option("maxRecordsPerFile", int(max_recs))
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        try:
+            writer.parquet(staging)
+            _uniquify_staged(staging)
+            return self._collect_stats(frame.sparkSession, staging, meta)
+        except Exception:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
 
     def _collect_stats(
         self, spark: SparkSession, staging: str, meta: TableMetadata
@@ -781,7 +818,6 @@ class LakeTable:
     def _resplit_oversize_staged(
         self,
         spark: SparkSession,
-        staging: str,
         files: list[DataFile],
         meta: TableMetadata,
         key_cols: list[str],
@@ -799,7 +835,6 @@ class LakeTable:
         if total <= 2 * target or not files:
             return files
         n2 = max(2, -(-total // target))
-        restage = os.path.join(self.data_dir, uuidlib.uuid4().hex)
         try:
             # the staged file already holds exactly the output columns
             # (incl. any preserve_lineage columns) — re-range as-is.
@@ -808,7 +843,7 @@ class LakeTable:
             # write.max-records-per-file rolling cap re-applies — a table
             # whose sort order differs from its identifier fields must not
             # lose its WRITE ORDERED BY clustering to the re-split.
-            frame = spark.read.parquet(staging).repartitionByRange(
+            frame = spark.read.parquet(*[f.path for f in files]).repartitionByRange(
                 n2, *key_cols
             )
             sort_cols = [
@@ -818,34 +853,61 @@ class LakeTable:
             ]
             if sort_cols:
                 frame = frame.sortWithinPartitions(*sort_cols)
-            writer = frame.write.mode("error")
-            max_recs = meta.properties.get("write.max-records-per-file")
-            if max_recs:
-                writer = writer.option("maxRecordsPerFile", int(max_recs))
-            writer.parquet(restage)
-            _uniquify_staged(restage)
-        except Exception:
-            shutil.rmtree(restage, ignore_errors=True)
-            raise
-        shutil.rmtree(staging, ignore_errors=True)
-        return self._collect_stats(spark, restage, meta)
+            return self._write_staged(frame, meta, rolling=True)
+        finally:
+            # the oversize copy goes either way (a failed re-split aborts
+            # the whole stage)
+            self._abort_staged(files)
 
-    def _abort_staged(
-        self, add: list[DataFile], deletes: list[DeleteFile] | None = None
-    ) -> None:
+    def _abort_staged(self, staged: "Iterable[DataFile | DeleteFile]") -> None:
         """Discard staged-but-uncommitted files (W12 abort path: the
         reference's writer.abort(), IcebergTableOperator.java:229-237).
         Staged files live under a per-write uuid directory inside data_dir;
         removing those roots cannot touch committed files, which are never
         re-staged."""
         roots: set[str] = set()
-        for f in list(add) + list(deletes or []):
+        for f in staged:
             rel = os.path.relpath(f.path, self.data_dir)
             top = rel.split(os.sep)[0]
             if top and top != "..":
                 roots.add(os.path.join(self.data_dir, top))
         for r in roots:
             shutil.rmtree(r, ignore_errors=True)
+
+    def _stage_and_commit(
+        self,
+        stages: "list[Callable[[], list] | None]",
+        commit: Callable[..., None],
+    ) -> list[list]:
+        """The one stage -> commit -> abort path of every data write (the
+        reference's AppendFiles/RowDelta commit plus writer.abort(),
+        IcebergTableOperator.java:218-237).  Each stage writes files and
+        returns them; the stages are independent Spark jobs, so they run
+        overlapped (``run_overlapped``) and their per-job driver costs do
+        not add up.  A ``None`` stage stages nothing and yields ``[]``.
+        ``commit(*staged)`` then runs once; if any stage or the commit
+        fails, every file any stage wrote is removed.  Returns the staged
+        lists in ``stages`` order."""
+        live = [fn for fn in stages if fn is not None]
+        staged: list = []
+
+        def keeping(fn):
+            def stage():
+                out = fn()
+                staged.extend(out)
+                return out
+
+            stage.__name__ = fn.__name__
+            return stage
+
+        try:
+            done = iter(run_overlapped([keeping(fn) for fn in live], len(live)))
+            results = [[] if fn is None else next(done) for fn in stages]
+            commit(*results)
+        except Exception:
+            self._abort_staged(staged)
+            raise
+        return results
 
     def append(
         self, df: DataFrame, summary: dict | None = None, branch: str = "main"
@@ -856,24 +918,22 @@ class LakeTable:
         own stats, so no extra Spark action runs.  ``branch`` appends onto a
         named branch ref (write-audit-publish staging) instead of main."""
         meta = self.metadata()
-        add = self._stage_write(df, meta)
-        try:
-            self._commit_snapshot("append", add, set(), summary, branch=branch)
-        except Exception:
-            self._abort_staged(add)
-            raise
+        (add,) = self._stage_and_commit(
+            [lambda: self._stage_write(df, meta)],
+            lambda add: self._commit_snapshot(
+                "append", add, set(), summary, branch=branch
+            ),
+        )
         return sum(f.rows for f in add)
 
     def overwrite(self, df: DataFrame, summary: dict | None = None) -> None:
         """Full-table overwrite (reference OverwriteFiles alwaysTrue,
         IcebergOffsetBackingStore.java:219-223)."""
         meta = self.metadata()
-        add = self._stage_write(df, meta)
-        try:
-            self._commit_snapshot("overwrite", add, set(), summary)
-        except Exception:
-            self._abort_staged(add)
-            raise
+        self._stage_and_commit(
+            [lambda: self._stage_write(df, meta)],
+            lambda add: self._commit_snapshot("overwrite", add, set(), summary),
+        )
 
     def truncate(self, summary: dict | None = None) -> None:
         """Overwrite commit with ZERO data files: clears the table without
@@ -899,21 +959,20 @@ class LakeTable:
         ``_last_updated_sequence_number`` columns present on ``add_df``
         (rewrite paths only — see ``_stage_write``)."""
         meta = self.metadata()
-        add = (
-            self._stage_write(
+
+        def stage_data() -> list[DataFile]:
+            return self._stage_write(
                 add_df, meta, target_partitions, preserve_layout,
                 preserve_lineage,
             )
-            if add_df is not None
-            else []
+
+        self._stage_and_commit(
+            [stage_data if add_df is not None else None],
+            lambda add: self._commit_snapshot(
+                "delta", add, set(remove_paths), summary,
+                drop_deletes=drop_deletes,
+            ),
         )
-        try:
-            self._commit_snapshot(
-                "delta", add, set(remove_paths), summary, drop_deletes=drop_deletes
-            )
-        except Exception:
-            self._abort_staged(add)
-            raise
 
     def commit_row_delta(
         self,
@@ -934,7 +993,8 @@ class LakeTable:
         ``delete_positions_df`` — columns ``(file_name, pos)`` — stages a
         position-delete file instead (v3 deletion-vector semantics,
         IcebergConfig.java:106-108 / PartitioningDVWriter).  Both may be
-        combined.  Returns (added_rows, delete_rows)."""
+        combined; the data, position-delete and equality-delete writes
+        stage concurrently.  Returns (added_rows, delete_rows)."""
         meta = self.metadata()
         key_cols = [
             c for c in meta.identifier_fields if c in {f.name for f in meta.schema.fields}
@@ -942,125 +1002,66 @@ class LakeTable:
         if not key_cols:
             raise ValueError("commit_row_delta requires identifier fields")
 
-        def _stage_add() -> list[DataFile]:
-            return self._stage_write(add_df, meta) if add_df is not None else []
+        def stage_data() -> list[DataFile]:
+            return self._stage_write(add_df, meta)
 
-        def _stage_posdel() -> list[DeleteFile]:
-            if delete_positions_df is None:
-                return []
-            staging = os.path.join(self.data_dir, "posdel-" + uuidlib.uuid4().hex)
-            out: list[DeleteFile] = []
-            try:
-                (
-                    delete_positions_df.select(
-                        F.col("file_name").cast("string"),
-                        F.col("pos").cast("long"),
-                    )
-                    .coalesce(1)
-                    .sortWithinPartitions("file_name", "pos")
-                    .write.mode("error")
-                    .parquet(staging)
+        def stage_position_deletes() -> list[DeleteFile]:
+            staged = self._write_staged(
+                delete_positions_df.select(
+                    F.col("file_name").cast("string"),
+                    F.col("pos").cast("long"),
                 )
-                _uniquify_staged(staging)
-                for f in self._collect_stats(
-                    delete_positions_df.sparkSession, staging, meta
-                ):
-                    if f.rows:
-                        out.append(
-                            DeleteFile(
-                                # file_name min/max bounds let the read
-                                # side prune this delete from scans that
-                                # keep none of the named files
-                                f.path, f.rows, 0, [], _posdel_bounds(f.path),
-                                f.bytes, content="position",
-                            )
-                        )
-                    else:  # empty batch touched nothing: drop the file
-                        os.remove(f.path)
-                return out
-            except Exception:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-
-        def _stage_eqdel() -> list[DeleteFile]:
-            if delete_keys_df is None:
-                return []
-            staging = os.path.join(self.data_dir, "deletes-" + uuidlib.uuid4().hex)
-            try:
-                # few small files per batch: a CDC batch's distinct keys are
-                # tiny relative to the table; key-clustered + sorted so footer
-                # min/max bounds are tight for scan-side pruning (callers size
-                # delete_target_files up for snapshot-load-sized batches)
-                keys = delete_keys_df.select(*key_cols)
-                keys = (
-                    keys.repartitionByRange(delete_target_files, *key_cols)
-                    if delete_target_files > 1
-                    else keys.coalesce(1)
-                )
-                (
-                    keys.sortWithinPartitions(*key_cols)
-                    .write.mode("error")
-                    .parquet(staging)
-                )
-                _uniquify_staged(staging)
-                return [
-                    DeleteFile(f.path, f.rows, 0, list(key_cols), f.bounds, f.bytes)
-                    for f in self._collect_stats(
-                        (add_df or delete_keys_df).sparkSession, staging, meta
-                    )
-                ]
-            except Exception:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-
-        # The 2-3 staging writes are INDEPENDENT Spark jobs over different
-        # inputs into different staging dirs — submit them concurrently so
-        # the per-job driver fixed cost (scheduling + commit + footer
-        # stats) overlaps instead of serializing (guide §2.6: actions are
-        # only sequential because driver code calls them sequentially).
-        # Every MoR upsert pays this per commit; each staging keeps its
-        # own abort, and a failure aborts whatever the others staged.
-        stages = [_stage_add, _stage_posdel, _stage_eqdel]
-        n_live = sum(
-            x is not None for x in (add_df, delete_positions_df, delete_keys_df)
-        )
-        add: list[DataFile] = []
-        add_deletes: list[DeleteFile] = []
-        if n_live > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=n_live) as pool:
-                futs = [pool.submit(fn) for fn in stages]
-                results, first_err = [], None
-                for fut in futs:
-                    try:
-                        results.append(fut.result())
-                    except Exception as e:  # keep draining: abort needs all
-                        results.append(None)
-                        first_err = first_err or e
-            if first_err is not None:
-                staged_add = results[0] or []
-                staged_dels = [d for r in results[1:] if r for d in r]
-                self._abort_staged(staged_add, staged_dels)
-                raise first_err
-            add = results[0]
-            add_deletes = results[1] + results[2]
-        else:
-            try:
-                add = _stage_add()
-                add_deletes = _stage_posdel() + _stage_eqdel()
-            except Exception:
-                self._abort_staged(add, add_deletes)
-                raise
-        try:
-            self._commit_snapshot(
-                "rowdelta", add, set(), summary, add_deletes=add_deletes,
-                branch=branch,
+                .coalesce(1)
+                .sortWithinPartitions("file_name", "pos"),
+                meta,
+                prefix="posdel-",
             )
-        except Exception:
-            self._abort_staged(add, add_deletes)
-            raise
-        return (sum(f.rows for f in add), sum(d.rows for d in add_deletes))
+            out: list[DeleteFile] = []
+            for f in staged:
+                if f.rows:
+                    out.append(
+                        DeleteFile(
+                            # file_name min/max bounds let the read side
+                            # prune this delete from scans that keep none
+                            # of the named files
+                            f.path, f.rows, 0, [], _posdel_bounds(f.path),
+                            f.bytes, content="position",
+                        )
+                    )
+                else:  # empty batch touched nothing: drop the file
+                    os.remove(f.path)
+            return out
+
+        def stage_equality_deletes() -> list[DeleteFile]:
+            # few small files per batch: a CDC batch's distinct keys are
+            # tiny relative to the table; key-clustered + sorted so footer
+            # min/max bounds are tight for scan-side pruning (callers size
+            # delete_target_files up for snapshot-load-sized batches)
+            keys = delete_keys_df.select(*key_cols)
+            keys = (
+                keys.repartitionByRange(delete_target_files, *key_cols)
+                if delete_target_files > 1
+                else keys.coalesce(1)
+            )
+            return [
+                DeleteFile(f.path, f.rows, 0, list(key_cols), f.bounds, f.bytes)
+                for f in self._write_staged(
+                    keys.sortWithinPartitions(*key_cols), meta, prefix="deletes-"
+                )
+            ]
+
+        add, posdel, eqdel = self._stage_and_commit(
+            [
+                stage_data if add_df is not None else None,
+                stage_position_deletes if delete_positions_df is not None else None,
+                stage_equality_deletes if delete_keys_df is not None else None,
+            ],
+            lambda add, posdel, eqdel: self._commit_snapshot(
+                "rowdelta", add, set(), summary, add_deletes=posdel + eqdel,
+                branch=branch,
+            ),
+        )
+        return (sum(f.rows for f in add), sum(d.rows for d in posdel + eqdel))
 
     def update_schema(self, new_schema: T.StructType) -> None:
         """Schema-evolution commit; no data movement (ALTER TABLE ADD COLUMNS
@@ -1077,8 +1078,7 @@ class LakeTable:
         effect, like Iceberg's rewrite_data_files."""
         from .transforms import parse_partition_spec
 
-        for attempt in range(5):
-            meta = self.metadata()
+        def mutate(meta: TableMetadata) -> None:
             names = {f.name for f in meta.schema.fields}
             new = (
                 parse_partition_spec(spec, names)
@@ -1091,32 +1091,22 @@ class LakeTable:
                         f"partition source column {pf.source!r} not in schema"
                     )
             meta.partition_spec = new
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._commit(mutate)
 
     # ------------------------------------------------- refs (tags/branches)
 
     def _set_ref(self, name: str, ref_type: str, snapshot_id: int | None) -> None:
         if name == "main":
             raise ValueError("'main' is the implicit current-snapshot ref")
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> None:
             sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
             if sid is None or all(s.snapshot_id != sid for s in meta.snapshots):
                 raise ValueError(f"no snapshot {sid} to reference")
             meta.refs[name] = {"snapshot_id": sid, "type": ref_type}
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._commit(mutate)
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Immutable named pointer at a snapshot (Iceberg CREATE TAG):
@@ -1131,18 +1121,12 @@ class LakeTable:
         self._set_ref(name, "branch", snapshot_id)
 
     def drop_ref(self, name: str) -> None:
-        for attempt in range(5):
-            meta = self.metadata()
+        def mutate(meta: TableMetadata) -> None:
             if name not in meta.refs:
                 raise ValueError(f"no ref named {name!r}")
             del meta.refs[name]
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._commit(mutate)
 
     def refs(self) -> dict[str, dict]:
         """All named refs, including the implicit main branch."""
@@ -1168,8 +1152,8 @@ class LakeTable:
         branch head (walks ``parent_id`` lineage), so nothing committed to
         main since the branch diverged can be silently dropped.  Returns the
         new current snapshot id."""
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> int:
             ref = meta.refs.get(branch)
             if ref is None or ref.get("type") != "branch":
                 raise ValueError(f"no branch named {branch!r}")
@@ -1184,14 +1168,9 @@ class LakeTable:
                     f"branch {branch!r} head ({head}); cannot fast-forward"
                 )
             meta.current_snapshot_id = head
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return head
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return head
+            return head
+
+        return self._commit(mutate)
 
     # --------------------------------------------------------- maintenance
 
@@ -1377,10 +1356,10 @@ class LakeTable:
         expire_snapshots maintenance procedure). Returns files deleted."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata):
             if len(meta.snapshots) <= keep_last:
-                return 0
+                return _NOTHING_TO_COMMIT
             # snapshots pinned by named refs (tags/branch heads) are never
             # expired — same protection Iceberg's procedure applies
             pinned = {r["snapshot_id"] for r in meta.refs.values()}
@@ -1391,7 +1370,8 @@ class LakeTable:
             ]
             expired = [s for s in meta.snapshots if s not in keep]
             if not expired:
-                return 0
+                return _NOTHING_TO_COMMIT
+
             def _all_paths(sid: int) -> set[str]:
                 e = self._manifest_entry(meta, sid)
                 return {f["path"] for f in e["files"]} | {
@@ -1402,27 +1382,25 @@ class LakeTable:
             dead_paths = (
                 set().union(*(_all_paths(s.snapshot_id) for s in expired)) - live_paths
             )
-            old_manifests = [s.manifest for s in expired]
             meta.snapshots = keep
+            return dead_paths, [s.manifest for s in expired]
+
+        # dead files go only after the commit that unreferences them lands
+        done = self._commit(mutate)
+        if done is None:
+            return 0
+        dead_paths, old_manifests = done
+        for p in dead_paths:
             try:
-                self._write_metadata(meta, expected_version=meta.version)
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-                continue
-            for p in dead_paths:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            for m in old_manifests:
-                try:
-                    os.remove(os.path.join(self.meta_dir, m))
-                except OSError:
-                    pass
-            return len(dead_paths)
-        return 0
+                os.remove(p)
+            except OSError:
+                pass
+        for m in old_manifests:
+            try:
+                os.remove(os.path.join(self.meta_dir, m))
+            except OSError:
+                pass
+        return len(dead_paths)
 
     def remove_orphan_files(self, older_than_seconds: float = 86400.0) -> list[str]:
         """Delete data-dir files no retained snapshot references (Iceberg's

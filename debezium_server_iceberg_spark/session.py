@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # ~128 MB of scanned input per shuffle partition — the classic sizing that
 # keeps a partition's working set inside executor memory with headroom
@@ -117,3 +120,51 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_overlapped(
+    fns: Sequence[Callable[[], Any]],
+    workers: int,
+    timeout: float | None = None,
+    names: Sequence[str] | None = None,
+) -> list:
+    """Call each of ``fns`` (no arguments) and return their results in order.
+
+    Independent Spark actions are only sequential because driver code
+    calls them sequentially: with ``workers > 1`` and more than one call,
+    they run on a thread pool so their per-job driver costs overlap.  Each
+    worker runs under the caller's Spark local properties (job group,
+    description, scheduler pool), so cancelling the caller's job group
+    covers them.  Every call is drained before anything raises (none is
+    still running when the caller sees the failure); the first failure in
+    ``fns`` order is raised, carrying each later one as a note
+    ``"<name> also failed: <repr>"`` (``names`` defaults to the callables'
+    ``__name__``).  ``timeout`` bounds each wait in seconds.  With one
+    worker or one call, the calls run in order on the caller's thread and
+    the first failure stops them."""
+    if workers <= 1 or len(fns) <= 1:
+        return [fn() for fn in fns]
+    names = names or [getattr(fn, "__name__", repr(fn)) for fn in fns]
+    inherit = inheritable_thread_target(SparkSession.active())
+    results: list = []
+    errors: list[tuple[str, BaseException]] = []
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futs = [pool.submit(inherit(fn)) for fn in fns]
+        for name, fut in zip(names, futs):
+            try:
+                results.append(fut.result(timeout=timeout))
+            except Exception as e:
+                errors.append((name, e))
+    if errors:
+        first = errors[0][1]
+        for name, e in errors[1:]:
+            first.add_note(f"{name} also failed: {_describe(e)}")
+        raise first
+    return results
+
+
+def _describe(e: BaseException) -> str:
+    """``repr(e)``, plus the message's first line when the repr lacks it
+    (a captured Spark exception's repr is a bare ``SparkRuntimeException()``)."""
+    head = (str(e).strip().splitlines() or [""])[0]
+    return repr(e) if head in repr(e) else f"{e!r}: {head}"

@@ -15,27 +15,29 @@ load/create table               :316-389 -> LakeCatalog.load_or_create
 schema evolution                :136-151 -> merge_schemas + update_schema
 dedup (upsert)                  :58-125  -> dedup_batch (window row_number)
 append / delta write            :205-249 -> LakeTable.append / merge_into
-parallel per-table commit       :206-307 -> ThreadPoolExecutor over dests,
-                                             all drained, first failure
-                                             re-raised so the micro-batch
-                                             fails (no offset advance -> no
-                                             data loss)
+parallel per-table commit       :206-307 -> session.run_overlapped over
+                                             dests (concurrent_uploads
+                                             workers): all drained, first
+                                             failure re-raised so the
+                                             micro-batch fails (no offset
+                                             advance -> no data loss)
 offset store (exactly-once)     :163-170 -> Structured Streaming checkpoint
                                              (commits only after foreachBatch
-                                             returns — T3)
+                                             returns — T3) + the epoch stamp
+                                             guard (epoch_already_applied)
 batch-size wait                 T2       -> trigger(processingTime=...)
 """
 
 from __future__ import annotations
 
 import json
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.util import inheritable_thread_target
 
 from ..config import EngineConfig
+from ..functions.incremental import epoch_already_applied
 from ..lakehouse import LakeCatalog, parse_partition_spec
 from ..operators.dedup import assert_no_null_keys, dedup_batch
 from ..operators.mapper import map_destination
@@ -49,6 +51,7 @@ from ..operators.router import (
 )
 from ..schema.converter import DebeziumSchemaConverter
 from ..schema.evolution import merge_schemas, schemas_equal
+from ..session import run_overlapped
 from ..sources.debezium_json import (
     infer_batch_schema,
     infer_event_schema,
@@ -110,62 +113,24 @@ class ChangeConsumer:
             # the batch's one routing probe (it also fills the cache):
             # sorted destinations, each with its distinct schema texts
             probe = destinations(raw)
-            result = BatchResult()
-            workers = max(1, cfg.batch.concurrent_uploads)
-            if workers == 1 or len(probe) <= 1:
-                for d, pairs in probe.items():
-                    result.tables_written[d] = self._write_destination(
-                        raw, d, pairs, epoch_id
-                    )
-            else:
-                result.tables_written = self._write_concurrently(
-                    raw, probe, epoch_id, workers
-                )
+            # per-table parallel commit (T4): concurrent_uploads workers,
+            # each under the caller's Spark local properties; every
+            # destination finishes before the first failure re-raises
+            # (the whole micro-batch is retried), the others as its notes
+            written = run_overlapped(
+                [
+                    partial(self._write_destination, raw, d, pairs, epoch_id)
+                    for d, pairs in probe.items()
+                ],
+                cfg.batch.concurrent_uploads,
+                timeout=cfg.batch.upload_timeout_minutes * 60,
+                names=[f"destination {d!r}" for d in probe],
+            )
+            result = BatchResult(tables_written=dict(zip(probe, written)))
             self._emit_lineage(result)
             return result
         finally:
             raw.unpersist()
-
-    def _write_concurrently(
-        self,
-        raw: DataFrame,
-        probe: dict[str, list[SchemaPair]],
-        epoch_id: int | None,
-        workers: int,
-    ) -> dict[str, int]:
-        """Per-table parallel commit (T4).  Every future is drained before
-        anything raises, so no commit is still running when the micro-batch
-        fails; the first failure propagates (the whole micro-batch is
-        retried) and carries the other destinations' failures as notes.
-        Each worker runs under the caller's Spark local properties (job
-        group, description)."""
-        timeout = self.config.batch.upload_timeout_minutes * 60
-        written: dict[str, int] = {}
-        errors: list[tuple[str, BaseException]] = []
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futs = {
-                d: pool.submit(
-                    inheritable_thread_target(raw.sparkSession)(
-                        self._write_destination
-                    ),
-                    raw,
-                    d,
-                    pairs,
-                    epoch_id,
-                )
-                for d, pairs in probe.items()
-            }
-            for d, fut in futs.items():
-                try:
-                    written[d] = fut.result(timeout=timeout)
-                except Exception as e:
-                    errors.append((d, e))
-        if errors:
-            first = errors[0][1]
-            for d, e in errors[1:]:
-                first.add_note(f"destination {d!r} also failed: {e!r}")
-            raise first
-        return written
 
     def _emit_lineage(self, result: BatchResult) -> None:
         """Post-commit OpenLineage event (W16): one RunEvent per batch with
@@ -179,14 +144,7 @@ class ChangeConsumer:
             if rows <= 0:
                 continue
             try:
-                name = map_destination(
-                    dest,
-                    table_prefix=ic.table_prefix,
-                    destination_regexp=ic.destination_regexp,
-                    destination_regexp_replace=ic.destination_regexp_replace,
-                    uppercase=ic.destination_uppercase,
-                    lowercase=ic.destination_lowercase,
-                )
+                name = self._table_name(dest)
                 schema = self.catalog.load_table(ic.namespace, name).metadata().schema
                 outputs.append(self.lineage.dataset(name, schema))
             except Exception:
@@ -194,20 +152,17 @@ class ChangeConsumer:
         if outputs:
             self.lineage.emit(outputs)
 
-    @staticmethod
-    def _epoch_already_applied(table, epoch_id: int | None) -> bool:
-        """Exactly-once guard for replayed micro-batches (SURVEY §7 risk
-        register): MERGE is idempotent by key, but a replayed *append* would
-        duplicate rows. Every commit records its epoch in the snapshot
-        summary; a replay of an already-committed (epoch, table) pair is
-        skipped. Checkpoint guarantees epochs are monotone per query."""
-        if epoch_id is None:
-            return False
-        for s in reversed(table.metadata().snapshots):
-            e = s.summary.get("epoch_id")
-            if e is not None:
-                return int(e) >= epoch_id
-        return False
+    def _table_name(self, dest: str) -> str:
+        """The table a destination maps to (IcebergChangeConsumer.java:409-411)."""
+        ic = self.config.iceberg
+        return map_destination(
+            dest,
+            table_prefix=ic.table_prefix,
+            destination_regexp=ic.destination_regexp,
+            destination_regexp_replace=ic.destination_regexp_replace,
+            uppercase=ic.destination_uppercase,
+            lowercase=ic.destination_lowercase,
+        )
 
     def _write_destination(
         self,
@@ -250,14 +205,7 @@ class ChangeConsumer:
                 self.converter,
             )
 
-        table_name = map_destination(
-            dest,
-            table_prefix=ic.table_prefix,
-            destination_regexp=ic.destination_regexp,
-            destination_regexp_replace=ic.destination_regexp_replace,
-            uppercase=ic.destination_uppercase,
-            lowercase=ic.destination_lowercase,
-        )
+        table_name = self._table_name(dest)
 
         pspec_str = ic.partition_by.get(table_name, ic.partition_by.get("*", ""))
         pspec = parse_partition_spec(
@@ -282,7 +230,12 @@ class ChangeConsumer:
             # reference's model, where the table lives IN the catalog
             table.commit_hook = self._per_commit_hook(table_name)
 
-        if self._epoch_already_applied(table, epoch_id):
+        # exactly-once guard for replayed micro-batches (SURVEY §7 risk
+        # register): MERGE is idempotent by key, a replayed append is not.
+        # Every commit stamps its epoch; a replay of the last stamped epoch
+        # is skipped, and an OLDER epoch (reset checkpoint, second writer
+        # query) raises EpochRegressionError instead of dropping the batch
+        if epoch_already_applied(table, epoch_id):
             return 0
 
         # schema evolution (W14): union-by-name, commit only on real change
@@ -295,6 +248,8 @@ class ChangeConsumer:
 
         events = parse_events(df, inferred).drop("destination")
         key_fields = meta.identifier_fields or inferred.key_fields
+        summary = {"epoch_id": epoch_id} if epoch_id is not None else None
+        branch = ic.write_branch or "main"
 
         # upsert w/o PK falls back to append (IcebergTableWriterFactory.java:51-56)
         if ic.upsert and key_fields:
@@ -319,34 +274,28 @@ class ChangeConsumer:
                     "write_branch staging requires the merge-on-read upsert "
                     "path (format-version 3 or upsert_mode='merge-on-read')"
                 )
-            stats = merge_into(
+            n_rows = merge_into(
                 table,
                 deduped,
                 keep_deletes=ic.upsert_keep_deletes,
                 op_col=ic.upsert_op_column,
-                summary={"epoch_id": epoch_id} if epoch_id is not None else None,
+                summary=summary,
                 mode=mode,
-                branch=ic.write_branch or "main",
-            )
-            self._maybe_publish_branch(table)
-            self._maybe_compact(raw.sparkSession, table)
-            self._maybe_publish_iceberg(raw.sparkSession, table, table_name)
-            return stats.source_rows
-        # parse_events yields inferred.struct's names, order and types, so
-        # the projection is needed only when the table's columns differ
-        if not schemas_equal(inferred.struct, meta.schema):
-            events = conform_to_schema(events, meta.schema)
-        n_rows = table.append(
-            events,
-            summary={"epoch_id": epoch_id} if epoch_id is not None else None,
-            branch=ic.write_branch or "main",
-        )
+                branch=branch,
+            ).source_rows
+        else:
+            # parse_events yields inferred.struct's names, order and types,
+            # so the projection is needed only when the table's columns
+            # differ
+            if not schemas_equal(inferred.struct, meta.schema):
+                events = conform_to_schema(events, meta.schema)
+            # row count from the commit's own file stats (manifest already
+            # has it) — no extra action, and no -1 sentinel leaking into
+            # lineage or the offsets mirror
+            n_rows = table.append(events, summary=summary, branch=branch)
         self._maybe_publish_branch(table)
         self._maybe_compact(raw.sparkSession, table)
         self._maybe_publish_iceberg(raw.sparkSession, table, table_name)
-        # row count from the commit's own file stats (manifest already has
-        # it) — no extra action, and no -1 sentinel leaking into lineage
-        # or the offsets mirror
         return n_rows
 
     def _per_commit_hook(self, table_name: str):

@@ -6,6 +6,10 @@ IcebergChangeConsumerTest field-addition :361-430)."""
 import pytest
 
 from debezium_server_iceberg_spark.config import EngineConfig
+from debezium_server_iceberg_spark.functions.incremental import (
+    EpochRegressionError,
+    reset_epoch,
+)
 from debezium_server_iceberg_spark.streaming.consumer import ChangeConsumer
 from tests.fixtures import customer_event, make_event
 
@@ -179,6 +183,16 @@ def test_append_replay_epoch_guard(spark, warehouse):
     assert read_table(c, spark).count() == 2
     c.handle_batch(to_df(spark, [customer_event(3, "z", "c", 2)]), epoch_id=1)
     assert read_table(c, spark).count() == 3
+    # a regressed epoch (reset checkpoint, second writer query) fails
+    # loudly instead of silently dropping its rows; after the operator's
+    # reset_epoch the same epoch applies
+    late = to_df(spark, [customer_event(99, "late", "c", 3)])
+    with pytest.raises(EpochRegressionError):
+        c.handle_batch(late, epoch_id=0)
+    assert read_table(c, spark).count() == 3
+    reset_epoch(spark, c.catalog.load_table("debeziumevents", TABLE))
+    assert c.handle_batch(late, epoch_id=0).tables_written == {DEST: 1}
+    assert read_table(c, spark).count() == 4
 
 
 def test_per_table_partition_override(spark, warehouse):

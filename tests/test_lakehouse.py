@@ -279,6 +279,113 @@ def test_abort_cleans_staged_files(spark, warehouse, monkeypatch):
     assert t.row_count() == 3
 
 
+def test_stage_failure_aborts_every_stage(spark, warehouse, monkeypatch):
+    """A staging failure inside commit_row_delta's overlapped stages:
+    every stage is drained before the raise, nothing staged survives, the
+    table stays at its old snapshot, a second failure rides along as a
+    note, the staging jobs run under the caller's job group, and a retry
+    of the same call commits once."""
+    import os
+    import time
+
+    cat = LakeCatalog(warehouse)
+    t = cat.create_table("ns", "stage_fail", SCHEMA, identifier_fields=["id"])
+    t.append(spark.createDataFrame([(1, "a", None), (2, "b", None)], SCHEMA))
+    committed = {f.path for f in t.current_files()}
+    before = t.metadata()
+
+    def failing(frame, msg):
+        # the write job itself fails (raise_error runs in the task)
+        return frame.withColumn("id", F.expr(f"raise_error('{msg}')").cast("long"))
+
+    good_add = spark.createDataFrame([(3, "c", None)], SCHEMA)
+    good_keys = spark.createDataFrame([(1,)], "id long")
+    positions = spark.createDataFrame([("nothing.parquet", 0)], "file_name string, pos long")
+    finished = []
+    orig = t._write_staged
+
+    def slow_position_deletes(frame, meta, prefix="", **kw):
+        # the surviving stage finishes after the failing ones
+        if prefix == "posdel-":
+            time.sleep(1.0)
+        out = orig(frame, meta, prefix, **kw)
+        finished.append(prefix)
+        return out
+
+    monkeypatch.setattr(t, "_write_staged", slow_position_deletes)
+    sc = spark.sparkContext
+    sc.setJobGroup("stage-fail", "stage failure test")
+    try:
+        with pytest.raises(Exception, match="data boom") as ei:
+            t.commit_row_delta(
+                failing(good_add, "data boom"),
+                failing(good_keys, "eqdel boom"),
+                delete_positions_df=positions,
+            )
+        staging_jobs = sc.statusTracker().getJobIdsForGroup("stage-fail")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert finished == ["posdel-"]  # drained before the raise
+    (note,) = ei.value.__notes__
+    assert note.startswith("stage_equality_deletes also failed: ")
+    assert "eqdel boom" in note
+    assert len(staging_jobs) >= 3  # data, position- and equality-delete writes
+    after = t.metadata()
+    assert (after.version, after.current_snapshot_id) == (
+        before.version, before.current_snapshot_id
+    )
+    on_disk = {
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(t.data_dir)
+        for n in names
+        if n.endswith(".parquet")
+    }
+    assert on_disk == committed
+
+    assert t.commit_row_delta(good_add, good_keys, delete_positions_df=positions) == (1, 2)
+    snaps = t.metadata().snapshots
+    assert len(snaps) == len(before.snapshots) + 1
+    assert snaps[-1].summary["added_delete_files"] == 2
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [2, 3]
+
+
+def test_stage_and_commit_aborts_all_under_contention(spark, warehouse):
+    """More overlapped stages than cores, with frequent thread switches:
+    when one stage fails, every file the other stages recorded is
+    removed (a lost update to the shared staged list would leak one)."""
+    import os
+    import sys
+
+    from debezium_server_iceberg_spark.lakehouse import DataFile
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+
+    t = LakeTable(os.path.join(warehouse, "contended"))
+
+    def stage(i):
+        def fn():
+            if i == 7:
+                raise RuntimeError("stage 7 failed")
+            files = []
+            for j in range(50):
+                d = os.path.join(t.data_dir, f"s{i}-{j}")
+                os.makedirs(d)
+                files.append(DataFile(os.path.join(d, "f.parquet"), 1))
+            return files
+
+        fn.__name__ = f"stage_{i}"
+        return fn
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(RuntimeError, match="stage 7 failed"):
+            t._stage_and_commit([stage(i) for i in range(16)], lambda *staged: None)
+    finally:
+        sys.setswitchinterval(interval)
+    assert os.listdir(t.data_dir) == []
+
+
 def test_register_views_sql_read_surface(spark, warehouse):
     """spark.sql over registered views — the reference's own verification
     read path (BaseSparkTest.java:170-178)."""

@@ -1,0 +1,52 @@
+"""Structural guards: the package keeps ONE thread pool (``run_overlapped``)
+and ONE optimistic-concurrency retry loop (``LakeTable._commit``), so every
+overlapped Spark job and every commit goes through the same drained,
+property-inheriting, abort-on-failure path."""
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "debezium_server_iceberg_spark"
+
+
+def _names(node) -> set:
+    if isinstance(node, ast.Name):
+        return {node.id}
+    if isinstance(node, ast.Attribute):
+        return {node.attr}
+    if isinstance(node, ast.Tuple):
+        return set().union(*map(_names, node.elts))
+    return set()
+
+
+def _sites(match) -> list:
+    """(module, enclosing def/class path) of every node ``match`` accepts."""
+    out = []
+
+    def visit(node, scope, module):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = scope + (child.name,)
+            if match(child):
+                out.append((module, ".".join(inner)))
+            visit(child, inner, module)
+
+    for path in sorted(PKG.rglob("*.py")):
+        visit(ast.parse(path.read_text(), str(path)), (), path.relative_to(PKG).as_posix())
+    return out
+
+
+def test_one_thread_pool():
+    pools = _sites(
+        lambda n: isinstance(n, ast.Call) and "ThreadPoolExecutor" in _names(n.func)
+    )
+    assert pools == [("session.py", "run_overlapped")]
+
+
+def test_one_commit_retry_loop():
+    loops = _sites(
+        lambda n: isinstance(n, ast.ExceptHandler)
+        and "CommitConflict" in _names(n.type)
+    )
+    assert loops == [("lakehouse/table.py", "LakeTable._commit")]
