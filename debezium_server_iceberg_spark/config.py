@@ -52,7 +52,7 @@ class IcebergSinkConfig:
     # the reference's useDv = formatVersion > 2
     # (IcebergTableWriterFactory.java:97-108): v3 tables take the
     # merge-on-read path (with POSITION deletes — the deletion-vector
-    # semantics — per operators/merge.py:_merge_mor), v2 copy-on-write.
+    # semantics — operators/merge.py's position sink), v2 copy-on-write.
     # Explicit "merge-on-read" / "copy-on-write" overrides.
     upsert_mode: str = ""
 

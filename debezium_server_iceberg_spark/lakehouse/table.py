@@ -37,6 +37,7 @@ file list — same as Iceberg's planning model.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -432,10 +433,13 @@ class LakeTable:
     def current_files(self) -> list[DataFile]:
         return self._manifest_files(self.metadata())
 
-    def files_at(self, ref: str = "main") -> list[DataFile]:
+    def files_at(
+        self, ref: str = "main", meta: TableMetadata | None = None
+    ) -> list[DataFile]:
         """Data files at a ref head; an unknown ref falls back to main's
-        head (the base a branch auto-created on write would start from)."""
-        meta = self.metadata()
+        head (the base a branch auto-created on write would start from).
+        Pass an already-loaded ``meta`` to skip the metadata re-read."""
+        meta = meta if meta is not None else self.metadata()
         if ref == "main":
             sid = meta.current_snapshot_id
         else:
@@ -466,9 +470,21 @@ class LakeTable:
 
         ``branch``: commit on a named branch ref instead of main (Iceberg's
         branch writes / WAP pattern) — the new snapshot's base is the branch
-        head and only that ref advances; main is untouched."""
+        head and only that ref advances; main is untouched.
+
+        Each attempt writes its own manifest before the CAS; the manifest
+        of an attempt that loses, or of a commit that fails, is removed."""
+        written: list[str] = []
+
+        def discard_written() -> None:
+            while written:
+                try:
+                    os.remove(os.path.join(self.meta_dir, written.pop()))
+                except OSError:
+                    pass
 
         def mutate(meta: TableMetadata) -> None:
+            discard_written()  # a retry means the previous attempt lost
             if branch == "main":
                 base_sid = meta.current_snapshot_id
             else:
@@ -512,6 +528,7 @@ class LakeTable:
             # prune dead delete files: nothing older than them is live
             deletes = [d for d in deletes if any(f.seq < d.seq for f in files)]
             manifest_name = f"manifest-{sid:08d}-{uuidlib.uuid4().hex[:8]}.json"
+            written.append(manifest_name)
             with open(os.path.join(self.meta_dir, manifest_name), "w") as fh:
                 json.dump(
                     {
@@ -545,7 +562,11 @@ class LakeTable:
             if new_schema is not None:
                 meta.schema_json = new_schema.jsonValue()
 
-        self._commit(mutate)
+        try:
+            self._commit(mutate)
+        except Exception:
+            discard_written()
+            raise
 
     # ------------------------------------------------------------ write ops
 
@@ -952,12 +973,13 @@ class LakeTable:
         drop_deletes: bool = False,
         preserve_layout: bool = False,
         preserve_lineage: bool = False,
-    ) -> None:
+    ) -> int:
         """RowDelta-style commit: atomically swap rewritten files
         (IcebergTableOperator.java:218-224). Used by the MERGE operator.
         ``preserve_lineage``: physically materialize ``_row_id`` /
         ``_last_updated_sequence_number`` columns present on ``add_df``
-        (rewrite paths only — see ``_stage_write``)."""
+        (rewrite paths only — see ``_stage_write``).  Returns the number
+        of rows added, read from the staged files' own stats."""
         meta = self.metadata()
 
         def stage_data() -> list[DataFile]:
@@ -966,13 +988,14 @@ class LakeTable:
                 preserve_lineage,
             )
 
-        self._stage_and_commit(
+        (add,) = self._stage_and_commit(
             [stage_data if add_df is not None else None],
             lambda add: self._commit_snapshot(
                 "delta", add, set(remove_paths), summary,
                 drop_deletes=drop_deletes,
             ),
         )
+        return sum(f.rows for f in add)
 
     def commit_row_delta(
         self,
@@ -1403,10 +1426,11 @@ class LakeTable:
         return len(dead_paths)
 
     def remove_orphan_files(self, older_than_seconds: float = 86400.0) -> list[str]:
-        """Delete data-dir files no retained snapshot references (Iceberg's
-        remove_orphan_files maintenance procedure; completes the W12 abort
-        story — a writer that died between staging and ``_abort_staged``
-        leaves files this pass reclaims).
+        """Delete data-dir files and ``metadata/manifest-*.json`` files no
+        retained snapshot references (Iceberg's remove_orphan_files
+        maintenance procedure; completes the W12 abort story — a writer
+        that died between staging and ``_abort_staged``, or between writing
+        a manifest and its commit, leaves files this pass reclaims).
 
         Only files whose mtime is older than ``older_than_seconds`` are
         deleted: anything younger may belong to a concurrent in-flight
@@ -1419,18 +1443,19 @@ class LakeTable:
             e = self._manifest_entry(meta, s.snapshot_id)
             referenced |= {os.path.realpath(f["path"]) for f in e["files"]}
             referenced |= {os.path.realpath(d["path"]) for d in e["delete_files"]}
+            referenced.add(os.path.realpath(os.path.join(self.meta_dir, s.manifest)))
         cutoff = time.time() - older_than_seconds
+        paths = [os.path.join(r, n) for r, _d, ns in os.walk(self.data_dir) for n in ns]
+        paths += sorted(glob.glob(os.path.join(self.meta_dir, "manifest-*.json")))
         removed: list[str] = []
-        for root, _dirs, names in os.walk(self.data_dir):
-            for n in names:
-                p = os.path.join(root, n)
-                try:
-                    if os.path.realpath(p) in referenced or os.path.getmtime(p) > cutoff:
-                        continue
-                    os.remove(p)
-                    removed.append(p)
-                except OSError:
+        for p in paths:
+            try:
+                if os.path.realpath(p) in referenced or os.path.getmtime(p) > cutoff:
                     continue
+                os.remove(p)
+                removed.append(p)
+            except OSError:
+                continue
         # sweep now-empty staging directories
         for root, dirs, names in os.walk(self.data_dir, topdown=False):
             if root != self.data_dir and not dirs and not names:
@@ -1712,21 +1737,15 @@ class LakeTable:
         self,
         spark: SparkSession,
         files: list[DataFile],
-        file_col: str | None = None,
         apply_deletes: bool = True,
         lineage: bool = False,
     ) -> DataFrame:
         """Read a subset of data files (with current-snapshot equality
-        deletes applied unless opted out). ``file_col`` attaches each row's
-        originating manifest path as a column — resolved via a tiny
-        broadcast filename->path map so it stays correct even after the
-        delete anti-join (plain input_file_name() would not survive it).
-        ``lineage`` as in :meth:`to_df`."""
+        deletes applied unless opted out).  ``lineage`` as in
+        :meth:`to_df`."""
         meta = self.metadata()
         deletes = self._manifest_deletes(meta) if apply_deletes else []
-        return self._read(
-            spark, meta, files, deletes, file_col=file_col, lineage=lineage
-        )
+        return self._read(spark, meta, files, deletes, lineage=lineage)
 
     def _read(
         self,
@@ -1734,7 +1753,6 @@ class LakeTable:
         meta: TableMetadata,
         files: list[DataFile],
         deletes: list[DeleteFile],
-        file_col: str | None = None,
         lineage: bool = False,
     ) -> DataFrame:
         """Scan plan: ONE multi-file parquet read; per-file sequence numbers
@@ -1758,8 +1776,7 @@ class LakeTable:
                 ]
             )
         if not files:
-            df = spark.createDataFrame([], read_schema)
-            return df.withColumn(file_col, F.lit(None).cast("string")) if file_col else df
+            return spark.createDataFrame([], read_schema)
 
         key_cols = [c for c in meta.identifier_fields if c in {f.name for f in schema.fields}]
         # a delete file is relevant only if some scanned file is older
@@ -1787,7 +1804,7 @@ class LakeTable:
         ]
 
         df = spark.read.schema(read_schema).parquet(*[f.path for f in files])
-        if not relevant and not pos_relevant and not file_col and not lineage:
+        if not relevant and not pos_relevant and not lineage:
             return df
 
         fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
@@ -1814,10 +1831,10 @@ class LakeTable:
             df = df.withColumn("_fname", fname)
         fmap = spark.createDataFrame(
             [
-                (os.path.basename(f.path), f.seq, f.path, f.first_row_id)
+                (os.path.basename(f.path), f.seq, f.first_row_id)
                 for f in files
             ],
-            "_fname string, _seq long, _fpath string, _frid long",
+            "_fname string, _seq long, _frid long",
         )
         df = df.join(F.broadcast(fmap), "_fname")
 
@@ -1855,9 +1872,6 @@ class LakeTable:
                 LAST_SEQ_COL, F.coalesce(F.col(LAST_SEQ_COL), F.col("_seq"))
             )
             keep = keep + [ROW_ID_COL, LAST_SEQ_COL]
-        if file_col:
-            df = df.withColumn(file_col, F.col("_fpath"))
-            keep = keep + [file_col]
         return df.select(*keep)
 
     def row_count(self) -> int:

@@ -1,5 +1,4 @@
-"""MERGE INTO (upsert core, operators W4-W6) — merge-on-read by default,
-copy-on-write as an option.
+"""MERGE INTO (upsert core, operators W4-W6): one planner, three sinks.
 
 Reference semantics (BaseDeltaTaskWriter.java:52-72 +
 IcebergChangeConsumerUpsertTest scenarios):
@@ -14,46 +13,58 @@ IcebergChangeConsumerUpsertTest scenarios):
 - unmatched (otherwise)                   -> insert (even for op='d' when
   keeping deletes — IcebergChangeConsumerUpsertTest.java:69-73)
 
-Two execution strategies, selected by the ``write.upsert.mode`` table
-property or the ``mode=`` argument:
+**The planner** (``_plan``) answers the one question every sink that reads
+existing files asks: which rows of which files does this batch's key set
+hit?  Working from the merge's single metadata read, it runs ONE aggregate
+over the cached source (row count, per-key min/max and, on partitioned
+tables, the set of touched partition tuples), prunes the ref head's files
+by key bounds and partition tuple with no Spark job (the same planning
+model as Iceberg's manifest pruning), and returns the candidates plus one
+column-pruned ``_metadata`` semi-join yielding the ``(file_name, pos)`` of
+matched rows.  The probe reads raw parquet: outstanding deletes are not
+applied, so an already-deleted row version still counts as a hit.
 
-**merge-on-read** (default; W7 parity with the reference's equality-delta
-writer, IcebergTableWriterFactory.java:97-108 + BaseDeltaTaskWriter.java:60-71):
-write the surviving source rows as new data files plus ONE equality-delete
-file of the batch's keys, in a single atomic ``rowdelta`` commit. Zero
-existing files are read or rewritten — upsert cost is O(batch), independent
-of table size and key scatter. Deletes are folded in at scan time
-(broadcast anti-join) and physically purged by
-``LakeTable.materialize_deletes`` / compaction.
+**The sinks**, selected by the ``write.upsert.mode`` table property (or
+``mode=``) and, for merge-on-read, the table's ``format-version`` (or
+``delete_style=``):
 
-**copy-on-write** (read-optimized tables):
-1. *File pruning, no Spark job*: candidate files = manifest files whose key
-   bounds overlap the source key range (driver-side min/max check over file
-   stats, same planning model as Iceberg).
-2. *Exact match*: read candidate files' key columns only (column-pruned scan)
-   and semi-join against the (broadcast when byte-estimate-small) source
-   keys -> the set of files that truly contain matched keys.
-3. *Rewrite*: anti-join those files' rows against source keys, union with the
-   surviving source rows, write as new files.
-4. *Atomic delta commit*: remove the rewritten files, add the new ones.
+- *position* (v3 merge-on-read, deletion-vector semantics): the hit frame
+  becomes a position-delete file, committed with the surviving source rows
+  in one ``rowdelta`` snapshot.  No existing file is rewritten; reads do
+  positional skipping.
+- *rewrite* (copy-on-write): the files holding a hit are rewritten — their
+  rows anti-joined against the source keys, unioned with the surviving
+  source rows — and swapped in one delta commit.
+- *equality* (v2 merge-on-read; the reference's equality-delta writer,
+  IcebergTableWriterFactory.java:97-108 + BaseDeltaTaskWriter.java:60-71):
+  the batch's keys become an equality-delete file.  It never plans: zero
+  existing files are read, since deleting an absent key is a no-op.  Every
+  scan pays a key anti-join until ``LakeTable.materialize_deletes`` /
+  compaction.
 
-Broadcast decisions are byte-estimated (rows x schema width), never
+Broadcast decisions are byte-estimated (rows x key width), never
 row-counted: wide composite keys on millions of rows fall back to a shuffle
 join instead of blowing the broadcast limit.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..lakehouse.table import (
     _BROADCAST_BYTES,
     _est_row_width,
+    _tz_sensitive_fields,
     bound_key,
+    bucket_hash_trusted,
     DataFile,
     LakeTable,
+    TableMetadata,
+    table_write_tz,
 )
 from .project import conform_to_schema
 
@@ -87,7 +98,6 @@ def merge_into(
     source: DataFrame,
     keep_deletes: bool = True,
     op_col: str = "__op",
-    broadcast_source: bool | None = None,
     summary: dict | None = None,
     mode: str | None = None,
     delete_style: str | None = None,
@@ -97,9 +107,9 @@ def merge_into(
 
     ``delete_style`` ('equality' | 'position') overrides the
     format-version-derived merge-on-read delete format (v2 -> equality,
-    v3 -> position; see ``_merge_mor``).  ``branch`` stages the commit on a
-    named branch (write-audit-publish) — merge-on-read only: the
-    copy-on-write planner rewrites against the main lineage."""
+    v3 -> position).  ``branch`` stages the commit on a named branch
+    (write-audit-publish) — merge-on-read only: the copy-on-write rewrite
+    swaps files on the main lineage."""
     spark = source.sparkSession
     meta = table.metadata()
     key_cols = meta.identifier_fields
@@ -110,230 +120,139 @@ def merge_into(
         raise ValueError(f"unknown upsert mode {mode!r}")
     if branch != "main" and mode != "merge-on-read":
         raise ValueError("branch merges require merge-on-read upsert mode")
+    lineage = int(meta.properties.get("format-version", "2")) >= 3
+    sink = (
+        "rewrite"
+        if mode == "copy-on-write"
+        else delete_style or ("position" if lineage else "equality")
+    )
 
     schema = meta.schema
     source = conform_to_schema(source, schema, keep_extra=[op_col]).cache()
     try:
-        if mode == "merge-on-read":
-            return _merge_mor(
-                table, source, keep_deletes, op_col, summary, key_cols, schema,
-                delete_style, branch,
-            )
-
-        # --- copy-on-write: source key range (one tiny agg) + row count
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        for k in key_cols:
-            aggs += [F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}")]
-        stat = source.agg(*aggs).collect()[0]
-        n_src = stat["_n"]
-        lo = {k: stat[f"_lo_{k}"] for k in key_cols}
-        hi = {k: stat[f"_hi_{k}"] for k in key_cols}
-
-        all_files = table.current_files()
-        candidates = [f for f in all_files if _bounds_overlap(f, key_cols, lo, hi)]
-
-        # partition pruning (partitioned tables): a file whose partition
-        # tuple no source row maps to can't contain matched keys. The
-        # distinct source-partition set is tiny (partitions touched by one
-        # CDC batch), so the driver-side intersection is cheap.
-        if meta.partition_spec:
-            from ..lakehouse.table import (
-                _tz_sensitive_fields,
-                bucket_hash_trusted,
-                table_write_tz,
-            )
-
-            src_types = {f.name: f.dataType.simpleString() for f in schema.fields}
-            # layout-versioning guards: file partition values computed under
-            # a DIFFERENT bucket hash (unstamped pre-murmur3 table) or a
-            # different session timezone (temporal wall clocks) must not be
-            # compared against values computed NOW — those fields drop out
-            # of the pruning tuple (conservative; remaining fields still
-            # prune)
-            tz_ok = (
-                spark.conf.get("spark.sql.session.timeZone")
-                == table_write_tz(meta)
-            )
-            tz_unsafe = set() if tz_ok else {
-                pf.name for pf in _tz_sensitive_fields(meta)
-            }
-            bucket_ok = bucket_hash_trusted(meta)
-            prunable = [
-                pf
-                for pf in meta.partition_spec
-                if pf.source in {f.name for f in schema.fields}
-                and pf.name not in tz_unsafe
-                and (bucket_ok or pf.transform != "bucket")
-            ]
-            pcols = [
-                pf.column(src_types.get(pf.source)).alias(pf.name)
-                for pf in prunable
-            ]
-            if pcols:
-                touched = {
-                    tuple(str(r[pf.name]) for pf in prunable)
-                    for r in source.select(*pcols).distinct().collect()
-                }
-                candidates = [
-                    f
-                    for f in candidates
-                    # files written under an OLDER partition spec (spec
-                    # evolution) record different field names — they are
-                    # unprunable here, never prunable-to-zero
-                    if not f.partition
-                    or any(pf.name not in f.partition for pf in prunable)
-                    or tuple(
-                        str(f.partition.get(pf.name)) for pf in prunable
-                    )
-                    in touched
-                ]
-
-        # --- exact affected-file set via column-pruned key scan
-        src_keys = source.select(*key_cols).dropDuplicates(key_cols)
-        if broadcast_source is None:
-            # byte-estimated, not row-counted: wide composite keys on many
-            # rows must take the shuffle path, not blow the broadcast limit
-            key_schema = _key_schema(schema, key_cols)
-            broadcast_source = n_src * _est_row_width(key_schema) <= _BROADCAST_BYTES
-        if candidates:
-            keys_scan = table.scan_files(
-                spark, candidates, file_col="_file"
-            ).select(*key_cols, "_file")
-            probe = F.broadcast(src_keys) if broadcast_source else src_keys
-            affected_paths = {
-                r["_file"]
-                for r in keys_scan.join(
-                    probe, on=key_cols, how="left_semi"
-                )
-                .select("_file")
-                .distinct()
-                .collect()
-            }
-            affected = [f for f in candidates if f.path in affected_paths]
-        else:
-            affected = []
-
-        # --- build replacement rows
-        surviving_source = (
+        surviving = (
             source if keep_deletes else source.filter(F.col(op_col) != F.lit("d"))
+        ).select(*[f.name for f in schema.fields])
+        # a branch merge plans against the BRANCH head's files (an unknown
+        # branch auto-creates from main's head on this write)
+        files = table.files_at(branch, meta)
+        src_keys = source.select(*key_cols).dropDuplicates(key_cols)
+        if sink == "equality":
+            added, deleted = table.commit_row_delta(
+                surviving,
+                src_keys if files else None,
+                summary=dict(summary or {}, operation_detail="merge-mor"),
+                branch=branch,
+            )
+            return MergeStats(0, 0, max(added, deleted), "merge-on-read", deleted)
+
+        plan = _plan(meta, source, files, src_keys)
+        if sink == "position":
+            added, deleted = table.commit_row_delta(
+                surviving,
+                None,
+                summary=dict(summary or {}, operation_detail="merge-mor-pos"),
+                delete_positions_df=plan.hits,
+                branch=branch,
+            )
+            return MergeStats(
+                len(plan.candidates), 0, plan.rows(added), "merge-on-read", deleted
+            )
+
+        hit_names = (
+            set()
+            if plan.hits is None
+            else {r[0] for r in plan.hits.select("file_name").distinct().collect()}
         )
-        table_cols = [f.name for f in schema.fields]
-        upserts = surviving_source.select(*table_cols)
-
-        # v3: carry row lineage through the rewrite — untouched rows in
-        # affected files must keep their _row_id (upserted rows union in
-        # with nulls and inherit fresh ids from the new file's range)
-        lineage = int(meta.properties.get("format-version", "2")) >= 3
+        affected = [
+            f for f in plan.candidates if os.path.basename(f.path) in hit_names
+        ]
+        new_data = surviving
         if affected:
-            target_rows = table.scan_files(spark, affected, lineage=lineage)
-            anti_probe = F.broadcast(src_keys) if broadcast_source else src_keys
-            kept = target_rows.join(anti_probe, on=key_cols, how="left_anti")
-            new_data = kept.unionByName(upserts, allowMissingColumns=lineage)
-        else:
-            new_data = upserts
-
-        table.commit_delta(
+            # v3: carry row lineage through the rewrite — untouched rows in
+            # affected files keep their _row_id (upserted rows union in
+            # with nulls and inherit fresh ids from the new file's range)
+            kept = table.scan_files(spark, affected, lineage=lineage).join(
+                plan.keys, on=key_cols, how="left_anti"
+            )
+            new_data = kept.unionByName(surviving, allowMissingColumns=lineage)
+        added = table.commit_delta(
             new_data,
             [f.path for f in affected],
-            summary=dict(
-                summary or {}, operation_detail="merge", source_rows=n_src
-            ),
+            summary=dict(summary or {}, operation_detail="merge"),
             preserve_lineage=lineage,
         )
-        return MergeStats(len(candidates), len(affected), n_src, "copy-on-write")
+        return MergeStats(
+            len(plan.candidates), len(affected), plan.rows(added), "copy-on-write"
+        )
     finally:
         source.unpersist()
 
 
-def _key_schema(schema, key_cols: list[str]):
-    from pyspark.sql import types as T
+class _Plan(NamedTuple):
+    #: source row count; None when the base had no files (nothing planned)
+    n_src: int | None
+    candidates: list[DataFile]
+    #: ``(file_name, pos)`` of matched rows in ``candidates``; None if none
+    hits: DataFrame | None
+    #: the source keys, broadcast-hinted when their byte estimate is small
+    keys: DataFrame
 
-    return T.StructType([f for f in schema.fields if f.name in key_cols])
+    def rows(self, written: int) -> int:
+        """Source rows, or the rows written when nothing was planned."""
+        return written if self.n_src is None else self.n_src
 
 
-def _merge_mor(
-    table: LakeTable,
-    source: DataFrame,
-    keep_deletes: bool,
-    op_col: str,
-    summary: dict | None,
-    key_cols: list[str],
-    schema,
-    delete_style: str | None = None,
-    branch: str = "main",
-) -> MergeStats:
-    """Merge-on-read upsert: delete the batch's keys + append the surviving
-    rows, one atomic commit, zero files rewritten.
-
-    Delete style follows the table's ``format-version`` (the reference's
-    v2/v3 switch, IcebergTableWriterFactory.java:97-108 +
-    IcebergConfig.java:106-108):
-
-    - **equality** (v2): write the key tuples as an equality-delete file.
-      Zero reads of existing data (BaseDeltaTaskWriter.java:60-71:
-      deleteKey then write — unmatched deleteKeys are no-ops, so no match
-      probe runs at all); every scan pays a key anti-join until
-      materialization.
-    - **position** (v3 deletion-vector semantics): locate the matched rows
-      with one column-pruned, bounds-pruned scan of candidate files
-      (key columns + parquet ``_metadata`` only) and write their
-      ``(file_name, pos)`` rows as a position-delete file.  Write cost
-      gains a pruned key-scan; every subsequent read does positional
-      skipping (integer compares) instead of key-tuple anti-joins — the
-      same read/write tradeoff deletion vectors make."""
+def _plan(
+    meta: TableMetadata, source: DataFrame, files: list[DataFile], src_keys: DataFrame
+) -> _Plan:
+    """The one upsert planner: which rows of which of ``files`` does the
+    cached ``source`` batch's key set hit?  One aggregate (row count,
+    per-key min/max, touched partition tuples), driver-side bounds and
+    partition pruning, then one column-pruned ``_metadata`` semi-join
+    (left lazy for the sink to run).  An empty ``files`` plans nothing and
+    runs no Spark job."""
+    if not files:
+        return _Plan(None, [], None, src_keys)
     spark = source.sparkSession
-    meta = table.metadata()
-    table_cols = [f.name for f in schema.fields]
-    style = delete_style or (
-        "position"
-        if int(meta.properties.get("format-version", "2")) >= 3
-        else "equality"
-    )
-    surviving = (
-        source if keep_deletes else source.filter(F.col(op_col) != F.lit("d"))
-    )
-    # skip the delete file entirely on a first write into an empty table
-    # (nothing older to delete from) — the commit would prune it anyway,
-    # but this also skips staging the extra parquet write
-    # branch merge plans against the BRANCH head's files (an unknown branch
-    # auto-creates from main's head on this write)
-    current = table.files_at(branch)
-    if not current:
-        added, deleted = table.commit_row_delta(
-            surviving.select(*table_cols),
-            None,
-            summary=dict(summary or {}, operation_detail="merge-mor"),
-            branch=branch,
-        )
-        return MergeStats(0, 0, max(added, deleted), "merge-on-read", deleted)
-
-    src_keys = source.select(*key_cols).dropDuplicates(key_cols)
-    if style == "equality":
-        added, deleted = table.commit_row_delta(
-            surviving.select(*table_cols),
-            src_keys,
-            summary=dict(summary or {}, operation_detail="merge-mor"),
-            branch=branch,
-        )
-        return MergeStats(0, 0, max(added, deleted), "merge-on-read", deleted)
-
-    # --- position style: find (file, pos) of matched rows
+    key_cols = meta.identifier_fields
+    prunable, pcols = _prunable_partitions(meta, spark)
     aggs = [F.count(F.lit(1)).alias("_n")]
     for k in key_cols:
         aggs += [F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}")]
+    if pcols:
+        aggs.append(F.collect_set(F.struct(*pcols)).alias("_parts"))
     stat = source.agg(*aggs).collect()[0]
+    n_src = stat["_n"]
     lo = {k: stat[f"_lo_{k}"] for k in key_cols}
     hi = {k: stat[f"_hi_{k}"] for k in key_cols}
-    candidates = [f for f in current if _bounds_overlap(f, key_cols, lo, hi)]
-    positions = None
+    candidates = [f for f in files if _bounds_overlap(f, key_cols, lo, hi)]
+    if pcols:
+        # a file whose partition tuple no source row maps to can't contain
+        # matched keys; the touched set (partitions one CDC batch hits) is
+        # tiny, so the driver-side intersection is cheap
+        touched = {
+            tuple(str(p[pf.name]) for pf in prunable) for p in stat["_parts"]
+        }
+        candidates = [
+            f
+            for f in candidates
+            # files written under an OLDER partition spec (spec evolution)
+            # record different field names — they are unprunable here,
+            # never prunable-to-zero
+            if not f.partition
+            or any(pf.name not in f.partition for pf in prunable)
+            or tuple(str(f.partition.get(pf.name)) for pf in prunable) in touched
+        ]
+
+    key_schema = T.StructType([f for f in meta.schema.fields if f.name in key_cols])
+    # byte-estimated, not row-counted: wide composite keys on many rows
+    # must take the shuffle path, not blow the broadcast limit
+    if n_src * _est_row_width(key_schema) <= _BROADCAST_BYTES:
+        src_keys = F.broadcast(src_keys)
+    hits = None
     if candidates:
-        key_schema = _key_schema(schema, key_cols)
-        probe = (
-            F.broadcast(src_keys)
-            if stat["_n"] * _est_row_width(key_schema) <= _BROADCAST_BYTES
-            else src_keys
-        )
-        positions = (
+        hits = (
             spark.read.schema(key_schema)
             .parquet(*[f.path for f in candidates])
             .select(
@@ -343,19 +262,37 @@ def _merge_mor(
                 ).alias("file_name"),
                 F.col("_metadata.row_index").alias("pos"),
             )
-            .join(probe, on=key_cols, how="left_semi")
+            .join(src_keys, on=key_cols, how="left_semi")
             .select("file_name", "pos")
         )
-    added, deleted = table.commit_row_delta(
-        surviving.select(*table_cols),
-        None,
-        summary=dict(summary or {}, operation_detail="merge-mor-pos"),
-        delete_positions_df=positions,
-        branch=branch,
-    )
-    return MergeStats(
-        len(candidates), 0, max(added, deleted), "merge-on-read", deleted
-    )
+    return _Plan(n_src, candidates, hits, src_keys)
+
+
+def _prunable_partitions(meta: TableMetadata, spark: SparkSession) -> tuple[list, list]:
+    """The partition fields a batch's partition tuples can prune files by,
+    and the source-side expressions computing them.
+
+    Layout-versioning guards: file partition values computed under a
+    DIFFERENT bucket hash (unstamped pre-murmur3 table) or a different
+    session timezone (temporal wall clocks) must not be compared against
+    values computed NOW — those fields drop out of the pruning tuple
+    (conservative; remaining fields still prune)."""
+    if not meta.partition_spec:
+        return [], []
+    schema = meta.schema
+    src_types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    tz_ok = spark.conf.get("spark.sql.session.timeZone") == table_write_tz(meta)
+    tz_unsafe = set() if tz_ok else {pf.name for pf in _tz_sensitive_fields(meta)}
+    bucket_ok = bucket_hash_trusted(meta)
+    prunable = [
+        pf
+        for pf in meta.partition_spec
+        if pf.source in src_types
+        and pf.name not in tz_unsafe
+        and (bucket_ok or pf.transform != "bucket")
+    ]
+    pcols = [pf.column(src_types.get(pf.source)).alias(pf.name) for pf in prunable]
+    return prunable, pcols
 
 
 def merge_dataframes(

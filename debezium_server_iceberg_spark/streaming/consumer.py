@@ -265,7 +265,8 @@ class ChangeConsumer:
                 op_col=ic.upsert_op_column,
             )
             # useDv semantics (IcebergTableWriterFactory.java:97-108):
-            # format v3+ upserts via equality deletes, v2 via copy-on-write
+            # format v3+ upserts merge-on-read with position deletes, v2
+            # defaults to copy-on-write
             mode = ic.upsert_mode or (
                 "merge-on-read" if int(ic.format_version) > 2 else "copy-on-write"
             )

@@ -341,9 +341,15 @@ def test_consumer_materializes_deletes_at_threshold(spark, warehouse):
     assert got[1] == "u4" and len(got) == 4
 
 
-def test_merge_partition_pruning(spark, warehouse):
+@pytest.mark.parametrize(
+    "fmt,mode",
+    [("2", "copy-on-write"), ("3", "merge-on-read")],
+    ids=["v2-copy-on-write", "v3-merge-on-read"],
+)
+def test_merge_partition_pruning(spark, warehouse, fmt, mode):
     """Upsert into a partitioned table: only files of partitions the batch
-    touches participate in the rewrite."""
+    touches participate in the rewrite (copy-on-write) or the position-
+    delete probe (v3 merge-on-read) — both sinks share one planner."""
     from debezium_server_iceberg_spark.operators.dedup import dedup_batch
     from debezium_server_iceberg_spark.operators.merge import merge_into
     from debezium_server_iceberg_spark.lakehouse import LakeCatalog, parse_partition_spec
@@ -357,10 +363,11 @@ def test_merge_partition_pruning(spark, warehouse):
         "ns", "pm", snap.schema,
         identifier_fields=["id"],
         partition_spec=parse_partition_spec("grp", {"id", "grp", "v"}),
+        properties={"format-version": fmt},
     )
     merge_into(
         t, dedup_batch(snap, ["id"], dedup_column="__source_ts_ms"),
-        mode="copy-on-write",
+        mode=mode,
     )
     files_before = t.current_files()
     parts_before = {f.partition["_p_grp"] for f in files_before}
@@ -372,7 +379,7 @@ def test_merge_partition_pruning(spark, warehouse):
     )
     stats = merge_into(
         t, dedup_batch(upd, ["id"], dedup_column="__source_ts_ms"),
-        mode="copy-on-write",
+        mode=mode,
     )
     g1_files = [f for f in files_before if f.partition["_p_grp"] == "g1"]
     assert stats.candidate_files <= len(g1_files)
@@ -380,6 +387,20 @@ def test_merge_partition_pruning(spark, warehouse):
     got = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
     assert all(got[i] == 1000 + i for i in range(30) if i % 3 == 1)
     assert all(got[i] == i for i in range(30) if i % 3 != 1)
+
+
+def test_upsert_source_rows_counted_once(spark, warehouse):
+    """A v3 upsert reports the batch's own row count, not the size of the
+    position-delete file (which still re-deletes older row versions)."""
+    c = build_consumer(warehouse)
+    written = []
+    for ts in range(4):  # create the 10 keys, then update them three times
+        op = "u" if ts else "c"
+        batch = to_df(spark, [customer_event(i, f"v{ts}", op, ts) for i in range(10)])
+        written.append(c.handle_batch(batch, epoch_id=ts).tables_written[DEST])
+    assert written == [10, 10, 10, 10]
+    got = {r["id"]: r["first_name"] for r in read_table(c, spark).collect()}
+    assert got == {i: "v3" for i in range(10)}
 
 
 def test_expire_snapshots_cadence(spark, warehouse):
@@ -657,6 +678,50 @@ def test_handle_batch_job_counts_pinned(spark, warehouse):
         ups.handle_batch(batch, epoch_id=epoch)
         counts["upsert"] = _jobs(spark) - j
     assert counts == {"append": APPEND_3_JOBS, "upsert": UPSERT_1_JOBS}
+
+
+# warm merge_into Spark jobs per (partitioned, mode) on a 30-row table in
+# three identity partitions, updating one partition's rows
+MERGE_JOBS = {
+    (True, "copy-on-write"): 11,
+    (True, "merge-on-read"): 8,
+    (False, "copy-on-write"): 11,
+    (False, "merge-on-read"): 8,
+}
+
+
+def test_merge_job_counts_pinned(spark, warehouse):
+    """Spark jobs per warm merge, both upsert sinks that plan (copy-on-write
+    rewrite, v3 position deletes), with and without a partition spec."""
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog, parse_partition_spec
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    cat = LakeCatalog(warehouse)
+    schema = "id long, grp string, v long, __op string"
+    counts = {}
+    for partitioned, mode in MERGE_JOBS:
+        t = cat.create_table(
+            "ns", f"jobs_{int(partitioned)}_{mode[:1]}",
+            spark.createDataFrame([], schema).schema,
+            identifier_fields=["id"],
+            partition_spec=(
+                parse_partition_spec("grp", {"id", "grp", "v"}) if partitioned else None
+            ),
+            properties={"format-version": "3" if mode == "merge-on-read" else "2"},
+        )
+        for epoch in range(3):  # create, warm, measure
+            rows = [
+                (i, f"g{i % 3}", 100 * epoch + i, "u")
+                for i in range(30)
+                if epoch == 0 or i % 3 == 1
+            ]
+            batch = spark.createDataFrame(rows, schema)
+            j = _jobs(spark)
+            merge_into(t, batch, mode=mode)
+            counts[partitioned, mode] = _jobs(spark) - j
+        got = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
+        assert got == {i: 200 + i if i % 3 == 1 else i for i in range(30)}
+    assert counts == MERGE_JOBS
 
 
 def test_concurrent_uploads_drain_and_keep_local_properties(spark, warehouse, monkeypatch):

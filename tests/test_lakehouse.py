@@ -445,6 +445,59 @@ def test_remove_orphan_files(spark, warehouse):
     assert t.remove_orphan_files(older_than_seconds=3600) == []
 
 
+def test_lost_commit_attempts_leave_no_manifest(warehouse):
+    """A commit attempt that loses its CAS, or whose publication hook
+    fails, removes the manifest it wrote; remove_orphan_files sweeps an
+    old unreferenced manifest and keeps a young one."""
+    import glob
+    import os
+    import time
+
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+
+    cat = LakeCatalog(warehouse)
+    a = cat.create_table("ns", "lost", SCHEMA, identifier_fields=["id"])
+    b = LakeTable(a.location)
+    write = a._write_metadata
+    raced = []
+
+    def lose_first_attempt(meta, expected_version):
+        if not raced:  # another handle commits in between: this CAS loses
+            raced.append(b.truncate())
+        return write(meta, expected_version)
+
+    a._write_metadata = lose_first_attempt
+    a.truncate()
+    a._write_metadata = write
+
+    def manifests() -> set:
+        return {os.path.basename(p) for p in glob.glob(os.path.join(a.meta_dir, "manifest-*.json"))}
+
+    def referenced() -> set:
+        return {s.manifest for s in a.metadata().snapshots}
+
+    assert len(raced) == 1 and len(referenced()) == 2
+    assert manifests() == referenced()
+
+    def hook(*_):
+        raise RuntimeError("catalog refused")
+
+    a.commit_hook = hook
+    with pytest.raises(RuntimeError, match="catalog refused"):
+        a.truncate()
+    a.commit_hook = None
+    assert manifests() == referenced()
+
+    stray, young = (os.path.join(a.meta_dir, f"manifest-9999999{i}-stray.json") for i in (1, 2))
+    for p in (stray, young):
+        with open(p, "w") as fh:
+            fh.write("{}")
+    old = time.time() - 7200
+    os.utime(stray, (old, old))
+    assert a.remove_orphan_files(older_than_seconds=3600) == [stray]
+    assert manifests() == referenced() | {os.path.basename(young)}
+
+
 def test_rename_table_preserves_contents_and_history(spark, tmp_path):
     from debezium_server_iceberg_spark.lakehouse import LakeCatalog
     from debezium_server_iceberg_spark.operators.merge import merge_into

@@ -1,7 +1,10 @@
 """Structural guards: the package keeps ONE thread pool (``run_overlapped``)
 and ONE optimistic-concurrency retry loop (``LakeTable._commit``), so every
 overlapped Spark job and every commit goes through the same drained,
-property-inheriting, abort-on-failure path."""
+property-inheriting, abort-on-failure path; and ONE upsert planner
+(``operators/merge.py:_plan``), so every upsert sink that reads existing
+files answers "which rows of which files does this batch hit?" the same
+way."""
 
 import ast
 import pathlib
@@ -50,3 +53,18 @@ def test_one_commit_retry_loop():
         and "CommitConflict" in _names(n.type)
     )
     assert loops == [("lakehouse/table.py", "LakeTable._commit")]
+
+
+def test_one_upsert_planner():
+    def planner_call(n) -> bool:
+        if not isinstance(n, ast.Call):
+            return False
+        if isinstance(n.func, ast.Attribute) and n.func.attr == "agg":
+            return True
+        return any(
+            isinstance(a, ast.Constant) and a.value == "left_semi"
+            for a in [*n.args, *(kw.value for kw in n.keywords)]
+        )
+
+    sites = [s for s in _sites(planner_call) if s[0] == "operators/merge.py"]
+    assert len(sites) == 2 and set(sites) == {("operators/merge.py", "_plan")}
