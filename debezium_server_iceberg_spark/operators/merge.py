@@ -16,12 +16,15 @@ IcebergChangeConsumerUpsertTest scenarios):
 **The planner** (``_plan``) answers the one question every sink that reads
 existing files asks: which rows of which files does this batch's key set
 hit?  Working from the merge's single metadata read, it runs ONE aggregate
-over the cached source (row count, per-key min/max and, on partitioned
-tables, the set of touched partition tuples), prunes the ref head's files
-by key bounds and partition tuple with no Spark job (the same planning
-model as Iceberg's manifest pruning), and returns the candidates plus one
-column-pruned ``_metadata`` semi-join yielding the ``(file_name, pos)`` of
-matched rows.  The probe reads raw parquet: outstanding deletes are not
+over the cached source (row count, per-key min/max and, when partition
+fields derive from key columns, the set of touched partition tuples),
+prunes the ref head's files by key bounds and those partition tuples with
+no Spark job (the same planning model as Iceberg's manifest pruning), and
+returns the candidates plus one column-pruned ``_metadata`` semi-join
+yielding the ``(file_name, pos)`` of matched rows.  Partition fields over
+non-key columns never prune: an update may move a row between their
+partitions, so its old version can sit in a partition the batch does not
+touch.  The probe reads raw parquet: outstanding deletes are not
 applied, so an already-deleted row version still counts as a hit.
 
 **The sinks**, selected by the ``write.upsert.mode`` table property (or
@@ -120,6 +123,8 @@ def merge_into(
         raise ValueError(f"unknown upsert mode {mode!r}")
     if branch != "main" and mode != "merge-on-read":
         raise ValueError("branch merges require merge-on-read upsert mode")
+    if delete_style not in (None, "equality", "position"):
+        raise ValueError(f"unknown delete style {delete_style!r}")
     lineage = int(meta.properties.get("format-version", "2")) >= 3
     sink = (
         "rewrite"
@@ -272,6 +277,12 @@ def _prunable_partitions(meta: TableMetadata, spark: SparkSession) -> tuple[list
     """The partition fields a batch's partition tuples can prune files by,
     and the source-side expressions computing them.
 
+    Only fields derived from identifier columns qualify: a key's partition
+    value never changes, so a file of an untouched partition cannot hold
+    it.  A field over a non-key column may differ between a row's old
+    version and the incoming one (an update moving the row, a delete
+    event with the column null), so pruning by it would miss the old row.
+
     Layout-versioning guards: file partition values computed under a
     DIFFERENT bucket hash (unstamped pre-murmur3 table) or a different
     session timezone (temporal wall clocks) must not be compared against
@@ -288,6 +299,7 @@ def _prunable_partitions(meta: TableMetadata, spark: SparkSession) -> tuple[list
         pf
         for pf in meta.partition_spec
         if pf.source in src_types
+        and pf.source in meta.identifier_fields
         and pf.name not in tz_unsafe
         and (bucket_ok or pf.transform != "bucket")
     ]

@@ -347,9 +347,11 @@ def test_consumer_materializes_deletes_at_threshold(spark, warehouse):
     ids=["v2-copy-on-write", "v3-merge-on-read"],
 )
 def test_merge_partition_pruning(spark, warehouse, fmt, mode):
-    """Upsert into a partitioned table: only files of partitions the batch
-    touches participate in the rewrite (copy-on-write) or the position-
-    delete probe (v3 merge-on-read) — both sinks share one planner."""
+    """Upsert into a table partitioned by a key bucket: only files of
+    partitions the batch touches participate in the rewrite (copy-on-write)
+    or the position-delete probe (v3 merge-on-read) — both sinks share one
+    planner.  Every bucket spans the whole id range, so bounds alone can't
+    prune."""
     from debezium_server_iceberg_spark.operators.dedup import dedup_batch
     from debezium_server_iceberg_spark.operators.merge import merge_into
     from debezium_server_iceberg_spark.lakehouse import LakeCatalog, parse_partition_spec
@@ -362,7 +364,7 @@ def test_merge_partition_pruning(spark, warehouse, fmt, mode):
     t = cat.create_table(
         "ns", "pm", snap.schema,
         identifier_fields=["id"],
-        partition_spec=parse_partition_spec("grp", {"id", "grp", "v"}),
+        partition_spec=parse_partition_spec("bucket(3, id)", {"id", "grp", "v"}),
         properties={"format-version": fmt},
     )
     merge_into(
@@ -370,23 +372,88 @@ def test_merge_partition_pruning(spark, warehouse, fmt, mode):
         mode=mode,
     )
     files_before = t.current_files()
-    parts_before = {f.partition["_p_grp"] for f in files_before}
-    assert parts_before == {"g0", "g1", "g2"}
+    pname = t.metadata().partition_spec[0].name
+    parts_before = {f.partition[pname] for f in files_before}
+    assert len(parts_before) == 3
 
-    # update only g1 rows
+    # update only the rows of one bucket
+    bucket = files_before[0].partition[pname]
+    in_bucket = [f for f in files_before if f.partition[pname] == bucket]
+    ids = {r["id"] for r in spark.read.parquet(*[f.path for f in in_bucket]).collect()}
     upd = spark.createDataFrame(
-        [(i, f"g{i % 3}", 1000 + i, "u", 1) for i in range(30) if i % 3 == 1], schema
+        [(i, f"g{i % 3}", 1000 + i, "u", 1) for i in sorted(ids)], schema
     )
     stats = merge_into(
         t, dedup_batch(upd, ["id"], dedup_column="__source_ts_ms"),
         mode=mode,
     )
-    g1_files = [f for f in files_before if f.partition["_p_grp"] == "g1"]
-    assert stats.candidate_files <= len(g1_files)
-    assert stats.rewritten_files <= len(g1_files)
+    assert stats.candidate_files <= len(in_bucket)
+    assert stats.rewritten_files <= len(in_bucket)
     got = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
-    assert all(got[i] == 1000 + i for i in range(30) if i % 3 == 1)
-    assert all(got[i] == i for i in range(30) if i % 3 != 1)
+    assert all(got[i] == 1000 + i for i in ids)
+    assert all(got[i] == i for i in range(30) if i not in ids)
+
+
+@pytest.mark.parametrize(
+    "fmt,mode",
+    [("2", "copy-on-write"), ("3", "merge-on-read")],
+    ids=["v2-copy-on-write", "v3-merge-on-read"],
+)
+def test_upsert_moves_key_across_partitions(spark, warehouse, fmt, mode):
+    """A table partitioned by a non-key column: an update that moves a key
+    to another partition, and a delete event whose partition column is
+    null or changed, still reach the old row version — partition fields
+    over non-key columns must not prune the planned sinks."""
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog, parse_partition_spec
+
+    cat = LakeCatalog(warehouse)
+    schema = "id long, grp string, v long, __op string"
+    snap = spark.createDataFrame([(i, f"g{i % 3}", i, "c") for i in range(30)], schema)
+    t = cat.create_table(
+        "ns", "mv", snap.schema,
+        identifier_fields=["id"],
+        partition_spec=parse_partition_spec("grp", {"id", "grp", "v"}),
+        properties={"format-version": fmt},
+    )
+    merge_into(t, snap, mode=mode)
+    # move every g0 key to g1
+    moved = [i for i in range(30) if i % 3 == 0]
+    merge_into(
+        t, spark.createDataFrame([(i, "g1", 1000 + i, "u") for i in moved], schema),
+        mode=mode,
+    )
+    rows = t.to_df(spark).collect()
+    assert len(rows) == 30
+    got = {r["id"]: (r["grp"], r["v"]) for r in rows}
+    assert all(got[i] == ("g1", 1000 + i) for i in moved)
+    assert all(got[i] == (f"g{i % 3}", i) for i in range(30) if i not in moved)
+
+    # hard deletes: id 3 (now in g1) with a null partition column, id 4
+    # (in g1) with a changed one
+    merge_into(
+        t, spark.createDataFrame([(3, None, 0, "d"), (4, "g2", 0, "d")], schema),
+        keep_deletes=False, mode=mode,
+    )
+    ids = sorted(r["id"] for r in t.to_df(spark).collect())
+    assert ids == sorted(set(range(30)) - {3, 4})
+
+
+def test_merge_rejects_unknown_delete_style(spark, warehouse):
+    """A misspelt ``delete_style`` raises instead of silently taking the
+    copy-on-write rewrite (which would also ignore ``branch=``)."""
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+
+    schema = "id long, v long, __op string"
+    batch = spark.createDataFrame([(1, 1, "c")], schema)
+    t = LakeCatalog(warehouse).create_table(
+        "ns", "ds", batch.schema, identifier_fields=["id"],
+        properties={"format-version": "3"},
+    )
+    with pytest.raises(ValueError, match="unknown delete style 'positions'"):
+        merge_into(t, batch, delete_style="positions", branch="audit")
+    assert t.current_files() == [] and "audit" not in t.metadata().refs
 
 
 def test_upsert_source_rows_counted_once(spark, warehouse):
@@ -681,7 +748,7 @@ def test_handle_batch_job_counts_pinned(spark, warehouse):
 
 
 # warm merge_into Spark jobs per (partitioned, mode) on a 30-row table in
-# three identity partitions, updating one partition's rows
+# three key buckets, updating a third of its rows
 MERGE_JOBS = {
     (True, "copy-on-write"): 11,
     (True, "merge-on-read"): 8,
@@ -705,7 +772,9 @@ def test_merge_job_counts_pinned(spark, warehouse):
             spark.createDataFrame([], schema).schema,
             identifier_fields=["id"],
             partition_spec=(
-                parse_partition_spec("grp", {"id", "grp", "v"}) if partitioned else None
+                parse_partition_spec("bucket(3, id)", {"id", "grp", "v"})
+                if partitioned
+                else None
             ),
             properties={"format-version": "3" if mode == "merge-on-read" else "2"},
         )
