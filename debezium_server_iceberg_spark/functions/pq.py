@@ -115,31 +115,26 @@ def pq_encode(
     import pandas as pd
 
     dsub = dim // m
+    # per-subspace mask of missing (subspace, code) cells: a caller codebook
+    # may be sparse, and a missing cell must not compete in the argmin as
+    # a phantom all-zeros centroid (the former broadcast-join shape scored
+    # only entries actually present per subspace)
+    absent = None
     if codebooks is not None:
         rows = codebooks.collect()
         code_ids = sorted({r["code_id"] for r in rows})
         pos = {cid: j for j, cid in enumerate(code_ids)}
         cb = np.zeros((m, len(code_ids), dsub), dtype=np.float64)
-        seen_cells = set()
+        absent = np.ones((m, len(code_ids)), dtype=bool)
         for r in rows:
             cb[r["_s"], pos[r["code_id"]]] = np.asarray(r["_cent"], dtype=np.float64)
-            seen_cells.add((int(r["_s"]), int(r["code_id"])))
-        # every code_id must appear in ALL m subspaces: a missing
-        # (subspace, code) row would otherwise leave a phantom all-zeros
-        # centroid competing in the argmin (the former broadcast-join
-        # shape scored only entries actually present per subspace)
-        missing = [
-            (s, cid)
-            for s in range(m)
-            for cid in code_ids
-            if (s, cid) not in seen_cells
-        ]
-        if missing:
+            absent[r["_s"], pos[r["code_id"]]] = False
+        empty = [s for s in range(m) if absent[s].all()]
+        if empty:
             raise ValueError(
                 "pq_encode: caller-supplied codebooks are incomplete — "
-                f"{len(missing)} (subspace, code_id) entries missing, "
-                f"first: {missing[:3]}; every code_id must appear in all "
-                f"{m} subspaces"
+                f"subspaces {empty} have no entries; every one of the {m} "
+                "subspaces needs at least one code"
             )
     else:
         cb, code_ids = collect_pq_codebooks(df, dim, m, ks, id_col, vec_col)
@@ -158,7 +153,10 @@ def pq_encode(
                 sub = vecs[:, s * dsub : (s + 1) * dsub]
                 # argmin first-occurrence == ties to the lower code id
                 # (code_arr is ascending)
-                codes = code_arr[np.argmin(seq_fold_d2_batch(sub, cb[s]), axis=1)]
+                d2 = seq_fold_d2_batch(sub, cb[s])
+                if absent is not None:
+                    d2[:, absent[s]] = np.inf
+                codes = code_arr[np.argmin(d2, axis=1)]
                 out_id.extend(ids)
                 out_s.extend([s] * len(ids))
                 out_code.extend(codes)

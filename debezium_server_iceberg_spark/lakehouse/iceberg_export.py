@@ -475,8 +475,7 @@ def export_iceberg_table(
     # point is then the catalog CAS, not the hint replace) — the
     # candidate's manifest file is already on disk when the hook runs
     meta = metadata if metadata is not None else table.metadata()
-    deletes = table._manifest_deletes(meta)
-    files = table._manifest_files(meta)
+    files, deletes = table._manifest_entry(meta)
     schema_json, last_col = spark_schema_to_iceberg(
         meta.schema, meta.identifier_fields
     )
@@ -756,7 +755,7 @@ def export_iceberg_table(
     # transform values — exporting them as such would make external engines
     # prune wrongly.  Those files publish through the unpartitioned-spec
     # manifest instead (scanned by every query, never wrongly pruned).
-    from .table import _tz_sensitive_fields, bucket_hash_trusted, table_write_tz
+    from .pruning import _tz_sensitive_fields, bucket_hash_trusted, table_write_tz
 
     force_degrade = (
         any(pf.transform == "bucket" for pf in part_spec)

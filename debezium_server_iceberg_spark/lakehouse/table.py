@@ -29,10 +29,14 @@ Capability parity map (reference file:line -> here):
 - snapshot history / time travel                 Iceberg metadata (free here)
 
 Scale notes: manifests carry file-level partition values + key bounds so the
-MERGE path prunes untouched files before any Spark job runs; stats are
-computed distributed (one narrow aggregation over freshly written files, not
-a driver loop). At 1000-executor scale the only driver-side state is the
-file list — same as Iceberg's planning model.
+MERGE path prunes untouched files before any Spark job runs; stats come from
+the written files' parquet footers (one narrow aggregation when a footer is
+unreadable, not a driver loop). At 1000-executor scale the only driver-side
+state is the file list — same as Iceberg's planning model.  Bounds are
+encoded, decoded and compared by column type in ``pruning.py``, the one
+place every planner asks "may this file hold these values?".  A naive
+datetime means what PySpark makes of it: a process-local instant on a
+``timestamp`` column, a wall clock on ``timestamp_ntz``.
 """
 
 from __future__ import annotations
@@ -49,38 +53,20 @@ from typing import Any, Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..session import run_overlapped
+from . import pruning
+from .pruning import BUCKET_HASH, BUCKET_HASH_PROP, WRITE_TZ_PROP
+# the layout-versioning and file-pruning helpers stay importable from here
+from .pruning import (  # noqa: F401
+    _engine_partition_value,
+    _prune_files_by_filter,
+    _prune_files_by_partition_values,
+    _tz_sensitive_fields,
+    bucket_hash_trusted,
+    table_write_tz,
+)
 from .transforms import PartitionField
 
 _HINT = "version-hint.text"
-
-# layout-versioning table properties (see LakeTable.create)
-BUCKET_HASH_PROP = "engine.bucket-hash"
-BUCKET_HASH = "murmur3"          # Iceberg-spec bucket hash since r8
-WRITE_TZ_PROP = "engine.write-timezone"
-
-
-def bucket_hash_trusted(meta: "TableMetadata") -> bool:
-    """True iff this table's bucket partition values are the current
-    (Iceberg murmur3) hash — i.e. safe to recompute for pruning/export."""
-    return meta.properties.get(BUCKET_HASH_PROP) == BUCKET_HASH
-
-
-def table_write_tz(meta: "TableMetadata") -> str:
-    """The timezone this table's temporal partition values render in."""
-    return meta.properties.get(WRITE_TZ_PROP, "UTC")
-
-
-def _tz_sensitive_fields(meta: "TableMetadata") -> "list[PartitionField]":
-    """Partition fields whose on-disk value depends on a timezone: temporal
-    transforms (and identity) over an ltz timestamp source.  date and
-    timestamp_ntz sources render the stored wall clock — tz-independent."""
-    src = {f.name: f.dataType.simpleString() for f in meta.schema.fields}
-    return [
-        pf
-        for pf in meta.partition_spec
-        if src.get(pf.source) == "timestamp"
-        and pf.transform in ("year", "month", "day", "hour", "identity")
-    ]
 
 # Iceberg v3 row-lineage reserved column names (spec: Row Lineage)
 ROW_ID_COL = "_row_id"
@@ -412,26 +398,24 @@ class LakeTable:
 
     # ------------------------------------------------------------ manifests
 
-    def _manifest_entry(self, meta: TableMetadata, snapshot_id: int | None = None) -> dict:
+    def _manifest_entry(
+        self, meta: TableMetadata, snapshot_id: int | None = None
+    ) -> tuple[list[DataFile], list[DeleteFile]]:
+        """The data files and delete files of a snapshot's manifest (default:
+        the current snapshot) — one manifest read."""
         sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
         if sid is None:
-            return {"files": [], "delete_files": []}
+            return [], []
         snap = next(s for s in meta.snapshots if s.snapshot_id == sid)
         with open(os.path.join(self.meta_dir, snap.manifest)) as fh:
             d = json.load(fh)
-        return {"files": d["files"], "delete_files": d.get("delete_files", [])}
-
-    def _manifest_files(self, meta: TableMetadata, snapshot_id: int | None = None) -> list[DataFile]:
-        return [DataFile.from_dict(f) for f in self._manifest_entry(meta, snapshot_id)["files"]]
-
-    def _manifest_deletes(self, meta: TableMetadata, snapshot_id: int | None = None) -> list[DeleteFile]:
-        return [
-            DeleteFile.from_dict(f)
-            for f in self._manifest_entry(meta, snapshot_id)["delete_files"]
-        ]
+        return (
+            [DataFile.from_dict(f) for f in d["files"]],
+            [DeleteFile.from_dict(f) for f in d.get("delete_files", [])],
+        )
 
     def current_files(self) -> list[DataFile]:
-        return self._manifest_files(self.metadata())
+        return self._manifest_entry(self.metadata())[0]
 
     def files_at(
         self, ref: str = "main", meta: TableMetadata | None = None
@@ -445,10 +429,10 @@ class LakeTable:
         else:
             r = meta.refs.get(ref)
             sid = r["snapshot_id"] if r else meta.current_snapshot_id
-        return self._manifest_files(meta, sid)
+        return self._manifest_entry(meta, sid)[0]
 
     def current_deletes(self) -> list[DeleteFile]:
-        return self._manifest_deletes(self.metadata())
+        return self._manifest_entry(self.metadata())[1]
 
     def _commit_snapshot(
         self,
@@ -497,8 +481,7 @@ class LakeTable:
                     raise ValueError(f"{branch!r} is a tag; no branch with that name")
                 else:
                     base_sid = ref["snapshot_id"]
-            current = self._manifest_files(meta, base_sid)
-            cur_deletes = self._manifest_deletes(meta, base_sid)
+            current, cur_deletes = self._manifest_entry(meta, base_sid)
             files = (
                 add
                 if operation == "overwrite"
@@ -590,13 +573,13 @@ class LakeTable:
         # simpleString, not typeName: decimal needs its (p,s) for the
         # spec bucket hash ("decimal(18,2)" vs bare "decimal")
         src_types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        if _tz_sensitive_fields(meta):
+        if pruning._tz_sensitive_fields(meta):
             # temporal transform expressions (date_format/year) render ltz
             # timestamps in the SESSION timezone; the table's directory tree
             # is declared in WRITE_TZ_PROP.  A mismatched write would mix
             # two wall-clock encodings under one partition field — refuse.
             sess_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-            want = table_write_tz(meta)
+            want = pruning.table_write_tz(meta)
             if sess_tz != want:
                 raise ValueError(
                     f"session timezone {sess_tz!r} != table write timezone "
@@ -718,13 +701,15 @@ class LakeTable:
         prefix: str = "",
         partition_by: list[str] | None = None,
         rolling: bool = False,
+        stats: dict[str, T.DataType] | None = None,
     ) -> list[DataFile]:
         """Write ``frame`` as parquet into a fresh staging directory under
         data_dir and return the new files' stats (not yet committed).  A
         failed write leaves no orphan files behind (W12, writer.abort() —
         IcebergTableOperator.java:229-237).  ``rolling`` applies the
         ``write.max-records-per-file`` row cap per file (the reference's
-        rolling writer, IcebergTableWriterFactory.java:42-46)."""
+        rolling writer, IcebergTableWriterFactory.java:42-46); ``stats`` as
+        in :meth:`_collect_stats`."""
         staging = os.path.join(self.data_dir, prefix + uuidlib.uuid4().hex)
         writer = frame.write.mode("error")
         max_recs = meta.properties.get("write.max-records-per-file")
@@ -735,36 +720,41 @@ class LakeTable:
         try:
             writer.parquet(staging)
             _uniquify_staged(staging)
-            return self._collect_stats(frame.sparkSession, staging, meta)
+            return self._collect_stats(frame.sparkSession, staging, meta, stats)
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
 
     def _collect_stats(
-        self, spark: SparkSession, staging: str, meta: TableMetadata
+        self,
+        spark: SparkSession,
+        staging: str,
+        meta: TableMetadata,
+        stats: dict[str, T.DataType] | None = None,
     ) -> list[DataFile]:
         """Per-file stats for freshly written files, harvested from parquet
         FOOTERS driver-side (row counts + key min/max live in the metadata
         already — no data is re-read and no Spark job runs; this is how
         manifest writers work in real table formats). Falls back to a
-        column-pruned Spark aggregation if a footer lacks statistics.
+        column-pruned Spark aggregation if a footer is unreadable.
 
-        Bounds are recorded for identifier fields, sort-order columns, and
-        any columns named in the ``write.stats-columns`` table property
-        (comma-separated) — the knob a clustered rewrite sets so its sort
-        keys become prunable."""
-        names = {f.name for f in meta.schema.fields}
-        extra = [
-            c.strip()
-            for c in meta.properties.get("write.stats-columns", "").split(",")
-            if c.strip()
-        ]
-        seen: set[str] = set()
-        key_cols = [
-            c
-            for c in [*meta.identifier_fields, *meta.sort_order, *extra]
-            if c in names and not (c in seen or seen.add(c))
-        ]
+        ``stats`` maps the columns to keep bounds for to their types
+        (encoded by ``pruning``).  By default these are the identifier
+        fields, sort-order columns, and any columns named in the
+        ``write.stats-columns`` table property (comma-separated) — the knob
+        a clustered rewrite sets so its sort keys become prunable."""
+        if stats is None:
+            types = pruning.column_types(meta.schema)
+            extra = [
+                c.strip()
+                for c in meta.properties.get("write.stats-columns", "").split(",")
+                if c.strip()
+            ]
+            stats = {
+                c: types[c]
+                for c in [*meta.identifier_fields, *meta.sort_order, *extra]
+                if c in types
+            }
         paths = []
         for root, _dirs, names in os.walk(staging):
             for n in names:
@@ -775,65 +765,48 @@ class LakeTable:
 
             files: list[DataFile] = []
             for path in sorted(paths):
-                md = pq.ParquetFile(path).metadata  # may raise on logical
-                # types this pyarrow doesn't know (e.g. Variant) -> fallback
-                names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                bounds: dict[str, list] = {}
-                for c in key_cols:
-                    ci = names.get(c)
-                    if ci is None:
-                        continue
-                    mn = mx = None
-                    ok = True
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            ok = False
-                            break
-                        mn = st.min if mn is None else min(mn, st.min)
-                        mx = st.max if mx is None else max(mx, st.max)
-                    if ok and mn is not None:
-                        bounds[c] = [_jsonable(mn), _jsonable(mx)]
+                # may raise on logical types this pyarrow can't read (e.g.
+                # Variant, decimal statistics) -> Spark stats fallback
+                md = pq.ParquetFile(path).metadata
+                ranges = pruning.footer_ranges(md, stats)
                 files.append(
                     DataFile(
                         path,
                         md.num_rows,
                         _partition_values_from_path(path, meta.partition_spec),
-                        bounds,
+                        pruning.encode_ranges(ranges, stats),
                         os.path.getsize(path),
                     )
                 )
             return files
         except Exception:
-            pass  # unreadable footer (unknown logical type) -> Spark stats
+            pass
 
         newly = spark.read.parquet(staging)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in key_cols:
-            aggs.append(F.min(c).alias(f"_min_{c}"))
-            aggs.append(F.max(c).alias(f"_max_{c}"))
-        stats = (
+        stats = {c: t for c, t in stats.items() if c in newly.columns}
+        stat_rows = (
             newly.withColumn("_file", F.input_file_name())
             .groupBy("_file")
-            .agg(*aggs)
+            .agg(F.count(F.lit(1)).alias("_rows"), *pruning.key_range_aggs(stats))
             .collect()
         )
         files = []
-        for row in stats:
+        for row in stat_rows:
             path = row["_file"]
             if path.startswith("file:"):
                 path = path[len("file:"):]
             partition = _partition_values_from_path(path, meta.partition_spec)
-            bounds = {}
-            for c in key_cols:
-                mn, mx = row[f"_min_{c}"], row[f"_max_{c}"]
-                if mn is not None:
-                    bounds[c] = [_jsonable(mn), _jsonable(mx)]
+            ranges = pruning.key_ranges(row, stats)
             try:
                 nbytes = os.path.getsize(path)
             except OSError:
                 nbytes = 0
-            files.append(DataFile(path, row["_rows"], partition, bounds, nbytes))
+            files.append(
+                DataFile(
+                    path, row["_rows"], partition,
+                    pruning.encode_ranges(ranges, stats), nbytes,
+                )
+            )
         return files
 
     def _resplit_oversize_staged(
@@ -1002,7 +975,6 @@ class LakeTable:
         add_df: DataFrame | None,
         delete_keys_df: DataFrame | None,
         summary: dict | None = None,
-        delete_target_files: int = 1,
         delete_positions_df: DataFrame | None = None,
         branch: str = "main",
     ) -> tuple[int, int]:
@@ -1038,17 +1010,17 @@ class LakeTable:
                 .sortWithinPartitions("file_name", "pos"),
                 meta,
                 prefix="posdel-",
+                # file_name min/max bounds let the read side prune this
+                # delete from scans that keep none of the named files
+                stats={"file_name": T.StringType()},
             )
             out: list[DeleteFile] = []
             for f in staged:
                 if f.rows:
                     out.append(
                         DeleteFile(
-                            # file_name min/max bounds let the read side
-                            # prune this delete from scans that keep none
-                            # of the named files
-                            f.path, f.rows, 0, [], _posdel_bounds(f.path),
-                            f.bytes, content="position",
+                            f.path, f.rows, 0, [], f.bounds, f.bytes,
+                            content="position",
                         )
                     )
                 else:  # empty batch touched nothing: drop the file
@@ -1056,16 +1028,10 @@ class LakeTable:
             return out
 
         def stage_equality_deletes() -> list[DeleteFile]:
-            # few small files per batch: a CDC batch's distinct keys are
-            # tiny relative to the table; key-clustered + sorted so footer
-            # min/max bounds are tight for scan-side pruning (callers size
-            # delete_target_files up for snapshot-load-sized batches)
-            keys = delete_keys_df.select(*key_cols)
-            keys = (
-                keys.repartitionByRange(delete_target_files, *key_cols)
-                if delete_target_files > 1
-                else keys.coalesce(1)
-            )
+            # one small file per batch: a CDC batch's distinct keys are
+            # tiny relative to the table; sorted so footer min/max bounds
+            # are tight for scan-side pruning
+            keys = delete_keys_df.select(*key_cols).coalesce(1)
             return [
                 DeleteFile(f.path, f.rows, 0, list(key_cols), f.bounds, f.bytes)
                 for f in self._write_staged(
@@ -1277,7 +1243,7 @@ class LakeTable:
         missing = [c for c in sort_by if c not in names]
         if missing:
             raise ValueError(f"sort columns not in schema: {missing}")
-        files = self._manifest_files(meta)
+        files = self._manifest_entry(meta)[0]
         if not files:
             return 0
         # make the cluster keys prunable in future stats BEFORE staging
@@ -1325,13 +1291,10 @@ class LakeTable:
 
         Returns the number of data files rewritten."""
         meta = self.metadata()
-        deletes = self._manifest_deletes(meta)
+        files, deletes = self._manifest_entry(meta)
         if not deletes:
             return 0
-        files = self._manifest_files(meta)
-        key_cols = [
-            c for c in meta.identifier_fields if c in {f.name for f in meta.schema.fields}
-        ]
+        types = pruning.column_types(meta.schema)
         eq_dels = [d for d in deletes if d.content != "position"]
         pos_dels = [d for d in deletes if d.content == "position"]
         # position deletes name their victims exactly: one tiny read of the
@@ -1350,12 +1313,7 @@ class LakeTable:
         def hit(f: DataFile) -> bool:
             if os.path.basename(f.path) in pos_names:
                 return True
-            for d in eq_dels:
-                if f.seq >= d.seq:
-                    continue
-                if _bounds_intersect(f.bounds, d.bounds, key_cols):
-                    return True
-            return False
+            return any(pruning.delete_may_touch(d, [f], types) for d in eq_dels)
 
         affected = [f for f in files if hit(f)]
         ln = self._lineage_on(meta)
@@ -1396,10 +1354,8 @@ class LakeTable:
                 return _NOTHING_TO_COMMIT
 
             def _all_paths(sid: int) -> set[str]:
-                e = self._manifest_entry(meta, sid)
-                return {f["path"] for f in e["files"]} | {
-                    d["path"] for d in e["delete_files"]
-                }
+                files, deletes = self._manifest_entry(meta, sid)
+                return {f.path for f in [*files, *deletes]}
 
             live_paths = set().union(*(_all_paths(s.snapshot_id) for s in keep))
             dead_paths = (
@@ -1440,9 +1396,8 @@ class LakeTable:
         meta = self.metadata()
         referenced: set[str] = set()
         for s in meta.snapshots:
-            e = self._manifest_entry(meta, s.snapshot_id)
-            referenced |= {os.path.realpath(f["path"]) for f in e["files"]}
-            referenced |= {os.path.realpath(d["path"]) for d in e["delete_files"]}
+            files, deletes = self._manifest_entry(meta, s.snapshot_id)
+            referenced |= {os.path.realpath(f.path) for f in [*files, *deletes]}
             referenced.add(os.path.realpath(os.path.join(self.meta_dir, s.manifest)))
         cutoff = time.time() - older_than_seconds
         paths = [os.path.join(r, n) for r, _d, ns in os.walk(self.data_dir) for n in ns]
@@ -1501,7 +1456,11 @@ class LakeTable:
         applied in-plan, so results are EXACTLY ``to_df().filter(...)``
         while a point lookup touches only the files that can match.  At
         100 TB this is the difference between a manifest scan and a
-        table scan.
+        table scan.  A naive datetime value follows PySpark's rule for
+        the column's type, in pruning and residual alike: a process-local
+        instant on a ``timestamp`` column (what ``F.lit`` makes of it), a
+        wall clock on ``timestamp_ntz`` (the residual literal is typed
+        ``timestamp_ntz``, where ``F.lit`` alone would make an instant).
 
         ``partition_values`` is a PLANNING primitive for probe joins:
         a dict of PHYSICAL partition-field name (``PartitionField.name``,
@@ -1519,22 +1478,20 @@ class LakeTable:
                 raise ValueError("pass snapshot_id or ref, not both")
             snapshot_id = self.resolve_ref(ref)
         meta = self.metadata()
-        files = self._manifest_files(meta, snapshot_id)
-        deletes = self._manifest_deletes(meta, snapshot_id)
+        files, deletes = self._manifest_entry(meta, snapshot_id)
         if row_filter:
-            files = _prune_files_by_filter(
-                meta, files, row_filter,
-                session_tz=spark.conf.get("spark.sql.session.timeZone"),
-            )
+            files = pruning._prune_files_by_filter(meta, files, row_filter)
         if partition_values:
-            files = _prune_files_by_partition_values(meta, files, partition_values)
+            files = pruning._prune_files_by_partition_values(meta, files, partition_values)
         df = self._read(spark, meta, files, deletes, lineage=lineage)
-        if row_filter:
-            for col, want in row_filter.items():
-                if isinstance(want, tuple):
-                    df = df.filter(F.col(col).between(want[0], want[1]))
-                else:
-                    df = df.filter(F.col(col) == F.lit(want))
+        types = pruning.column_types(meta.schema)
+        for col, want in (row_filter or {}).items():
+            dt = types.get(col)
+            if isinstance(want, tuple):
+                lo, hi = (pruning.literal(v, dt) for v in want)
+                df = df.filter(F.col(col).between(lo, hi))
+            else:
+                df = df.filter(F.col(col) == pruning.literal(want, dt))
         return df
 
     def changed_rows_since(
@@ -1585,8 +1542,7 @@ class LakeTable:
         by_id = {s.snapshot_id: s for s in meta.snapshots}
         if snapshot_id not in by_id:
             raise ValueError(f"no snapshot {snapshot_id} in table history")
-        cur_files = self._manifest_files(meta)
-        cur_deletes = self._manifest_deletes(meta)
+        cur_files, cur_deletes = self._manifest_entry(meta)
         files = [f for f in cur_files if f.seq > snapshot_id]
         post = self._read(spark, meta, files, cur_deletes, lineage=True).filter(
             F.col(LAST_SEQ_COL) > snapshot_id
@@ -1605,8 +1561,7 @@ class LakeTable:
         post = post.withColumn("_change_type", F.lit("upsert"))
 
         # ---- candidate victim keys (∝ change volume, not table size)
-        old_files = self._manifest_files(meta, snapshot_id)
-        old_deletes = self._manifest_deletes(meta, snapshot_id)
+        old_files, old_deletes = self._manifest_entry(meta, snapshot_id)
         cur_paths = {f.path for f in cur_files}
         removed = [f for f in old_files if f.path not in cur_paths]
         new_dels = [d for d in cur_deletes if d.seq > snapshot_id]
@@ -1652,29 +1607,13 @@ class LakeTable:
 
         # bounds-prune both snapshot scans to the candidate key ranges
         # (the MERGE planner's model: one tiny agg, then manifest math)
-        stat = cand.agg(
-            *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-            *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-        ).collect()[0]
-        lo = {c: bound_key(stat[f"_lo_{c}"]) for c in key_cols}
-        hi = {c: bound_key(stat[f"_hi_{c}"]) for c in key_cols}
-
-        def _overlaps(f: DataFile) -> bool:
-            for c in key_cols:
-                b = f.bounds.get(c)
-                if b is None or b[0] is None or b[1] is None or lo[c] is None:
-                    continue
-                try:
-                    if bound_key(b[1]) < lo[c] or bound_key(b[0]) > hi[c]:
-                        return False
-                except TypeError:
-                    # incomparable representations (e.g. decimal bounds
-                    # persisted as strings): keep the file
-                    continue
-            return True
-
-        old_pruned = [f for f in old_files if _overlaps(f)]
-        cur_pruned = [f for f in cur_files if _overlaps(f)]
+        types = pruning.column_types(meta.schema)
+        keyed = {c: types[c] for c in key_cols}
+        ranges = pruning.key_ranges(
+            cand.agg(*pruning.key_range_aggs(keyed)).collect()[0], keyed
+        )
+        old_pruned = [f for f in old_files if pruning.may_overlap(f.bounds, ranges, types)]
+        cur_pruned = [f for f in cur_files if pruning.may_overlap(f.bounds, ranges, types)]
         old_rows = self._read(
             spark, meta, old_pruned, old_deletes, lineage=True
         )
@@ -1722,30 +1661,22 @@ class LakeTable:
                     f"snapshot {s.snapshot_id} is a {s.operation} (rewrite); "
                     "incremental append scan is not defined across it"
                 )
-        files = [
-            f
-            for f in self._manifest_files(meta, to_sid)
-            if from_snapshot_id < f.seq <= to_sid
-        ]
+        files, deletes = self._manifest_entry(meta, to_sid)
+        files = [f for f in files if from_snapshot_id < f.seq <= to_sid]
         # deletes committed inside the range still apply to the new rows
-        deletes = [
-            d for d in self._manifest_deletes(meta, to_sid) if d.seq <= to_sid
-        ]
+        deletes = [d for d in deletes if d.seq <= to_sid]
         return self._read(spark, meta, files, deletes)
 
     def scan_files(
         self,
         spark: SparkSession,
         files: list[DataFile],
-        apply_deletes: bool = True,
         lineage: bool = False,
     ) -> DataFrame:
-        """Read a subset of data files (with current-snapshot equality
-        deletes applied unless opted out).  ``lineage`` as in
-        :meth:`to_df`."""
+        """Read a subset of data files with the current snapshot's deletes
+        applied.  ``lineage`` as in :meth:`to_df`."""
         meta = self.metadata()
-        deletes = self._manifest_deletes(meta) if apply_deletes else []
-        return self._read(spark, meta, files, deletes, lineage=lineage)
+        return self._read(spark, meta, files, self._manifest_entry(meta)[1], lineage=lineage)
 
     def _read(
         self,
@@ -1796,11 +1727,14 @@ class LakeTable:
         # bounds vs kept basenames), equality deletes are range-checked
         # per key column; anything without usable bounds is kept
         basenames = sorted(os.path.basename(f.path) for f in files)
+        types = pruning.column_types(schema)
         pos_relevant = [
-            d for d in pos_relevant if _delete_touches_scan(d, files, basenames)
+            d for d in pos_relevant
+            if pruning.delete_touches_scan(d, files, basenames, types)
         ]
         relevant = [
-            d for d in relevant if _delete_touches_scan(d, files, basenames)
+            d for d in relevant
+            if pruning.delete_touches_scan(d, files, basenames, types)
         ]
 
         df = spark.read.schema(read_schema).parquet(*[f.path for f in files])
@@ -1915,7 +1849,7 @@ class LakeTable:
                     json.dumps(f.partition, sort_keys=True),
                     json.dumps(f.bounds, sort_keys=True),
                 )
-                for f in self._manifest_files(meta)
+                for f in self._manifest_entry(meta)[0]
             ]
             return spark.createDataFrame(
                 rows,
@@ -1928,7 +1862,7 @@ class LakeTable:
                     d.path, d.rows, d.bytes, d.seq, d.content,
                     ",".join(d.equality_cols),
                 )
-                for d in self._manifest_deletes(meta)
+                for d in self._manifest_entry(meta)[1]
             ]
             return spark.createDataFrame(
                 rows,
@@ -1937,7 +1871,7 @@ class LakeTable:
             )
         if kind == "partitions":
             agg: dict[str, list[int]] = {}
-            for f in self._manifest_files(meta):
+            for f in self._manifest_entry(meta)[0]:
                 key = json.dumps(f.partition, sort_keys=True)
                 cur = agg.setdefault(key, [0, 0, 0])
                 cur[0] += 1
@@ -2146,423 +2080,6 @@ def _est_row_width(schema: T.StructType) -> int:
     for f in schema.fields:
         w += _TYPE_WIDTH.get(f.dataType.typeName(), 32)
     return w
-
-
-def _bounds_intersect(
-    a: dict[str, list], b: dict[str, list], cols: list[str]
-) -> bool:
-    """Do two [min,max] bound maps possibly share a key tuple? Missing
-    stats on either side -> must assume yes."""
-    for c in cols:
-        ba, bb = a.get(c), b.get(c)
-        if ba is None or bb is None:
-            continue
-        if ba[1] is not None and bb[0] is not None and ba[1] < bb[0]:
-            return False
-        if ba[0] is not None and bb[1] is not None and ba[0] > bb[1]:
-            return False
-    return True
-
-
-def _tz_instant(v, session_tz: str):
-    """Naive/aware datetime -> tz-aware instant, interpreting a naive value
-    the way Spark's residual filter will: as a wall clock in the session
-    timezone.  NotImplemented on DST-ambiguous/nonexistent wall clocks
-    (the two engines may legally resolve those differently — keep the
-    file) or unknown zones."""
-    import datetime as _dt
-
-    if v.tzinfo is not None:
-        return v
-    if session_tz == "UTC":
-        return v.replace(tzinfo=_dt.timezone.utc)
-    try:
-        from zoneinfo import ZoneInfo
-
-        z = ZoneInfo(session_tz)
-    except Exception:
-        return NotImplemented
-    a = v.replace(tzinfo=z, fold=0)
-    if a.utcoffset() != v.replace(tzinfo=z, fold=1).utcoffset():
-        return NotImplemented  # ambiguous (DST fall-back hour)
-    if a.astimezone(_dt.timezone.utc).astimezone(z).replace(
-        tzinfo=None
-    ) != v:
-        return NotImplemented  # nonexistent (DST spring-forward gap)
-    return a
-
-
-def _table_wall_clock(v, session_tz: str, table_tz: str):
-    """ltz-timestamp filter value -> the naive wall clock the WRITE path
-    rendered into the partition path (table_tz), or NotImplemented."""
-    import datetime as _dt
-
-    if v.tzinfo is None and session_tz == table_tz:
-        return v  # same zone both sides: wall clocks agree, no conversion
-    inst = _tz_instant(v, session_tz)
-    if inst is NotImplemented:
-        return NotImplemented
-    if table_tz == "UTC":
-        return inst.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    try:
-        from zoneinfo import ZoneInfo
-
-        return inst.astimezone(ZoneInfo(table_tz)).replace(tzinfo=None)
-    except Exception:
-        return NotImplemented
-
-
-def _engine_partition_value(
-    pf: PartitionField,
-    v: Any,
-    source_type: str,
-    session_tz: str = "UTC",
-    table_tz: str = "UTC",
-):
-    """The engine's path-encoded partition value for source value ``v``
-    under transform ``pf`` — what ``DataFile.partition`` holds, so a
-    filter value can be compared against manifests without reading data.
-    Returns NotImplemented when the transform can't be evaluated for this
-    value/type (caller keeps the file).
-
-    ``session_tz`` is how a naive filter datetime is interpreted (matching
-    Spark's residual in-plan filter); ``table_tz`` is the zone the write
-    path rendered temporal path values in (WRITE_TZ_PROP)."""
-    import datetime as _dt
-
-    t = pf.transform
-    st = (source_type or "").lower()
-    if t == "identity":
-        # prune only for types whose str() provably equals Spark's path
-        # encoding: ints and raw strings.  Decimals normalize to the
-        # declared scale ('7' vs path '7.00'); temporal encodings trim
-        # trailing zeros differently — skip, bounds still prune.
-        from decimal import Decimal as _Dec
-
-        if st in ("int", "bigint", "smallint", "tinyint"):
-            return int(v) if isinstance(v, int) and not isinstance(v, bool) \
-                else NotImplemented
-        if st == "string":
-            return v if isinstance(v, str) else NotImplemented
-        if st.startswith("decimal") and "(" in st:
-            _p, s = (int(x) for x in st[st.index("(") + 1 : st.index(")")].split(","))
-            try:
-                return str(_Dec(v).quantize(_Dec(1).scaleb(-s)))
-            except Exception:
-                return NotImplemented
-        return NotImplemented
-    if t == "bucket":
-        from .murmur3 import (
-            iceberg_bucket_py,
-            murmur3_bytes,
-            murmur3_decimal,
-            murmur3_long,
-            murmur3_utf8,
-        )
-        from decimal import Decimal as _Dec
-
-        # dispatch on the DECLARED column type, not the filter value's
-        # Python type: an int filter on a decimal column must hash the
-        # unscaled bytes the write path hashed, or pruning drops the file
-        if isinstance(v, bool):
-            return NotImplemented
-        if st in ("int", "bigint", "smallint", "tinyint"):
-            if not isinstance(v, int):
-                return NotImplemented
-            h = murmur3_long(v)
-        elif st == "string":
-            if not isinstance(v, str):
-                return NotImplemented
-            h = murmur3_utf8(v)
-        elif st == "binary":
-            if not isinstance(v, (bytes, bytearray)):
-                return NotImplemented
-            h = murmur3_bytes(v)
-        elif st.startswith("timestamp"):
-            if not isinstance(v, _dt.datetime):
-                return NotImplemented
-            if st == "timestamp_ntz":
-                # ntz stores the wall clock itself; zones never apply
-                if v.tzinfo is not None:
-                    return NotImplemented
-            else:
-                # ltz buckets hash the INSTANT's epoch micros (what the
-                # write-path column expression hashed), so a naive filter
-                # value resolves through the session timezone first
-                v = _tz_instant(v, session_tz)
-                if v is NotImplemented:
-                    return NotImplemented
-                v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            d = v - _dt.datetime(1970, 1, 1)
-            # exact integer micros: float total_seconds() is 1 us off for
-            # ~1% of microsecond timestamps — enough to hash a wrong
-            # bucket and silently prune the matching file
-            micros = (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
-            h = murmur3_long(micros)
-        elif st == "date":
-            if isinstance(v, _dt.datetime) or not isinstance(v, _dt.date):
-                return NotImplemented
-            h = murmur3_long((v - _dt.date(1970, 1, 1)).days)
-        elif st.startswith("decimal") and "(" in st:
-            _p, s = (int(x) for x in st[st.index("(") + 1 : st.index(")")].split(","))
-            try:
-                h = murmur3_decimal(int(_Dec(v).scaleb(s)))
-            except Exception:
-                return NotImplemented
-        else:
-            return NotImplemented
-        return iceberg_bucket_py(h, pf.param)
-    # temporal transforms: path values are wall clocks — of the value
-    # itself for date / timestamp_ntz sources, of the instant rendered in
-    # the table's declared write timezone for ltz timestamps
-    if t in ("year", "month", "day", "hour"):
-        if isinstance(v, _dt.datetime):
-            if st == "timestamp_ntz":
-                if v.tzinfo is not None:
-                    return NotImplemented
-            else:
-                v = _table_wall_clock(v, session_tz, table_tz)
-                if v is NotImplemented:
-                    return NotImplemented
-        if not isinstance(v, (_dt.date, _dt.datetime)):
-            return NotImplemented
-        if t == "year":
-            return v.year
-        if t == "month":
-            return f"{v.year:04d}-{v.month:02d}"
-        if t == "day":
-            return f"{v.year:04d}-{v.month:02d}-{v.day:02d}"
-        hh = v.hour if isinstance(v, _dt.datetime) else 0
-        return f"{v.year:04d}-{v.month:02d}-{v.day:02d}-{hh:02d}"
-    if t == "truncate":
-        if isinstance(v, str):
-            return v[: pf.param]
-        if isinstance(v, int) and not isinstance(v, bool):
-            return (v // pf.param) * pf.param
-        return NotImplemented
-    return NotImplemented
-
-
-def _prune_files_by_filter(
-    meta: TableMetadata,
-    files: list[DataFile],
-    row_filter: dict,
-    session_tz: str = "UTC",
-) -> list[DataFile]:
-    """Driver-side Iceberg-planFiles pruning: keep a file only if every
-    predicate MIGHT match it, judged from hidden-partition transform
-    values and per-file column min/max bounds.  Strictly conservative:
-    missing bounds, old-spec layouts, untranslatable transform values,
-    bucket values from an unstamped (pre-murmur3) layout, and temporal
-    values under a foreign write timezone all keep the file; correctness
-    comes from the residual in-plan filter."""
-    src_types = {f.name: f.dataType.simpleString() for f in meta.schema.fields}
-    table_tz = table_write_tz(meta)
-    trusted_bucket = bucket_hash_trusted(meta)
-    pf_by_source: dict[str, list[PartitionField]] = {}
-    for pf in meta.partition_spec:
-        if pf.transform == "bucket" and not trusted_bucket:
-            continue  # stale hash ordinals on disk: unprunable
-        pf_by_source.setdefault(pf.source, []).append(pf)
-
-    def _file_might_match(f: DataFile) -> bool:
-        for col, want in row_filter.items():
-            lo, hi = (want if isinstance(want, tuple) else (want, want))
-            if lo is None or hi is None:
-                continue  # null-bounded predicates: no pruning
-            # column bounds (incomparable representations — e.g. decimal
-            # bounds stored as strings — conservatively keep the file)
-            b = f.bounds.get(col)
-            if b is not None and b[0] is not None and b[1] is not None:
-                try:
-                    if bound_key(b[1]) < bound_key(lo) or bound_key(
-                        b[0]
-                    ) > bound_key(hi):
-                        return False
-                except TypeError:
-                    pass
-            # partition transform values
-            for pf in pf_by_source.get(col, []):
-                if pf.name not in f.partition:
-                    continue  # old-spec layout: unprunable
-                have = f.partition[pf.name]
-                if have is None or have == "__HIVE_DEFAULT_PARTITION__":
-                    continue
-                st = src_types.get(col, "")
-                if not isinstance(want, tuple):
-                    exp = _engine_partition_value(
-                        pf, want, st, session_tz, table_tz
-                    )
-                    if exp is NotImplemented:
-                        continue
-                    if str(have) != str(exp):
-                        return False
-                elif pf.transform in ("identity", "year", "month", "day",
-                                      "hour", "truncate"):
-                    # monotonic transforms: a value range maps to a
-                    # transform-value range (bucket is not monotonic)
-                    elo = _engine_partition_value(pf, lo, st, session_tz, table_tz)
-                    ehi = _engine_partition_value(pf, hi, st, session_tz, table_tz)
-                    if elo is NotImplemented or ehi is NotImplemented:
-                        continue
-                    if isinstance(elo, int):
-                        # path values are raw strings; numeric transform
-                        # outputs (year, truncate) compare as ints
-                        try:
-                            have_n = int(have)
-                        except (TypeError, ValueError):
-                            continue
-                        if have_n < elo or have_n > ehi:
-                            return False
-                        continue
-                    try:
-                        if bound_key(have) < bound_key(elo) or bound_key(
-                            have
-                        ) > bound_key(ehi):
-                            return False
-                    except TypeError:
-                        pass
-        return True
-
-    return [f for f in files if _file_might_match(f)]
-
-
-def _prune_files_by_partition_values(
-    meta: TableMetadata,
-    files: list[DataFile],
-    partition_values: dict[str, set],
-) -> list[DataFile]:
-    """Set-membership file pruning on stamped partition values (the
-    ``to_df(partition_values=)`` planning primitive).  Conservative like
-    ``_prune_files_by_filter``: an old-spec file missing the field, a
-    null/hive-default value, an unknown field name, or a bucket field
-    whose on-disk hash ordinals predate the murmur3 stamp all KEEP the
-    file.  Values compare stringified — partition path values are raw
-    strings."""
-    trusted = bucket_hash_trusted(meta)
-    by_name = {pf.name: pf for pf in meta.partition_spec}
-    preds: dict[str, set[str]] = {}
-    for name, allowed in partition_values.items():
-        pf = by_name.get(name)
-        if pf is None or (pf.transform == "bucket" and not trusted):
-            continue
-        preds[name] = {str(v) for v in allowed}
-
-    def _keep(f: DataFile) -> bool:
-        for name, allowed in preds.items():
-            if name not in f.partition:
-                continue  # old-spec layout: unprunable
-            have = f.partition[name]
-            if have is None or have == "__HIVE_DEFAULT_PARTITION__":
-                continue
-            if str(have) not in allowed:
-                return False
-        return True
-
-    return [f for f in files if _keep(f)]
-
-
-def _posdel_bounds(path: str) -> dict[str, list]:
-    """``file_name`` min/max of a staged position-delete file, from the
-    parquet footer (driver-side, no data read).  Empty dict when the
-    footer lacks statistics — the read side then keeps the delete
-    conservatively."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        idx = {
-            md.schema.column(i).name: i for i in range(md.num_columns)
-        }.get("file_name")
-        if idx is None:
-            return {}
-        mn = mx = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return {}
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-            mn = lo if mn is None else min(mn, lo)
-            mx = hi if mx is None else max(mx, hi)
-        return {"file_name": [mn, mx]} if mn is not None else {}
-    except Exception:
-        return {}
-
-
-def _delete_touches_scan(
-    d: DeleteFile, files: list[DataFile], basenames: list[str]
-) -> bool:
-    """Can this delete file affect any of the scanned data files?
-    Conservative (missing/incomparable bounds keep the file); dropping a
-    delete that cannot match is EXACT — its anti-join would remove
-    nothing from these files.
-
-    - position deletes name their victims: relevant iff some scanned
-      basename falls inside the delete's ``file_name`` bounds
-      (``basenames`` is sorted — one bisect, not a product loop);
-    - equality deletes apply by key to OLDER files: relevant iff some
-      scanned file with ``seq < d.seq`` intersects the delete's bounds
-      on every bounded equality column."""
-    import bisect
-
-    if d.content == "position":
-        b = d.bounds.get("file_name")
-        if not b or b[0] is None or b[1] is None:
-            return True
-        i = bisect.bisect_left(basenames, str(b[0]))
-        return i < len(basenames) and basenames[i] <= str(b[1])
-    cols = [c for c in d.equality_cols if d.bounds.get(c)]
-    if not cols:
-        return True
-    for f in files:
-        if f.seq >= d.seq:
-            continue  # the anti-join ignores this file anyway
-        hit = True
-        for c in cols:
-            dlo, dhi = d.bounds[c]
-            fb = f.bounds.get(c)
-            if (
-                fb is None
-                or fb[0] is None
-                or fb[1] is None
-                or dlo is None
-                or dhi is None
-            ):
-                continue  # unknown on one side: cannot exclude this file
-            try:
-                if bound_key(fb[1]) < bound_key(dlo) or bound_key(fb[0]) > bound_key(dhi):
-                    hit = False
-                    break
-            except TypeError:  # incomparable (mixed types): keep
-                continue
-        if hit:
-            return True
-    return False
-
-
-def bound_key(v: Any) -> Any:
-    """Normalize a value for manifest-bounds storage/comparison. Datetimes
-    become fixed-width naive-UTC strings (lexicographically ordered), so
-    footer stats (tz-aware micros), Spark-collected values (naive), and
-    persisted manifest bounds all compare consistently."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return v
-
-
-def _jsonable(v: Any) -> Any:
-    if isinstance(v, (int, float, str, bool)) or v is None:
-        return v
-    v = bound_key(v)
-    return v if isinstance(v, (int, float, str, bool)) else str(v)
 
 
 def _partition_values_from_path(path: str, spec: list[PartitionField]) -> dict[str, Any]:

@@ -21,11 +21,12 @@ fields derive from key columns, the set of touched partition tuples),
 prunes the ref head's files by key bounds and those partition tuples with
 no Spark job (the same planning model as Iceberg's manifest pruning), and
 returns the candidates plus one column-pruned ``_metadata`` semi-join
-yielding the ``(file_name, pos)`` of matched rows.  Partition fields over
-non-key columns never prune: an update may move a row between their
-partitions, so its old version can sit in a partition the batch does not
-touch.  The probe reads raw parquet: outstanding deletes are not
-applied, so an already-deleted row version still counts as a hit.
+yielding the ``(file_name, pos)`` of matched rows.  The pruning itself —
+typed key ranges, the overlap test and the partition trust rules,
+including that partition fields over non-key columns never prune — lives
+in ``lakehouse/pruning.py``.  The probe reads raw parquet: outstanding
+deletes are not applied, so an already-deleted row version still counts
+as a hit.
 
 **The sinks**, selected by the ``write.upsert.mode`` table property (or
 ``mode=``) and, for merge-on-read, the table's ``format-version`` (or
@@ -56,18 +57,15 @@ import os
 from dataclasses import dataclass
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..lakehouse import pruning
 from ..lakehouse.table import (
     _BROADCAST_BYTES,
     _est_row_width,
-    _tz_sensitive_fields,
-    bound_key,
-    bucket_hash_trusted,
     DataFile,
     LakeTable,
     TableMetadata,
-    table_write_tz,
 )
 from .project import conform_to_schema
 
@@ -79,21 +77,6 @@ class MergeStats:
     source_rows: int
     mode: str = "copy-on-write"
     delete_rows: int = 0
-
-
-def _bounds_overlap(f: DataFile, key_cols: list[str], lo: dict, hi: dict) -> bool:
-    for k in key_cols:
-        b = f.bounds.get(k)
-        if b is None:
-            return True  # no stats -> must assume overlap
-        mn, mx = b
-        lk = bound_key(lo.get(k))
-        hk = bound_key(hi.get(k))
-        if lk is not None and mx is not None and mx < lk:
-            return False
-        if hk is not None and mn is not None and mn > hk:
-            return False
-    return True
 
 
 def merge_into(
@@ -221,34 +204,23 @@ def _plan(
         return _Plan(None, [], None, src_keys)
     spark = source.sparkSession
     key_cols = meta.identifier_fields
-    prunable, pcols = _prunable_partitions(meta, spark)
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for k in key_cols:
-        aggs += [F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}")]
-    if pcols:
-        aggs.append(F.collect_set(F.struct(*pcols)).alias("_parts"))
+    types = pruning.column_types(meta.schema)
+    keyed = {k: types[k] for k in key_cols}
+    fields, parts = pruning.key_partition_agg(
+        meta, spark.conf.get("spark.sql.session.timeZone")
+    )
+    aggs = [F.count(F.lit(1)).alias("_n"), *pruning.key_range_aggs(keyed)]
+    if fields:
+        aggs.append(parts)
     stat = source.agg(*aggs).collect()[0]
     n_src = stat["_n"]
-    lo = {k: stat[f"_lo_{k}"] for k in key_cols}
-    hi = {k: stat[f"_hi_{k}"] for k in key_cols}
-    candidates = [f for f in files if _bounds_overlap(f, key_cols, lo, hi)]
-    if pcols:
+    ranges = pruning.key_ranges(stat, keyed)
+    candidates = [f for f in files if pruning.may_overlap(f.bounds, ranges, types)]
+    if fields:
         # a file whose partition tuple no source row maps to can't contain
         # matched keys; the touched set (partitions one CDC batch hits) is
         # tiny, so the driver-side intersection is cheap
-        touched = {
-            tuple(str(p[pf.name]) for pf in prunable) for p in stat["_parts"]
-        }
-        candidates = [
-            f
-            for f in candidates
-            # files written under an OLDER partition spec (spec evolution)
-            # record different field names — they are unprunable here,
-            # never prunable-to-zero
-            if not f.partition
-            or any(pf.name not in f.partition for pf in prunable)
-            or tuple(str(f.partition.get(pf.name)) for pf in prunable) in touched
-        ]
+        candidates = pruning.prune_by_partition_tuples(candidates, fields, stat["_parts"])
 
     key_schema = T.StructType([f for f in meta.schema.fields if f.name in key_cols])
     # byte-estimated, not row-counted: wide composite keys on many rows
@@ -271,40 +243,6 @@ def _plan(
             .select("file_name", "pos")
         )
     return _Plan(n_src, candidates, hits, src_keys)
-
-
-def _prunable_partitions(meta: TableMetadata, spark: SparkSession) -> tuple[list, list]:
-    """The partition fields a batch's partition tuples can prune files by,
-    and the source-side expressions computing them.
-
-    Only fields derived from identifier columns qualify: a key's partition
-    value never changes, so a file of an untouched partition cannot hold
-    it.  A field over a non-key column may differ between a row's old
-    version and the incoming one (an update moving the row, a delete
-    event with the column null), so pruning by it would miss the old row.
-
-    Layout-versioning guards: file partition values computed under a
-    DIFFERENT bucket hash (unstamped pre-murmur3 table) or a different
-    session timezone (temporal wall clocks) must not be compared against
-    values computed NOW — those fields drop out of the pruning tuple
-    (conservative; remaining fields still prune)."""
-    if not meta.partition_spec:
-        return [], []
-    schema = meta.schema
-    src_types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    tz_ok = spark.conf.get("spark.sql.session.timeZone") == table_write_tz(meta)
-    tz_unsafe = set() if tz_ok else {pf.name for pf in _tz_sensitive_fields(meta)}
-    bucket_ok = bucket_hash_trusted(meta)
-    prunable = [
-        pf
-        for pf in meta.partition_spec
-        if pf.source in src_types
-        and pf.source in meta.identifier_fields
-        and pf.name not in tz_unsafe
-        and (bucket_ok or pf.transform != "bucket")
-    ]
-    pcols = [pf.column(src_types.get(pf.source)).alias(pf.name) for pf in prunable]
-    return prunable, pcols
 
 
 def merge_dataframes(

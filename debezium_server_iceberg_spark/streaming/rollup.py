@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..lakehouse import LakeCatalog, LakeTable
-from ..lakehouse.table import bound_key
+from ..lakehouse.pruning import affected_files, collect_keys, column_types
 
 
 ROLLUP_SCHEMA = T.StructType(
@@ -25,57 +25,6 @@ ROLLUP_SCHEMA = T.StructType(
         T.StructField("sum_value", T.DoubleType(), True),
     ]
 )
-
-
-def affected_files(files, touched_keys):
-    """Driver-side manifest pruning: which files MAY contain a touched
-    ``(bucket_start, event_type)`` key, judged from per-file min/max bounds.
-
-    The naive check is a Python double loop — O(files x touched keys),
-    10^9 iterations at 10^5 files x 10^4 touched buckets. Here touched
-    bucket values are grouped by event_type and sorted once; each file
-    bisects the type range and then each candidate type's bucket list, so
-    the cost is O(F * T_types * log T) with tiny constants (T_types is the
-    number of DISTINCT event types in one micro-batch).
-
-    ``touched_keys``: iterable of ``(bucket_bound_key, event_type)``.
-    A file whose bounds omit a dimension is conservatively kept whenever
-    the remaining dimension matches (same semantics as the scalar check).
-    """
-    import bisect
-
-    by_type: dict = {}
-    for b, e in touched_keys:
-        by_type.setdefault(e, []).append(b)
-    if not by_type:
-        return []
-    for vals in by_type.values():
-        vals.sort()
-    types_sorted = sorted(by_type)
-    all_buckets = sorted(b for vals in by_type.values() for b in vals)
-
-    def _any_bucket_in(vals, bb) -> bool:
-        if bb is None:
-            return bool(vals)
-        lo = bisect.bisect_left(vals, bb[0])
-        return lo < len(vals) and vals[lo] <= bb[1]
-
-    out = []
-    for f in files:
-        bb = f.bounds.get("bucket_start")
-        be = f.bounds.get("event_type")
-        if be is None:
-            hit = _any_bucket_in(all_buckets, bb)
-        else:
-            lo = bisect.bisect_left(types_sorted, be[0])
-            hi = bisect.bisect_right(types_sorted, be[1])
-            hit = any(
-                _any_bucket_in(by_type[types_sorted[i]], bb)
-                for i in range(lo, hi)
-            )
-        if hit:
-            out.append(f)
-    return out
 
 
 class ContinuousRollup:
@@ -123,14 +72,12 @@ class ContinuousRollup:
         keys = ["bucket_start", "event_type"]
         delta = self._batch_rollup(events).cache()
         try:
-            touched = delta.select(*keys).dropDuplicates(keys).collect()
+            types = column_types(ROLLUP_SCHEMA)
+            touched = collect_keys(delta, {k: types[k] for k in keys})
             if not touched:
                 return
             files = self.table.current_files()
-            affected = affected_files(
-                files,
-                [(bound_key(r["bucket_start"]), r["event_type"]) for r in touched],
-            )
+            affected = affected_files(files, touched)
             if affected:
                 current = self.table.scan_files(spark, affected)
                 touched_df = F.broadcast(delta.select(*keys).dropDuplicates(keys))

@@ -9,8 +9,28 @@ __deleted — FIXTURES.md §0).
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
+import time
 from typing import Any
+
+@contextlib.contextmanager
+def process_tz(tz: str):
+    """Run the block with the driver PROCESS timezone set to ``tz`` (the
+    Spark session timezone is left alone); restored in ``finally``."""
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+
 
 _TYPE_MAP = {
     int: "int64",

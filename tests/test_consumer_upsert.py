@@ -11,7 +11,7 @@ from debezium_server_iceberg_spark.functions.incremental import (
     reset_epoch,
 )
 from debezium_server_iceberg_spark.streaming.consumer import ChangeConsumer
-from tests.fixtures import customer_event, make_event
+from tests.fixtures import customer_event, make_event, process_tz
 
 DEST = "testc.inventory.customers_upsert"
 TABLE = "testc_inventory_customers_upsert"
@@ -392,6 +392,84 @@ def test_merge_partition_pruning(spark, warehouse, fmt, mode):
     got = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
     assert all(got[i] == 1000 + i for i in ids)
     assert all(got[i] == i for i in range(30) if i not in ids)
+
+
+@pytest.mark.parametrize(
+    "fmt,mode",
+    [("3", "merge-on-read"), ("2", "copy-on-write"), ("2", "merge-on-read")],
+    ids=["v3-position", "v2-copy-on-write", "v2-equality"],
+)
+def test_merge_decimal_keys(spark, warehouse, fmt, mode):
+    """DECIMAL keys prune and merge by their numeric order: bounds persist
+    as exact strings, and every planner compares them as Decimals (not as
+    strings, where "150.00" < "99.00")."""
+    from decimal import Decimal
+
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    schema = "id decimal(10,2), v long, __op string"
+
+    def rows(ids, v):
+        return spark.createDataFrame([(Decimal(i), v, "u") for i in ids], schema)
+
+    t = LakeCatalog(warehouse).create_table(
+        "ns", f"dec_{fmt}_{mode[:1]}", rows([], 0).schema,
+        identifier_fields=["id"], properties={"format-version": fmt},
+    )
+    t.append(rows(range(100, 151), 0))
+    t.append(rows(range(20, 41), 0))
+    merge_into(t, rows(range(99, 121), 1), mode=mode)
+
+    def check():
+        got = t.to_df(spark).collect()
+        assert len(got) == 73 and len({r["id"] for r in got}) == 73
+        assert {r["id"] for r in got if r["v"] == 1} == {
+            Decimal(i) for i in range(99, 121)
+        }
+
+    check()
+    if t.current_deletes():
+        t.materialize_deletes(spark)
+        assert not t.current_deletes()
+        check()
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize(
+    "fmt,mode",
+    [("3", "merge-on-read"), ("2", "copy-on-write")],
+    ids=["v3-position", "v2-copy-on-write"],
+)
+def test_merge_timestamp_keys_any_process_tz(spark, warehouse, fmt, mode, tz):
+    """Timestamp keys plan by instant whatever the driver process timezone
+    (the session stays on UTC): collected key ranges are tz-free, so the
+    file holding the merged keys stays a candidate."""
+    import datetime as dt
+
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    schema = "id timestamp, v long, __op string"
+
+    def rows(hours, v):
+        return spark.createDataFrame(
+            [(base + dt.timedelta(hours=h), v, "u") for h in hours], schema
+        )
+
+    with process_tz(tz):
+        t = LakeCatalog(warehouse).create_table(
+            "ns", f"ts_{fmt}", rows([], 0).schema,
+            identifier_fields=["id"], properties={"format-version": fmt},
+        )
+        t.append(rows(range(100, 120), 0))
+        t.append(rows(range(0, 20), 0))
+        stats = merge_into(t, rows(range(100, 103), 1), mode=mode)
+        got = t.to_df(spark).collect()
+    assert stats.candidate_files == 1
+    assert len(got) == 40 and len({r["id"] for r in got}) == 40
+    assert sum(r["v"] for r in got) == 3
 
 
 @pytest.mark.parametrize(

@@ -207,7 +207,7 @@ def test_expire_snapshots_deletes_orphans(spark, warehouse):
     t = cat.create_table("ns", "te", SCHEMA)
     t.append(spark.createDataFrame([(1, "a", None)], SCHEMA))
     t.overwrite(spark.createDataFrame([(2, "b", None)], SCHEMA))
-    old_files = {f.path for f in t._manifest_files(t.metadata(), t.metadata().snapshots[0].snapshot_id)}
+    old_files = {f.path for f in t._manifest_entry(t.metadata(), t.metadata().snapshots[0].snapshot_id)[0]}
     assert all(os.path.exists(p) for p in old_files)
     deleted = t.expire_snapshots(keep_last=1)
     assert deleted == len(old_files) and deleted > 0
@@ -756,6 +756,40 @@ def test_changed_rows_delete_images_decimal_keys(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_row_filter_naive_datetime_any_process_tz(spark, tmp_path, tz):
+    """A naive datetime filter value reads as PySpark reads it, in bounds
+    pruning as in the residual filter, whatever the driver process
+    timezone (the session stays on UTC): a process-local instant on a
+    ``timestamp`` column — so the pruned read equals the plain filter —
+    and a wall clock on ``timestamp_ntz``."""
+    import datetime as dt
+
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from tests.fixtures import process_tz
+
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    schema = "id timestamp, wall timestamp_ntz"
+    t = LakeCatalog(str(tmp_path / "wh")).create_table(
+        "ns", "tsf", spark.createDataFrame([], schema).schema,
+        identifier_fields=["id"], sort_order=["wall"],
+    )
+    for hours in (range(100, 120), range(0, 20)):
+        inst = [base + dt.timedelta(hours=h) for h in hours]
+        t.append(spark.createDataFrame(
+            [(i, i.replace(tzinfo=None)) for i in inst], schema
+        ))
+    naive = dt.datetime(2024, 1, 5, 0, 0)
+    with process_tz(tz):
+        pruned = t.to_df(spark, row_filter={"id": naive}).count()
+        plain = t.to_df(spark).filter(F.col("id") == F.lit(naive)).count()
+        ranged = t.to_df(spark, row_filter={"id": (naive, naive)}).count()
+        wall = t.to_df(spark, row_filter={"wall": dt.datetime(2024, 1, 5, 5)})
+        walls = [r["wall"] for r in wall.collect()]
+    assert pruned == plain == ranged == (1 if tz != "UTC" else 0)
+    assert walls == [dt.datetime(2024, 1, 5, 5)]
+
+
 def test_row_filter_physical_scan_excludes_pruned_files(spark, tmp_path):
     """The pruning is real file-list surgery, not advisory: a pruned
     file's name must not appear anywhere in the physical scan plan."""
@@ -915,13 +949,17 @@ def test_minhash_remove_docs_pruned_probe_skips_delete_file(spark, warehouse):
           {f.partition[next(iter(f.partition))] for f in b1_only}}
     # direct check of the planning predicate: the equality-delete file
     # does not touch a scan restricted to b1-only files
-    from debezium_server_iceberg_spark.lakehouse.table import _delete_touches_scan
+    from debezium_server_iceberg_spark.lakehouse.pruning import (
+        column_types,
+        delete_touches_scan,
+    )
     import os as _os
 
     dels = idx.table.current_deletes()
     assert dels  # remove_docs really committed a delete file
     names = sorted(_os.path.basename(f.path) for f in b1_only)
-    assert all(not _delete_touches_scan(d, b1_only, names) for d in dels)
+    types = column_types(idx.table.metadata().schema)
+    assert all(not delete_touches_scan(d, b1_only, names, types) for d in dels)
 
 
 def test_single_file_fast_path_requires_estimate_headroom(

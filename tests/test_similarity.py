@@ -145,12 +145,55 @@ def test_pq_encode_rejects_incomplete_external_codebooks(spark):
         for r in pq_encode(emb, dim=64, m=8, ks=4).collect()
     }
     assert ext == internal
-    # drop one (subspace, code) row -> loud failure, not a phantom centroid
+    # a subspace with no entries at all -> loud failure
     from pyspark.sql import functions as F
 
-    holey = cbs.filter(~((F.col("_s") == 3) & (F.col("code_id") == 2)))
+    holey = cbs.filter(F.col("_s") != 3)
     with pytest.raises(ValueError, match="incomplete"):
         pq_encode(emb, dim=64, m=8, ks=4, codebooks=holey)
+
+
+def test_pq_encode_sparse_external_codebooks(spark):
+    # a caller codebook missing some (subspace, code_id) cells encodes
+    # each vector to its nearest PRESENT code per subspace — a missing
+    # cell is masked out of that subspace's argmin, never scored as an
+    # all-zeros phantom centroid
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR
+    from debezium_server_iceberg_spark.functions.pq import (
+        pq_codebooks,
+        pq_encode,
+        seq_fold_d2_batch,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    m, dsub = 8, 8
+    cbs = pq_codebooks(emb, dim=64, m=m, ks=4)
+    # subspace s keeps only the codes != s % 4; subspace 0 keeps code 2 only
+    sparse = cbs.filter(
+        ((F.col("_s") == 0) & (F.col("code_id") == 2))
+        | ((F.col("_s") > 0) & (F.col("code_id") != F.col("_s") % 4))
+    )
+    present: dict = {}
+    for r in sparse.collect():
+        present.setdefault(r["_s"], {})[r["code_id"]] = np.asarray(r["_cent"])
+    got = {
+        (r["vec_id"], r["_s"]): r["code"]
+        for r in pq_encode(emb, dim=64, m=m, ks=4, codebooks=sparse).collect()
+    }
+    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+            for r in emb.select("vec_id", "embedding").collect()}
+    assert len(got) == len(vecs) * m
+    for vid, v in vecs.items():
+        for s in range(m):
+            ids = sorted(present[s])
+            d2 = seq_fold_d2_batch(
+                v[None, s * dsub : (s + 1) * dsub],
+                np.stack([present[s][c] for c in ids]),
+            )[0]
+            assert got[vid, s] == ids[int(np.argmin(d2))]
+    assert {got[vid, 0] for vid in vecs} == {2}
 
 
 def test_pq_adc_orders_scores_and_excludes_self(spark):

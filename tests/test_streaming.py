@@ -248,6 +248,31 @@ def test_continuous_rollup_incremental(spark, tmp_path):
     }
 
 
+def test_continuous_rollup_non_utc_process(spark, tmp_path):
+    """The rollup's touched buckets are matched to file bounds by instant,
+    whatever the driver process timezone (the session stays on UTC): a
+    late event folds into its bucket's existing row instead of landing
+    beside it."""
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from debezium_server_iceberg_spark.streaming.rollup import ContinuousRollup
+    from tests.fixtures import process_tz
+
+    with process_tz("America/New_York"):
+        roll = ContinuousRollup(LakeCatalog(str(tmp_path / "wh")))
+        roll.update(_events_df(spark, [
+            (1, _ts("2024-01-01T10:05:00"), 1, "click", 1.0),
+            (2, _ts("2024-01-01T11:05:00"), 1, "view", 4.0),
+        ]))
+        roll.update(_events_df(spark, [
+            (3, _ts("2024-01-01T10:59:00"), 2, "click", 5.0),
+        ]))
+        got = sorted(
+            (r["bucket_start"].hour, r["event_type"], r["n"], r["sum_value"])
+            for r in roll.to_df(spark).collect()
+        )
+    assert got == [(10, "click", 2, 6.0), (11, "view", 1, 4.0)]
+
+
 def test_continuous_rollup_prunes_untouched_files(spark, tmp_path):
     """An update touching 1 bucket must leave every other data file's path
     unchanged in the new manifest (file-pruned delta, not a table rewrite)."""

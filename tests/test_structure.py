@@ -4,7 +4,8 @@ overlapped Spark job and every commit goes through the same drained,
 property-inheriting, abort-on-failure path; and ONE upsert planner
 (``operators/merge.py:_plan``), so every upsert sink that reads existing
 files answers "which rows of which files does this batch hit?" the same
-way."""
+way; and ONE pruning model (``lakehouse/pruning.py``), so every planner
+reads manifest bounds with the same typed comparisons."""
 
 import ast
 import pathlib
@@ -68,3 +69,17 @@ def test_one_upsert_planner():
 
     sites = [s for s in _sites(planner_call) if s[0] == "operators/merge.py"]
     assert len(sites) == 2 and set(sites) == {("operators/merge.py", "_plan")}
+
+
+def test_one_pruning_model():
+    def reads_bounds(n) -> bool:
+        if isinstance(n, ast.Subscript):
+            owner = n.value
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "get":
+            owner = n.func.value
+        else:
+            return False
+        return isinstance(owner, ast.Attribute) and owner.attr == "bounds"
+
+    sites = _sites(reads_bounds)
+    assert sites and {module for module, _ in sites} == {"lakehouse/pruning.py"}
