@@ -44,13 +44,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .avro_io import read_container, write_container
-from .table import LakeTable
+from .table import LakeTable, file_lookup, inherit_lineage, lineage_read_schema
 
 # ---------------------------------------------------------------- schema
 
@@ -352,6 +353,8 @@ def _days_since_epoch(iso: str) -> int:
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# a path's URI scheme and leading slashes, stripped before paths compare
+_SCHEME_PREFIX = "^([a-zA-Z]+:)?/+"
 
 
 def _export_partition_field(pf, src: dict, field_id: int):
@@ -1314,8 +1317,6 @@ def read_iceberg_table(
     version hint — see :func:`plan_iceberg_scan`; it is how
     catalog-resolved reads (``rest_catalog.read_table_by_name``) honor
     the catalog's ``metadata-location`` exactly."""
-    from .table import LAST_SEQ_COL, ROW_ID_COL
-
     plan = plan_iceberg_scan(
         location, snapshot_id, partition_filter, metadata_file=metadata_file
     )
@@ -1326,15 +1327,7 @@ def read_iceberg_table(
     spark_schema = iceberg_schema_to_spark(schema_json)
     if lineage and plan["doc"]["format-version"] < 3:
         raise ValueError("row lineage requires a format-version 3 export")
-    read_schema = spark_schema
-    if lineage:
-        read_schema = T.StructType(
-            list(spark_schema.fields)
-            + [
-                T.StructField(ROW_ID_COL, T.LongType()),
-                T.StructField(LAST_SEQ_COL, T.LongType()),
-            ]
-        )
+    read_schema = lineage_read_schema(spark_schema) if lineage else spark_schema
     if not data_files:
         return spark.createDataFrame([], read_schema)
     df = spark.read.schema(read_schema).parquet(
@@ -1355,7 +1348,7 @@ def read_iceberg_table(
     # literally named "my%20dir" would otherwise decode to "my dir" on
     # one side only and every delete join would silently miss.
     def _norm_uri(col: F.Column) -> F.Column:
-        raw = F.regexp_replace(col, "^([a-zA-Z]+:)?/+", "")
+        raw = F.regexp_replace(col, _SCHEME_PREFIX, "")
         # try_url_decode is FORM decoding ('+' -> space), but URI paths
         # leave literal '+' unencoded — pre-escape it so a warehouse path
         # containing '+' round-trips instead of silently mismatching the
@@ -1367,9 +1360,10 @@ def read_iceberg_table(
         )
 
     def _norm(col: F.Column) -> F.Column:
-        return F.concat(
-            F.lit("/"), F.regexp_replace(col, "^([a-zA-Z]+:)?/+", "")
-        )
+        return F.concat(F.lit("/"), F.regexp_replace(col, _SCHEME_PREFIX, ""))
+
+    def _norm_path(path: str) -> str:
+        return "/" + re.sub(_SCHEME_PREFIX, "", path)
 
     df = df.withColumn(
         "_fpath", _norm_uri(F.col("_metadata.file_path"))
@@ -1433,17 +1427,20 @@ def read_iceberg_table(
             & (F.col("_pos") == F.col("_del_pos")),
             "left_anti",
         )
+    if eq_deletes or lineage:
+        # per-file data sequence and first row id by normalized path: one
+        # folded literal map, not a side-table join
+        per_file = file_lookup(
+            F.col("_fpath"),
+            {_norm_path(p): {"seq": seq, "frid": frid} for p, seq, frid in data_files},
+            "struct<seq:bigint,frid:bigint>",
+        )
+        df = df.withColumn("_seq", per_file.seq).withColumn("_frid", per_file.frid)
     if eq_deletes:
         id_to_name = {f["id"]: f["name"] for f in schema_json["fields"]}
-        smap = spark.createDataFrame(
-            data_files, "_fpath2 string, _dataseq long, _frid0 long"
-        ).select(_norm(F.col("_fpath2")).alias("_fpath2"), "_dataseq")
-        df = df.join(
-            F.broadcast(smap), F.col("_fpath") == F.col("_fpath2")
-        ).drop("_fpath2")
         # one anti-join per distinct key-column set, not per delete FILE:
         # all delete files sharing equality_ids read in a single multi-file
-        # scan, each carrying its own sequence via a filename->seq map
+        # scan, each carrying its own sequence via a path->seq lookup
         by_ids: dict[tuple, list[tuple[str, int]]] = {}
         for path, dseq, ids in eq_deletes:
             by_ids.setdefault(tuple(ids), []).append((path, dseq))
@@ -1452,38 +1449,23 @@ def read_iceberg_table(
             key_schema = T.StructType(
                 [f for f in spark_schema.fields if f.name in cols]
             )
-            dmap = spark.createDataFrame(
-                [(os.path.basename(p), s) for p, s in group],
-                "_dname string, _dseq long",
-            )
             dels = (
                 spark.read.schema(key_schema)
                 .parquet(*[p for p, _ in group])
-                .withColumn(
-                    "_dname",
-                    F.element_at(F.split(F.input_file_name(), "/"), -1),
+                .select(
+                    *[F.col(c).alias(f"_d_{c}") for c in cols],
+                    file_lookup(
+                        _norm_uri(F.col("_metadata.file_path")),
+                        {_norm_path(p): s for p, s in group},
+                        "bigint",
+                    ).alias("_dseq"),
                 )
-                .join(F.broadcast(dmap), "_dname")
-                .select(*[F.col(c).alias(f"_d_{c}") for c in cols], "_dseq")
             )
-            cond = F.col("_dataseq") < F.col("_dseq")
+            cond = F.col("_seq") < F.col("_dseq")
             for c in cols:
                 cond = cond & (F.col(c) == F.col(f"_d_{c}"))
             df = df.join(F.broadcast(dels), cond, "left_anti")
-    keep = [f.name for f in spark_schema.fields]
-    if lineage:
-        fmap = spark.createDataFrame(
-            data_files, "_fp string, _seq long, _frid long"
-        ).select(_norm(F.col("_fp")).alias("_fp"), "_seq", "_frid")
-        df = df.join(F.broadcast(fmap), F.col("_fpath") == F.col("_fp"))
-        df = df.withColumn(
-            ROW_ID_COL,
-            F.coalesce(F.col(ROW_ID_COL), F.col("_frid") + F.col("_pos")),
-        ).withColumn(
-            LAST_SEQ_COL, F.coalesce(F.col(LAST_SEQ_COL), F.col("_seq"))
-        )
-        keep = keep + [ROW_ID_COL, LAST_SEQ_COL]
-    return df.select(*keep)
+    return (inherit_lineage(df) if lineage else df).select(*read_schema.fieldNames())
 
 
 def java_avro_records(spark: SparkSession, path: str) -> list[str]:

@@ -201,12 +201,6 @@ class NessieCatalogClient:
             self._branch = cfg.get("defaultBranch", "main")
         return self._branch
 
-    def _branch_head(self) -> str:
-        ref = self._call(
-            "GET", f"/trees/{_urlparse.quote(self.branch(), safe='')}"
-        )
-        return ref.get("reference", {}).get("hash", "")
-
     def _get_content(self, elements: list[str]) -> tuple[dict | None, str]:
         """(content-or-None, branch-hash) in ONE round-trip — the v2
         GetMultipleContents POST body carries the keys, so no key path

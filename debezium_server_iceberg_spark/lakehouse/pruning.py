@@ -143,24 +143,38 @@ def encode_ranges(ranges: dict[str, tuple], types: dict) -> dict[str, list]:
     }
 
 
+def _footer_keys(st, scale: int, dt: T.DataType) -> tuple:
+    """A footer statistic's min and max as keys.  Decimals decode from the
+    raw unscaled value (an int, or big-endian two's complement bytes):
+    pyarrow reads no statistics of INT32/INT64-backed decimals."""
+    if isinstance(dt, T.DecimalType):
+        def unscaled(raw) -> Decimal:
+            n = raw if isinstance(raw, int) else int.from_bytes(raw, "big", signed=True)
+            return Decimal(f"{n}E-{scale}")
+
+        return unscaled(st.min_raw), unscaled(st.max_raw)
+    return key(st.min, dt), key(st.max, dt)
+
+
 def footer_ranges(md, cols: dict) -> dict[str, tuple]:
     """Key ranges of the columns ``cols`` (name -> type) from a parquet
     footer (pyarrow ``FileMetaData``), over all row groups.  A column
     lacking statistics in any row group gets no range.  Raises when pyarrow
-    cannot read a statistic's logical type (e.g. decimals) — callers fall
-    back to :func:`key_range_aggs`."""
+    cannot read a statistic's logical type — callers fall back to
+    :func:`key_range_aggs`."""
     index = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out = {}
     for c, dt in cols.items():
         ci = index.get(c)
         if ci is None:
             continue
+        scale = md.schema.column(ci).scale
         lo = hi = None
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(ci).statistics
             a = b = None
             if st is not None and st.has_min_max:
-                a, b = key(st.min, dt), key(st.max, dt)
+                a, b = _footer_keys(st, scale, dt)
             if a is None or b is None:
                 lo = None
                 break

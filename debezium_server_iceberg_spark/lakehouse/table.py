@@ -47,6 +47,7 @@ import os
 import shutil
 import time
 import uuid as uuidlib
+import zlib
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Callable, Iterable
 
@@ -766,7 +767,7 @@ class LakeTable:
             files: list[DataFile] = []
             for path in sorted(paths):
                 # may raise on logical types this pyarrow can't read (e.g.
-                # Variant, decimal statistics) -> Spark stats fallback
+                # Variant) -> Spark stats fallback
                 md = pq.ParquetFile(path).metadata
                 ranges = pruning.footer_ranges(md, stats)
                 files.append(
@@ -785,7 +786,7 @@ class LakeTable:
         newly = spark.read.parquet(staging)
         stats = {c: t for c, t in stats.items() if c in newly.columns}
         stat_rows = (
-            newly.withColumn("_file", F.input_file_name())
+            newly.withColumn("_file", F.col("_metadata.file_path"))
             .groupBy("_file")
             .agg(F.count(F.lit(1)).alias("_rows"), *pruning.key_range_aggs(stats))
             .collect()
@@ -946,14 +947,17 @@ class LakeTable:
         drop_deletes: bool = False,
         preserve_layout: bool = False,
         preserve_lineage: bool = False,
+        meta: TableMetadata | None = None,
     ) -> int:
         """RowDelta-style commit: atomically swap rewritten files
         (IcebergTableOperator.java:218-224). Used by the MERGE operator.
         ``preserve_lineage``: physically materialize ``_row_id`` /
         ``_last_updated_sequence_number`` columns present on ``add_df``
-        (rewrite paths only — see ``_stage_write``).  Returns the number
-        of rows added, read from the staged files' own stats."""
-        meta = self.metadata()
+        (rewrite paths only — see ``_stage_write``).  ``meta``: the caller's
+        metadata to stage with instead of a re-read (the CAS still reads).
+        Returns the number of rows added, read from the staged files' own
+        stats."""
+        meta = meta if meta is not None else self.metadata()
 
         def stage_data() -> list[DataFile]:
             return self._stage_write(
@@ -977,6 +981,7 @@ class LakeTable:
         summary: dict | None = None,
         delete_positions_df: DataFrame | None = None,
         branch: str = "main",
+        meta: TableMetadata | None = None,
     ) -> tuple[int, int]:
         """Merge-on-read upsert commit: append new data files AND delete
         files in ONE atomic snapshot — no existing data file is rewritten.
@@ -989,8 +994,9 @@ class LakeTable:
         position-delete file instead (v3 deletion-vector semantics,
         IcebergConfig.java:106-108 / PartitioningDVWriter).  Both may be
         combined; the data, position-delete and equality-delete writes
-        stage concurrently.  Returns (added_rows, delete_rows)."""
-        meta = self.metadata()
+        stage concurrently.  ``meta`` as in :meth:`commit_delta`.  Returns
+        (added_rows, delete_rows)."""
+        meta = meta if meta is not None else self.metadata()
         key_cols = [
             c for c in meta.identifier_fields if c in {f.name for f in meta.schema.fields}
         ]
@@ -1296,26 +1302,12 @@ class LakeTable:
             return 0
         types = pruning.column_types(meta.schema)
         eq_dels = [d for d in deletes if d.content != "position"]
-        pos_dels = [d for d in deletes if d.content == "position"]
-        # position deletes name their victims exactly: one tiny read of the
-        # delete files' distinct file_name column (bounded by delete rows)
-        pos_names: set[str] = set()
-        if pos_dels:
-            pos_names = {
-                r["file_name"]
-                for r in spark.read.schema("file_name string, pos long")
-                .parquet(*[d.path for d in pos_dels])
-                .select("file_name")
-                .distinct()
-                .collect()
-            }
-
-        def hit(f: DataFile) -> bool:
-            if os.path.basename(f.path) in pos_names:
-                return True
-            return any(pruning.delete_may_touch(d, [f], types) for d in eq_dels)
-
-        affected = [f for f in files if hit(f)]
+        pos_names = _pos_delete_targets([d for d in deletes if d.content == "position"])
+        affected = [
+            f for f in files
+            if os.path.basename(f.path) in pos_names
+            or any(pruning.delete_may_touch(d, [f], types) for d in eq_dels)
+        ]
         ln = self._lineage_on(meta)
         clean = (
             self._read(spark, meta, affected, deletes, lineage=ln)
@@ -1328,6 +1320,7 @@ class LakeTable:
             summary={"operation_detail": "materialize-deletes", "input_files": len(affected)},
             drop_deletes=True,
             preserve_lineage=ln,
+            meta=meta,
         )
         return len(affected)
 
@@ -1576,21 +1569,8 @@ class LakeTable:
                 .parquet(*[d.path for d in eq_dels])
                 .select(*key_cols)
             )
-        pos_dels = [d for d in new_dels if d.content == "position"]
-        pos_targets: list[DataFile] = []
-        if pos_dels:
-            import pyarrow.parquet as _pq
-
-            targeted = set()
-            for d in pos_dels:
-                targeted.update(
-                    _pq.read_table(d.path, columns=["file_name"])
-                    .column("file_name").to_pylist()
-                )
-            pos_targets = [
-                f for f in old_files
-                if os.path.basename(f.path) in targeted
-            ]
+        targeted = _pos_delete_targets([d for d in new_dels if d.content == "position"])
+        pos_targets = [f for f in old_files if os.path.basename(f.path) in targeted]
         # keys of targeted/removed files over-approximate the victims; the
         # anti-join against live keys screens out survivors
         for fl in (pos_targets, removed):
@@ -1686,104 +1666,85 @@ class LakeTable:
         deletes: list[DeleteFile],
         lineage: bool = False,
     ) -> DataFrame:
-        """Scan plan: ONE multi-file parquet read; per-file sequence numbers
-        attached via a broadcast (filename -> seq) map; equality-delete rows
-        removed with a single anti-join on (key columns, data.seq < del.seq).
-        The delete side is a second small parquet read, broadcast when its
-        manifest-known row count is CDC-batch-sized — so the whole
-        merge-on-read scan is scan + broadcast-anti-join, no shuffle of the
-        data side (Iceberg's read-path model for equality deletes)."""
+        """Scan plan: ONE multi-file parquet read and no side-table job.
+        File name and row index come from the scan's deterministic
+        ``_metadata`` column, so a filter the caller adds is pushed into
+        the parquet scan.  Position deletes are an anti-join on (file name,
+        row index); equality deletes one anti-join on (key columns,
+        data.seq < del.seq) against a second small parquet read.  Delete
+        sides are broadcast when manifest stats say they are small, so a
+        merge-on-read scan never shuffles its data side (Iceberg's
+        read-path model).  Per-file sequence numbers and first row ids
+        (:func:`file_lookup`) are attached only when something reads them."""
         schema = meta.schema
-        read_schema = schema
-        if lineage:
-            # rewritten files materialize the lineage columns physically;
-            # schema-evolution read yields nulls for files that did not —
-            # the in-plan inheritance expression fills those below
-            read_schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField(ROW_ID_COL, T.LongType()),
-                    T.StructField(LAST_SEQ_COL, T.LongType()),
-                ]
-            )
+        read_schema = lineage_read_schema(schema) if lineage else schema
         if not files:
             return spark.createDataFrame([], read_schema)
 
         key_cols = [c for c in meta.identifier_fields if c in {f.name for f in schema.fields}]
-        # a delete file is relevant only if some scanned file is older
+        # a delete file is relevant only if some scanned file is older and
+        # it can touch one: a PRUNED scan (partition_values / row_filter
+        # point lookups) must not pay tombstone-read amplification for
+        # delete files that cannot touch its kept files — position deletes
+        # name files explicitly (file_name bounds vs kept basenames),
+        # equality deletes are range-checked per key column; anything
+        # without usable bounds is kept
         min_seq = min(f.seq for f in files)
-        pos_relevant = [
-            d for d in deletes if d.content == "position" and d.seq > min_seq
-        ]
-        relevant = (
-            [d for d in deletes if d.content != "position" and d.seq > min_seq]
-            if key_cols
-            else []
-        )
-        # bounds-based delete pruning: a PRUNED scan (partition_values /
-        # row_filter point lookups) must not pay tombstone-read
-        # amplification for delete files that cannot touch its kept
-        # files — position deletes name files explicitly (file_name
-        # bounds vs kept basenames), equality deletes are range-checked
-        # per key column; anything without usable bounds is kept
         basenames = sorted(os.path.basename(f.path) for f in files)
         types = pruning.column_types(schema)
-        pos_relevant = [
-            d for d in pos_relevant
-            if pruning.delete_touches_scan(d, files, basenames, types)
+        touching = [
+            d for d in deletes
+            if d.seq > min_seq
+            and (key_cols or d.content == "position")
+            and pruning.delete_touches_scan(d, files, basenames, types)
         ]
-        relevant = [
-            d for d in relevant
-            if pruning.delete_touches_scan(d, files, basenames, types)
-        ]
+        pos_relevant = [d for d in touching if d.content == "position"]
+        relevant = [d for d in touching if d.content != "position"]
 
         df = spark.read.schema(read_schema).parquet(*[f.path for f in files])
         if not relevant and not pos_relevant and not lineage:
             return df
 
-        fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-        if lineage:
-            # parquet row position, captured before any anti-join drops rows
-            df = df.withColumn("_pos", F.col("_metadata.row_index"))
+        # file identity and row position from the scan's own metadata:
+        # deterministic columns, so a filter the caller adds on top is
+        # pushed through them into the parquet scan
+        df = df.withColumn("_fname", F.col("_metadata.file_name")).withColumn(
+            "_pos", F.col("_metadata.row_index")
+        )
         if pos_relevant:
             # positional skipping: anti-join on (file name, parquet row
             # index) — integer compare per row, no key-tuple comparison
-            if "_pos" not in df.columns:
-                df = df.withColumn("_pos", F.col("_metadata.row_index"))
             pdels = spark.read.schema("file_name string, pos long").parquet(
                 *[d.path for d in pos_relevant]
             )
             if sum(d.rows for d in pos_relevant) * 64 <= _BROADCAST_BYTES:
                 pdels = F.broadcast(pdels)
-            df = df.withColumn("_fname", fname).join(
+            df = df.join(
                 pdels,
                 (F.col("_fname") == F.col("file_name"))
                 & (F.col("_pos") == F.col("pos")),
                 "left_anti",
             )
-        else:
-            df = df.withColumn("_fname", fname)
-        fmap = spark.createDataFrame(
-            [
-                (os.path.basename(f.path), f.seq, f.first_row_id)
-                for f in files
-            ],
-            "_fname string, _seq long, _frid long",
-        )
-        df = df.join(F.broadcast(fmap), "_fname")
+        if lineage or relevant:
+            per_file = file_lookup(
+                F.col("_fname"),
+                {os.path.basename(f.path): {"seq": f.seq, "frid": f.first_row_id} for f in files},
+                "struct<seq:bigint,frid:bigint>",
+            )
+            df = df.withColumn("_seq", per_file.seq).withColumn("_frid", per_file.frid)
 
         if relevant:
             key_schema = T.StructType([f for f in schema.fields if f.name in key_cols])
-            dels = spark.read.schema(key_schema).parquet(*[d.path for d in relevant])
-            dmap = spark.createDataFrame(
-                [(os.path.basename(d.path), d.seq) for d in relevant],
-                "_fname string, _dseq long",
-            )
             dels = (
-                dels.withColumn("_fname", fname)
-                .join(F.broadcast(dmap), "_fname")
+                spark.read.schema(key_schema)
+                .parquet(*[d.path for d in relevant])
                 .select(
-                    *[F.col(c).alias(f"_d_{c}") for c in key_cols], "_dseq"
+                    *[F.col(c).alias(f"_d_{c}") for c in key_cols],
+                    file_lookup(
+                        F.col("_metadata.file_name"),
+                        {os.path.basename(d.path): d.seq for d in relevant},
+                        "bigint",
+                    ).alias("_dseq"),
                 )
             )
             # broadcast the delete side when manifest stats say it's small
@@ -1795,18 +1756,7 @@ class LakeTable:
                 cond = cond & (F.col(c) == F.col(f"_d_{c}"))
             df = df.join(dels, cond, "left_anti")
 
-        keep = [f.name for f in schema.fields]
-        if lineage:
-            # v3 inheritance: a materialized value (rewritten file) wins;
-            # otherwise first_row_id + position / the file's sequence number
-            df = df.withColumn(
-                ROW_ID_COL,
-                F.coalesce(F.col(ROW_ID_COL), F.col("_frid") + F.col("_pos")),
-            ).withColumn(
-                LAST_SEQ_COL, F.coalesce(F.col(LAST_SEQ_COL), F.col("_seq"))
-            )
-            keep = keep + [ROW_ID_COL, LAST_SEQ_COL]
-        return df.select(*keep)
+        return (inherit_lineage(df) if lineage else df).select(*read_schema.fieldNames())
 
     def row_count(self) -> int:
         """PHYSICAL data rows (Iceberg's total-records semantics): does not
@@ -2005,9 +1955,12 @@ def _uniquify_staged(staging: str) -> None:
     PER FILE, not per commit: one task writing several hive partition
     directories emits the same ``part-NNNNN-<jobUUID>`` name in each dir,
     and several read-path maps key on basename (``_read``'s file→seq/
-    first_row_id broadcast, delete-file resolution, export's
+    first_row_id lookup, position-delete ``file_name`` matching, export's
     name→path map) — a commit-scoped tag left those colliding, which
-    QUADRUPLED rows in lineage/MoR reads of partitioned tables.
+    QUADRUPLED rows in lineage/MoR reads of partitioned tables.  The new
+    names hold only letters, digits, dashes and dots — nothing a URI
+    escapes — so a file's ``_metadata.file_name`` is exactly its path's
+    basename.
     Driver-side renames within one directory tree — no data movement."""
     for root, _dirs, names in os.walk(staging):
         for n in names:
@@ -2071,6 +2024,53 @@ def _zvalue_col(
             bit = F.shiftright(code, b).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, b * len(cols) + i))
     return z
+
+
+def _pos_delete_targets(deletes: list[DeleteFile]) -> set[str]:
+    """The data-file names position ``deletes`` name, read driver-side from
+    their ``file_name`` column (bounded by delete rows; no Spark job)."""
+    import pyarrow.parquet as pq
+
+    names: set[str] = set()
+    for d in deletes:
+        col = pq.read_table(d.path, columns=["file_name"]).column("file_name")
+        names.update(col.unique().to_pylist())
+    return names
+
+
+def lineage_read_schema(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the v3 lineage columns.  Rewritten files materialize
+    them physically; files that did not read nulls, which
+    :func:`inherit_lineage` fills."""
+    return T.StructType(
+        [*schema.fields, T.StructField(ROW_ID_COL, T.LongType()),
+         T.StructField(LAST_SEQ_COL, T.LongType())]
+    )
+
+
+def inherit_lineage(df: DataFrame) -> DataFrame:
+    """v3 inheritance over a scan carrying ``_pos``, ``_seq`` and ``_frid``:
+    a materialized value (rewritten file) wins, otherwise first_row_id +
+    position / the file's sequence number."""
+    return df.withColumn(
+        ROW_ID_COL, F.coalesce(F.col(ROW_ID_COL), F.col("_frid") + F.col("_pos"))
+    ).withColumn(LAST_SEQ_COL, F.coalesce(F.col(LAST_SEQ_COL), F.col("_seq")))
+
+
+def file_lookup(name: "F.Column", values: dict[str, Any], value_type: str) -> "F.Column":
+    """``values[name]`` per row (null for an unknown name), from ONE JSON
+    literal the optimizer folds into a constant: a single py4j call whatever
+    the file count, and no Spark job (a ``createDataFrame`` side table runs a
+    Python job per read).  A map lookup scans its keys, so names are spread
+    by CRC32 (the same in Python and Spark) over buckets of ~16 and a row
+    scans one bucket, not every file."""
+    n = max(1, len(values) // 16)
+    buckets: list[dict] = [{} for _ in range(n)]
+    for k, v in values.items():
+        buckets[zlib.crc32(k.encode()) % n][k] = v
+    maps = F.from_json(F.lit(json.dumps(buckets)), f"array<map<string,{value_type}>>")
+    bucket = (F.pmod(F.crc32(name), F.lit(n)) + 1).cast("int")
+    return F.element_at(F.element_at(maps, bucket), name)
 
 
 def _est_row_width(schema: T.StructType) -> int:

@@ -63,6 +63,7 @@ from ..lakehouse import pruning
 from ..lakehouse.table import (
     _BROADCAST_BYTES,
     _est_row_width,
+    _plan_size_est,
     DataFile,
     LakeTable,
     TableMetadata,
@@ -131,6 +132,7 @@ def merge_into(
                 src_keys if files else None,
                 summary=dict(summary or {}, operation_detail="merge-mor"),
                 branch=branch,
+                meta=meta,
             )
             return MergeStats(0, 0, max(added, deleted), "merge-on-read", deleted)
 
@@ -142,6 +144,7 @@ def merge_into(
                 summary=dict(summary or {}, operation_detail="merge-mor-pos"),
                 delete_positions_df=plan.hits,
                 branch=branch,
+                meta=meta,
             )
             return MergeStats(
                 len(plan.candidates), 0, plan.rows(added), "merge-on-read", deleted
@@ -169,6 +172,7 @@ def merge_into(
             [f.path for f in affected],
             summary=dict(summary or {}, operation_detail="merge"),
             preserve_lineage=lineage,
+            meta=meta,
         )
         return MergeStats(
             len(plan.candidates), len(affected), plan.rows(added), "copy-on-write"
@@ -234,9 +238,8 @@ def _plan(
             .parquet(*[f.path for f in candidates])
             .select(
                 *key_cols,
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("file_name"),
+                # the name reads compare with (``LakeTable._read``)
+                F.col("_metadata.file_name").alias("file_name"),
                 F.col("_metadata.row_index").alias("pos"),
             )
             .join(src_keys, on=key_cols, how="left_semi")
@@ -270,17 +273,9 @@ def merge_dataframes(
     )
     target_cols = target.columns
     src_keys = source.select(*key_cols).dropDuplicates(key_cols)
-    size = _plan_size_bytes(src_keys)
+    size = _plan_size_est(src_keys)
     if size is not None and size <= _BROADCAST_BYTES:
         src_keys = F.broadcast(src_keys)
     kept = target.join(src_keys, on=key_cols, how="left_anti")
     return kept.unionByName(surviving.select(*target_cols))
 
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (the same number its own
-    broadcast planning uses); None when the JVM plan is unreachable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None

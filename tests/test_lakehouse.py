@@ -1049,3 +1049,103 @@ def test_keyed_single_file_fast_path_and_oversize_resplit(spark, warehouse, monk
         assert a.bounds["id"][1] < b.bounds["id"][0]
     assert t2.to_df(spark).count() == 5000
     assert sum(f.rows for f in files) == 5000
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _warm_jobs(spark, fn) -> int:
+    """Spark jobs of the second of two ``fn()`` calls."""
+    fn()
+    j = _jobs(spark)
+    fn()
+    return _jobs(spark) - j
+
+
+def _upserted_table(spark, warehouse, name: str, version: str, upsert: bool = True):
+    """40 rows, then a merge-on-read upsert of every 4th key: v3 leaves
+    one position-delete file, v2 one equality-delete file."""
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    t = LakeCatalog(warehouse).create_table(
+        "ns", name, T.StructType([T.StructField("id", T.LongType(), False),
+                                  T.StructField("v", T.StringType())]),
+        identifier_fields=["id"], properties={"format-version": version},
+    )
+    t.append(spark.createDataFrame([(i, f"a{i}") for i in range(40)], "id long, v string"))
+    if upsert:
+        merge_into(t, spark.createDataFrame(
+            [(i, f"b{i}", "u") for i in range(0, 40, 4)], "id long, v string, __op string"
+        ))
+    return t
+
+
+@pytest.mark.parametrize("case", ["position", "equality", "lineage"])
+def test_merge_on_read_point_read_pushes_key_filter(spark, warehouse, case):
+    """A point read that applies deletes (or attaches lineage) hands its key
+    filter to the data file scan as a pushed filter, and builds its plan
+    without a Python side table (``Scan ExistingRDD``)."""
+    t = _upserted_table(spark, warehouse, f"push_{case}", "2" if case == "equality" else "3")
+    assert {d.content for d in t.current_deletes()} == {
+        "equality" if case == "equality" else "position"
+    }
+    lineage = case == "lineage"
+    for k in (8, 9):  # an upserted key and an untouched one
+        df = t.to_df(spark, row_filter={"id": k}, lineage=lineage)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan
+        data_scans = [
+            ln for ln in plan.splitlines()
+            if "FileScan parquet" in ln and "ReadSchema: struct<id:bigint,v:string" in ln
+        ]
+        assert data_scans and all("EqualTo(id," in ln for ln in data_scans)
+        full = t.to_df(spark, lineage=lineage).filter(F.col("id") == k)
+        assert df.collect() == full.collect()
+        assert [r.v for r in df.collect()] == [f"b{k}" if k % 4 == 0 else f"a{k}"]
+
+
+# warm point-read Spark jobs: the scan, plus the delete side's broadcast
+# (before file identity moved to _metadata: position 3, equality 4)
+READ_JOBS = {"clean": 1, "position": 2, "equality": 2}
+
+
+def test_point_read_job_counts_pinned(spark, warehouse):
+    tables = {
+        "clean": _upserted_table(spark, warehouse, "jobs_clean", "3", upsert=False),
+        "position": _upserted_table(spark, warehouse, "jobs_pos", "3"),
+        "equality": _upserted_table(spark, warehouse, "jobs_eq", "2"),
+    }
+    counts = {
+        case: _warm_jobs(spark, lambda t=t: t.to_df(spark, row_filter={"id": 8}).collect())
+        for case, t in tables.items()
+    }
+    assert counts == READ_JOBS
+
+
+def test_decimal_key_footer_stats_need_no_spark_job(spark, warehouse):
+    """Footer stats of a Spark-written DECIMAL key decode from the raw
+    parquet statistics: a decimal-keyed append runs as many Spark jobs as a
+    long-keyed one (the Spark-aggregate fallback used to add three) and
+    stores the bounds that aggregate computes."""
+    from decimal import Decimal
+
+    from debezium_server_iceberg_spark.lakehouse.pruning import encode
+
+    cat = LakeCatalog(warehouse)
+    counts, bounds = {}, {}
+    for name, dt, rows in [
+        ("long", T.LongType(), [-350, 700, 125]),
+        ("dec", T.DecimalType(10, 2), [Decimal("-3.50"), Decimal("7.00"), Decimal("1.25")]),
+        ("wide", T.DecimalType(30, 3), [Decimal("-3.500"), Decimal("7000000000000.000")]),
+    ]:
+        schema = T.StructType([T.StructField("k", dt, False), T.StructField("v", T.StringType())])
+        t = cat.create_table("ns", f"stats_{name}", schema, identifier_fields=["k"])
+        frame = spark.createDataFrame([(r, "x") for r in rows], schema)
+        counts[name] = _warm_jobs(spark, lambda t=t, frame=frame: t.append(frame))
+        bounds[name] = [f.bounds["k"] for f in t.current_files()]
+        agg = t.to_df(spark).agg(F.min("k"), F.max("k")).collect()[0]
+        assert {tuple(b) for b in bounds[name]} == {tuple(encode(v, dt) for v in agg)}
+    assert counts["dec"] == counts["wide"] == counts["long"]
+    assert bounds["dec"] == [["-3.50", "7.00"]] * 2
+    assert bounds["wide"] == [["-3.500", "7000000000000.000"]] * 2

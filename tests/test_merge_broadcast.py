@@ -5,12 +5,9 @@ broadcast limit; a CDC-sized source still gets the broadcast fast path."""
 import pytest
 from pyspark.sql import functions as F
 
+from debezium_server_iceberg_spark.lakehouse.table import _plan_size_est
 from debezium_server_iceberg_spark.operators import merge as merge_mod
-from debezium_server_iceberg_spark.operators.merge import (
-    merge_dataframes,
-    merge_into,
-    _plan_size_bytes,
-)
+from debezium_server_iceberg_spark.operators.merge import merge_dataframes, merge_into
 
 
 def _explain(df) -> str:
@@ -32,7 +29,7 @@ def test_wide_5m_key_source_not_broadcast(spark):
         F.lit("new").alias("v"),
         F.lit("u").alias("__op"),
     )
-    assert _plan_size_bytes(source.select("k").dropDuplicates(["k"])) > merge_mod._BROADCAST_BYTES
+    assert _plan_size_est(source.select("k").dropDuplicates(["k"])) > merge_mod._BROADCAST_BYTES
     plan = _explain(merge_dataframes(target, source, ["k"]))
     anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln or "left_anti" in ln]
     assert anti and not any("Broadcast" in ln for ln in anti), plan

@@ -5,7 +5,10 @@ property-inheriting, abort-on-failure path; and ONE upsert planner
 (``operators/merge.py:_plan``), so every upsert sink that reads existing
 files answers "which rows of which files does this batch hit?" the same
 way; and ONE pruning model (``lakehouse/pruning.py``), so every planner
-reads manifest bounds with the same typed comparisons."""
+reads manifest bounds with the same typed comparisons.  File identity in
+the table and operator layers comes from the scan's deterministic
+``_metadata`` column, never ``input_file_name()``, which stops filter
+pushdown."""
 
 import ast
 import pathlib
@@ -83,3 +86,13 @@ def test_one_pruning_model():
 
     sites = _sites(reads_bounds)
     assert sites and {module for module, _ in sites} == {"lakehouse/pruning.py"}
+
+
+def test_no_input_file_name():
+    uses = [
+        path.relative_to(PKG).as_posix()
+        for sub in ("lakehouse", "operators")
+        for path in sorted((PKG / sub).rglob("*.py"))
+        if "input_file_name(" in path.read_text()
+    ]
+    assert uses == []
