@@ -128,6 +128,8 @@ class LakeCatalog:
                 for key in ("files", "delete_files"):
                     for f in doc.get(key, []):
                         f["path"] = _repath(f.get("path"))
+                        if "referenced_data_file" in f:
+                            f["referenced_data_file"] = _repath(f["referenced_data_file"])
             # temp + atomic replace: a crash mid-loop leaves every file
             # either fully old or fully new, never truncated
             tmp = os.path.join(meta_dir, f".rn.{_uuid.uuid4().hex}.tmp")

@@ -634,21 +634,14 @@ def export_iceberg_table(
     # detects carried delete files by path, like data files.
     data_dir = os.path.join(dest, "data")
     cur_paths = {os.path.abspath(f.path) for f in files}
-    # v3: live engine position deletes become puffin deletion vectors
-    # (one DV per referenced data file, union of all live positions);
-    # everything else exports as a rewritten parquet delete file
-    dv_sources = (
-        [d for d in deletes if d.content == "position"] if fmt == 3 else []
+    # v3: each engine vector entry becomes one puffin DV blob; everything
+    # else exports as a rewritten parquet delete file, once per distinct
+    # engine parquet (the vector entries of one commit share it).  The
+    # puffin name hashes the SET of (engine parquet, data file) entries.
+    dv_sources = [d for d in deletes if d.content == "position"] if fmt == 3 else []
+    file_dels = list(
+        {d.path: d for d in deletes if fmt != 3 or d.content != "position"}.values()
     )
-    file_dels = [
-        d for d in deletes if fmt != 3 or d.content != "position"
-    ]
-    # the naming scheme lives in ONE place: content-addressed by the
-    # engine delete file's name, so carried/new detection is by path.
-    # The puffin name hashes the SET of contributing engine delete files:
-    # an unchanged set re-derives the same path (carried), any new
-    # position delete produces a fresh puffin whose DVs replace the old
-    # ones (the spec's one-DV-per-file union rule).
     out_by_src = {
         d.path: os.path.abspath(
             os.path.join(
@@ -664,7 +657,10 @@ def export_iceberg_table(
     if dv_sources:
         dv_key = hashlib.md5(
             "|".join(
-                sorted(os.path.basename(d.path) for d in dv_sources)
+                sorted(
+                    f"{os.path.basename(d.path)}>{os.path.basename(d.referenced_data_file)}"
+                    for d in dv_sources
+                )
             ).encode()
         ).hexdigest()
         puffin_path = os.path.abspath(
@@ -930,18 +926,9 @@ def export_iceberg_table(
             }
         )
     if dv_sources:
-        # v3 deletion vectors: union every live position delete per
-        # referenced data file into ONE roaring bitmap (the spec's at-most-
-        # one-DV-per-file rule), written as deletion-vector-v1 blobs in a
-        # single content-addressed puffin file.  An unchanged delete set
-        # re-derives the same path, so republish carries the entries; any
-        # new position delete produces a replacement puffin whose DVs
-        # supersede the old ones.  Publish-time memory: every live
-        # position rides ONCE in a sorted columnar Arrow buffer (8 B per
-        # position + dictionary-coded names); the Python-object bitmap
-        # handed to the blob encoder materializes one referenced data
-        # file at a time, so object memory is bounded by the largest
-        # single file's delete count, not the table's total.
+        # the engine keeps at most one vector per data file: each entry is
+        # one deletion-vector-v1 blob, its positions a slice of its sorted
+        # engine parquet (read one at a time), in one puffin file
         if dv_carried:
             delete_entries.extend(
                 {**e, "status": 0} for e in prev_dv_entries[puffin_path]
@@ -950,57 +937,26 @@ def export_iceberg_table(
             from .puffin import write_puffin_dvs
 
             import numpy as _np
-            import pyarrow as _pa
-            import pyarrow.compute as _pc
             import pyarrow.parquet as _pq
 
-            parts = []
-            for d in dv_sources:
-                t = _pq.read_table(d.path, columns=["file_name", "pos"])
-                parts.append(
-                    t.append_column(
-                        "seq", _pa.array([int(d.seq)] * t.num_rows, _pa.int64())
-                    )
-                )
-            allt = _pa.concat_tables(parts)
-            uniq = _pc.unique(allt.column("file_name"))
-            abs_for_name = _pa.array(
-                [name_to_abs.get(nm) for nm in uniq.to_pylist()], _pa.string()
-            )
-            allt = allt.append_column(
-                "abs",
-                _pc.take(
-                    abs_for_name, _pc.index_in(allt.column("file_name"), uniq)
-                ),
-            )
-            # null abs = target compacted away: delete is moot
-            allt = allt.filter(_pc.is_valid(allt.column("abs"))).sort_by(
-                [("abs", "ascending"), ("pos", "ascending")]
-            )
-            dv_seq_by_file: dict[str, int] = {}
+            ordered = sorted(dv_sources, key=lambda d: d.path)
 
-            def _dv_groups():
-                if allt.num_rows == 0:
-                    return
-                # post-sort unique preserves sorted order, so the code
-                # column is nondecreasing and group bounds are one diff
-                uniq_abs = _pc.unique(allt.column("abs"))
-                codes = _pc.index_in(allt.column("abs"), uniq_abs).to_numpy(
-                    zero_copy_only=False
-                )
-                pos_np = allt.column("pos").to_numpy(zero_copy_only=False)
-                seq_np = allt.column("seq").to_numpy(zero_copy_only=False)
-                bounds = _np.flatnonzero(_np.diff(codes)) + 1
-                starts = _np.concatenate(([0], bounds))
-                ends = _np.concatenate((bounds, [len(codes)]))
-                for s, e, p in zip(starts, ends, uniq_abs.to_pylist()):
-                    dv_seq_by_file[p] = int(seq_np[s:e].max())
-                    yield p, _np.unique(pos_np[s:e]).tolist()
+            def _dv_blobs():
+                path = names = pos_np = None
+                for d in ordered:
+                    if d.path != path:  # the engine writes it sorted, unique
+                        path = d.path
+                        t = _pq.read_table(path, columns=["file_name", "pos"])
+                        names = t.column("file_name").to_numpy(zero_copy_only=False)
+                        pos_np = t.column("pos").to_numpy(zero_copy_only=False)
+                    nm = os.path.basename(d.referenced_data_file)
+                    lo, hi = (_np.searchsorted(names, nm, side) for side in ("left", "right"))
+                    yield os.path.abspath(d.referenced_data_file), pos_np[lo:hi].tolist()
 
-            descs = write_puffin_dvs(puffin_path, _dv_groups())
+            descs = write_puffin_dvs(puffin_path, _dv_blobs())
             puffin_size = os.path.getsize(puffin_path)
-            for desc in descs:
-                dseq = seqmap.get(dv_seq_by_file[desc["referenced"]], seq)
+            for d, desc in zip(ordered, descs):
+                dseq = seqmap.get(d.seq, seq)
                 delete_entries.append(
                     {
                         "status": 1,
@@ -1315,7 +1271,7 @@ def read_iceberg_table(
 
     ``metadata_file`` reads a specific metadata JSON instead of the
     version hint — see :func:`plan_iceberg_scan`; it is how
-    catalog-resolved reads (``rest_catalog.read_table_by_name``) honor
+    catalog-resolved reads (``catalog_commit.read_table_by_name``) honor
     the catalog's ``metadata-location`` exactly."""
     plan = plan_iceberg_scan(
         location, snapshot_id, partition_filter, metadata_file=metadata_file

@@ -47,6 +47,9 @@ from __future__ import annotations
 import sqlite3
 from contextlib import contextmanager
 
+# catalog-resolved reads are client-agnostic; importable from here too
+from .catalog_commit import read_table_by_name  # noqa: F401
+
 _TABLES_DDL = """
 CREATE TABLE IF NOT EXISTS iceberg_tables (
   catalog_name TEXT NOT NULL,
@@ -297,52 +300,3 @@ class JdbcCatalogClient:
                 (self.catalog_name, namespace),
             ).fetchall()
         return [r[0] for r in rows]
-
-
-def publish_to_jdbc_catalog(
-    client: JdbcCatalogClient,
-    namespace: str,
-    name: str,
-    metadata_location: str,
-) -> dict:
-    """The full publication sequence after an export — the JDBC twin of
-    ``publish_to_rest_catalog``: ensure the namespace, then (re-)register
-    the metadata file.  Idempotent: re-publishing the SAME location CASes
-    from it to itself (one row updated, pointer unchanged).  Unlike the
-    REST fallback path there is never an unregistered window — the row
-    updates in place; a genuine concurrent-writer conflict surfaces as
-    :class:`CommitFailedError` and PROPAGATES (a stale catalog must be
-    operator-visible)."""
-    client.create_namespace(namespace, exist_ok=True)
-    return client.register_table(namespace, name, metadata_location, overwrite=True)
-
-
-def read_table_by_name(
-    spark,
-    client: JdbcCatalogClient,
-    namespace: str,
-    name: str,
-    snapshot_id: int | None = None,
-    partition_filter: dict | None = None,
-    lineage: bool = False,
-):
-    """Catalog-resolved read — resolve ``metadata_location`` through the
-    catalog row (what any JDBC-catalog-configured engine does), then
-    walk THAT metadata file's standard chain; never the filesystem's
-    ``version-hint.text``, which can be ahead of the catalog between
-    publishes.  Mirrors ``rest_catalog.read_table_by_name``."""
-    from .iceberg_export import read_iceberg_table
-
-    loc = client.load_table(namespace, name).get("metadata-location")
-    if not loc:
-        raise JdbcCatalogError(
-            f"catalog holds no metadata_location for {namespace}.{name}"
-        )
-    return read_iceberg_table(
-        spark,
-        None,
-        snapshot_id=snapshot_id,
-        partition_filter=partition_filter,
-        lineage=lineage,
-        metadata_file=loc,
-    )

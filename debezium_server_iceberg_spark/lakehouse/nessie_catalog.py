@@ -67,9 +67,9 @@ from __future__ import annotations
 
 import json
 from typing import Callable, Optional
-from urllib import error as _urlerror
 from urllib import parse as _urlparse
-from urllib import request as _urlrequest
+
+from .catalog_commit import _read_metadata, _urllib_transport
 
 Transport = Callable[[str, str, dict, Optional[bytes]], tuple]
 
@@ -100,34 +100,6 @@ class CommitFailedError(NessieCatalogError):
     """Key-scoped commit conflict (HTTP 409 ``REFERENCE_CONFLICT``) or a
     failed expected-location check — the caller reloads and retries or
     surfaces the conflict, Iceberg's CommitFailedException contract."""
-
-
-def _urllib_transport(
-    method: str, url: str, headers: dict, body: bytes | None
-) -> tuple:
-    req = _urlrequest.Request(url, data=body, headers=headers, method=method)
-    try:
-        with _urlrequest.urlopen(req) as resp:
-            return resp.status, resp.read()
-    except _urlerror.HTTPError as e:  # non-2xx still carries an error body
-        return e.code, e.read()
-
-
-def _read_metadata(metadata_location: str) -> dict | None:
-    """The exported metadata document (for the content's snapshot/schema
-    ids).  Local/``file://`` locations are always readable right after a
-    publish; anything else degrades to a pointer-only content object."""
-    path = metadata_location
-    if path.startswith("file://"):
-        path = _urlparse.urlparse(path).path
-    elif "://" in path:
-        return None
-    try:
-        with open(path, "r", encoding="utf-8") as fh:
-            doc = json.load(fh)
-        return doc if isinstance(doc, dict) else None
-    except (OSError, ValueError):
-        return None
 
 
 def _iceberg_content(metadata_location: str, content_id: str | None) -> dict:
@@ -416,48 +388,3 @@ class NessieCatalogClient:
             token = doc.get("token")
             if not doc.get("hasMore") or not token:
                 return sorted(names)
-
-
-def publish_to_nessie_catalog(
-    client: NessieCatalogClient,
-    namespace: str,
-    name: str,
-    metadata_location: str,
-) -> dict:
-    """Ensure-namespace + register(overwrite) — the same publication
-    step the JDBC/REST paths run after a filesystem export.  Conflicts
-    PROPAGATE (a stale catalog must be operator-visible)."""
-    client.create_namespace(namespace, exist_ok=True)
-    return client.register_table(
-        namespace, name, metadata_location, overwrite=True
-    )
-
-
-def read_table_by_name(
-    spark,
-    client: NessieCatalogClient,
-    namespace: str,
-    name: str,
-    snapshot_id: int | None = None,
-    partition_filter: dict | None = None,
-    lineage: bool = False,
-):
-    """Catalog-resolved read: resolve ``metadataLocation`` through the
-    branch's content (what a NessieCatalog-configured engine does),
-    then walk THAT metadata file's standard chain — never the
-    filesystem ``version-hint.text``.  Mirrors the JDBC/REST twins."""
-    from .iceberg_export import read_iceberg_table
-
-    loc = client.load_table(namespace, name).get("metadata-location")
-    if not loc:
-        raise NessieCatalogError(
-            500, f"catalog holds no metadataLocation for {namespace}.{name}"
-        )
-    return read_iceberg_table(
-        spark,
-        None,
-        snapshot_id=snapshot_id,
-        partition_filter=partition_filter,
-        lineage=lineage,
-        metadata_file=loc,
-    )

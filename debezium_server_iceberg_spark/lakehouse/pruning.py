@@ -1,7 +1,7 @@
 """The one pruning model: may this data file hold a value in ``[lo, hi]``?
 
 Every driver-side planner (MERGE candidates, ``to_df(row_filter=,
-partition_values=)``, delete-file relevance, ``materialize_deletes``,
+partition_values=)``, equality-delete relevance, ``materialize_deletes``,
 changelog scans, rollups) asks that of manifest entries, and answers it
 here, keyed on the column's Spark type (Iceberg's typed column metrics).
 
@@ -213,24 +213,6 @@ def delete_may_touch(d, files: list, types: dict) -> bool:
     rest."""
     ranges = {c: r for c in d.equality_cols if (r := _range(d.bounds, c, types.get(c)))}
     return any(f.seq < d.seq and may_overlap(f.bounds, ranges, types) for f in files)
-
-
-def delete_touches_scan(d, files: list, basenames: list[str], types: dict) -> bool:
-    """Can delete file ``d`` affect any of the scanned data ``files``?
-    Dropping a delete that cannot is exact — its anti-join would remove
-    nothing from these files.
-
-    - position deletes name their victims: relevant iff some scanned
-      basename falls inside the delete's ``file_name`` bounds
-      (``basenames`` is sorted — one bisect, not a product loop);
-    - equality deletes: :func:`delete_may_touch` on the scanned files."""
-    if d.content == "position":
-        b = _range(d.bounds, "file_name", T.StringType())
-        if b is None:
-            return True
-        i = bisect.bisect_left(basenames, b[0])
-        return i < len(basenames) and basenames[i] <= b[1]
-    return delete_may_touch(d, files, types)
 
 
 # ------------------------------------------------------------ one key-range aggregate

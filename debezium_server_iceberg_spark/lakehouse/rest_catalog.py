@@ -36,7 +36,7 @@ the table CONTINUOUSLY resolvable.  Only when the commit cannot apply —
 the registered table is a different uuid, the metadata file isn't
 locally readable, or the catalog rejects with 404/409 — does it fall
 back to drop+register, whose unregistered window between the DELETE and
-the second POST is documented on :func:`publish_to_rest_catalog` (the
+the second POST is documented on ``catalog_commit.publish_to_catalog`` (the
 re-register retries once so a transient failure doesn't strand the
 table unregistered).
 
@@ -52,9 +52,9 @@ from __future__ import annotations
 
 import json
 from typing import Callable, Optional
-from urllib import error as _urlerror
 from urllib import parse as _urlparse
-from urllib import request as _urlrequest
+
+from .catalog_commit import _read_metadata, _urllib_transport
 
 Transport = Callable[[str, str, dict, Optional[bytes]], tuple]
 
@@ -81,38 +81,8 @@ class AlreadyExistsError(RestCatalogError):
     pass
 
 
-def _urllib_transport(
-    method: str, url: str, headers: dict, body: bytes | None
-) -> tuple:
-    req = _urlrequest.Request(url, data=body, headers=headers, method=method)
-    try:
-        with _urlrequest.urlopen(req) as resp:
-            return resp.status, resp.read()
-    except _urlerror.HTTPError as e:  # non-2xx still carries an ErrorModel
-        return e.code, e.read()
-
-
 def _quote(part: str) -> str:
     return _urlparse.quote(part, safe="")
-
-
-def _read_metadata(metadata_location: str) -> dict | None:
-    """The new metadata document, read from shared storage — the
-    publisher just wrote it, so a local/``file://`` location is always
-    readable here.  Returns None when it isn't (remote object-store
-    URIs without a local mount): the caller falls back to
-    drop+register rather than guessing at updates."""
-    path = metadata_location
-    if path.startswith("file://"):
-        path = _urlparse.urlparse(path).path
-    elif "://" in path:
-        return None
-    try:
-        with open(path, "r", encoding="utf-8") as fh:
-            doc = json.load(fh)
-        return doc if isinstance(doc, dict) else None
-    except (OSError, ValueError):
-        return None
 
 
 class RestCatalogClient:
@@ -253,7 +223,7 @@ class RestCatalogClient:
         from here, or a 404/409 from the catalog.  The fallback's
         re-register retries once on failure — a crash in that window
         still leaves the table unregistered until the next publish (see
-        :func:`publish_to_rest_catalog`)."""
+        ``catalog_commit.publish_to_catalog``)."""
         body = {"name": name, "metadata-location": metadata_location}
         register = lambda: self._call(
             "POST",
@@ -437,65 +407,3 @@ class RestCatalogClient:
     def _ns(namespace: str) -> str:
         # multipart namespace path encoding: unit separator %1F (spec)
         return _quote("\x1f".join(namespace.split(".")))
-
-
-def publish_to_rest_catalog(
-    client: RestCatalogClient,
-    namespace: str,
-    name: str,
-    metadata_location: str,
-) -> dict:
-    """The full publication sequence a sink runs after an export:
-    ensure the namespace, then (re-)register the metadata file.
-    Idempotent: re-running with the same metadata re-points the catalog
-    at the identical location (the CAS path's requirements still hold —
-    zero updates is a valid commit).
-
-    Operational note: a re-publish normally moves the table forward via
-    the spec's CommitTable CAS, so readers always resolve the name.
-    Only the drop+register FALLBACK (different uuid / unreadable
-    metadata / catalog rejected the commit) has a window between the
-    DELETE and the second POST where the name does not resolve; a crash
-    or repeated HTTP failure inside it leaves the table unregistered
-    until the next publish — alarm on registration errors rather than
-    swallowing them (publish_iceberg propagates them for exactly this
-    reason)."""
-    client.create_namespace(namespace, exist_ok=True)
-    return client.register_table(
-        namespace, name, metadata_location, overwrite=True
-    )
-
-
-def read_table_by_name(
-    spark,
-    client: RestCatalogClient,
-    namespace: str,
-    name: str,
-    snapshot_id: int | None = None,
-    partition_filter: dict | None = None,
-    lineage: bool = False,
-):
-    """Catalog-resolved read — the consumer half of the publication
-    loop: resolve ``metadata-location`` through the catalog's LoadTable
-    (exactly what any engine configured against the same catalog does,
-    reference deployment testresources/CatalogRest.java:39-41), then
-    walk THAT metadata file's standard chain
-    (:func:`..iceberg_export.read_iceberg_table`) — never the
-    filesystem's ``version-hint.text``, which may already be ahead of
-    the catalog between publishes.  ``snapshot_id`` /
-    ``partition_filter`` / ``lineage`` as in ``read_iceberg_table``."""
-    from .iceberg_export import read_iceberg_table
-
-    loc = client.load_table(namespace, name).get("metadata-location")
-    if not loc:
-        raise RestCatalogError(
-            200, f"catalog returned no metadata-location for {namespace}.{name}"
-        )
-    return read_iceberg_table(
-        spark,
-        None,
-        snapshot_id=snapshot_id,
-        partition_filter=partition_filter,
-        lineage=lineage,
-        metadata_file=loc,
-    )

@@ -8,10 +8,11 @@ parquet + an atomic JSON metadata log, Iceberg-style:
   transforms), never mutated in place;
 - each commit produces a new immutable snapshot = manifest of data files with
   per-file row counts, partition values, and key-column bounds;
-- the atomic point is an ``os.replace`` of ``version-hint.text`` after writing
-  ``v{N}.metadata.json`` with O_EXCL (optimistic concurrency — two writers
-  racing on the same version: one loses and retries), mirroring Iceberg's
-  Hadoop-catalog commit and the reference's commit protocols
+- the atomic point is an ``os.link`` of a fully written temp file to
+  ``v{N}.metadata.json`` (optimistic concurrency — two writers racing on
+  the same version: one loses and retries); ``version-hint.text`` is a
+  cache readers step forward from, mirroring Iceberg's Hadoop-catalog
+  commit and the reference's commit protocols
   (IcebergTableOperator.java:218-228, IcebergOffsetBackingStore.java:219-223);
 - every metadata change, data commit or not, goes through ONE retry loop
   (``LakeTable._commit``: re-read, mutate, CAS), and every data write
@@ -78,6 +79,12 @@ class CommitConflict(RuntimeError):
     pass
 
 
+class StaleBaseConflict(CommitConflict):
+    """A data file the commit removes or re-vectors is gone from the head,
+    or its vector changed since the metadata the commit planned from.
+    ``LakeTable._commit`` never retries it: the caller must re-plan."""
+
+
 # LakeTable._commit: attempts per commit before a CommitConflict propagates
 _COMMIT_ATTEMPTS = 5
 # returned by a LakeTable._commit mutation that has nothing to write
@@ -120,7 +127,7 @@ class DataFile:
 
 @dataclass
 class DeleteFile:
-    """Merge-on-read delete file, two contents:
+    """Merge-on-read delete entry, two contents:
 
     - ``content='equality'`` (Iceberg v2 semantics): a parquet file of key
       tuples that logically removes every matching row in data files with a
@@ -129,19 +136,22 @@ class DeleteFile:
       BaseDeltaTaskWriter.java:60-71 deleteKey-then-write).
     - ``content='position'`` (v3 deletion-vector semantics,
       IcebergConfig.java:106-108 default + PartitioningDVWriter in
-      BaseDeltaTaskWriter.java:74-88): a parquet file of
-      ``(file_name, pos)`` rows naming exact row positions to skip.  The
-      read side does positional anti-joins (cheap integer compare per row)
-      instead of key-tuple anti-joins; data file names are globally unique
-      (``_uniquify_staged``), so name+pos identifies a row forever."""
+      BaseDeltaTaskWriter.java:74-88): ALL deleted positions of one live
+      data file, ``referenced_data_file``; a manifest holds at most one
+      such entry per file, and a merge replaces it.  ``path`` is a sorted,
+      unique ``(file_name, pos)`` parquet holding every vector one commit
+      wrote, so entries may share it; ``rows`` counts this file's rows.
+      Reads anti-join on name+pos (names are globally unique,
+      ``_uniquify_staged``); no bounds or sequence rule apply."""
 
     path: str
     rows: int
-    seq: int                       # applies to data files with data.seq < seq
+    seq: int                       # equality: applies to data files with data.seq < seq
     equality_cols: list[str] = dc_field(default_factory=list)
     bounds: dict[str, list] = dc_field(default_factory=dict)
     bytes: int = 0
     content: str = "equality"
+    referenced_data_file: str | None = None  # position entries only
 
     def to_dict(self) -> dict:
         return {
@@ -152,14 +162,21 @@ class DeleteFile:
             "bounds": self.bounds,
             "bytes": self.bytes,
             "content": self.content,
+            "referenced_data_file": self.referenced_data_file,
         }
 
     @staticmethod
     def from_dict(d: dict) -> "DeleteFile":
-        return DeleteFile(
+        out = DeleteFile(
             d["path"], d["rows"], d["seq"], d.get("equality_cols", []),
-            d.get("bounds", {}), d.get("bytes", 0), d.get("content", "equality")
+            d.get("bounds", {}), d.get("bytes", 0), d.get("content", "equality"),
+            d.get("referenced_data_file"),
         )
+        if out.content == "position" and out.referenced_data_file is None:
+            # a stacked position-delete file of an older manifest: reading it
+            # as "applies to nothing" would resurrect its rows
+            raise ValueError(f"position delete {out.path} has no referenced_data_file")
+        return out
 
 
 @dataclass
@@ -207,10 +224,10 @@ class LakeTable:
         self.meta_dir = os.path.join(location, "metadata")
         self.data_dir = os.path.join(location, "data")
         #: optional publication gate called INSIDE every commit, between
-        #: writing the candidate metadata file and swinging the
-        #: version-hint (the local atomic point): ``hook(table,
+        #: writing the candidate metadata temp file and linking it into
+        #: its version slot (the local atomic point): ``hook(table,
         #: candidate_meta, new_version)``.  If it raises, the candidate
-        #: file is removed and the commit does NOT advance — this is how
+        #: temp is removed and the commit does NOT advance — this is how
         #: ``publish_mode=per_commit`` makes an external catalog row the
         #: authoritative commit point (lakehouse/catalog_commit.py).
         self.commit_hook = None
@@ -280,10 +297,17 @@ class LakeTable:
 
     # ------------------------------------------------------------ metadata
 
+    def _version_path(self, version: int) -> str:
+        return os.path.join(self.meta_dir, f"v{version:05d}.metadata.json")
+
     def metadata(self) -> TableMetadata:
+        """The newest complete version file; the hint is where the search
+        starts (a writer may die between its link and the hint swing)."""
         with open(os.path.join(self.meta_dir, _HINT)) as fh:
             version = int(fh.read().strip())
-        with open(os.path.join(self.meta_dir, f"v{version:05d}.metadata.json")) as fh:
+        while os.path.exists(self._version_path(version + 1)):
+            version += 1
+        with open(self._version_path(version)) as fh:
             d = json.load(fh)
         snaps = [
             Snapshot(
@@ -333,33 +357,29 @@ class LakeTable:
             "refs": meta.refs,
             "next_row_id": meta.next_row_id,
         }
-        path = os.path.join(self.meta_dir, f"v{new_version:05d}.metadata.json")
-        # O_EXCL: optimistic-concurrency loser gets FileExistsError
-        try:
-            fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError as e:
-            raise CommitConflict(f"version {new_version} already committed") from e
-        with os.fdopen(fd, "w") as fh:
-            json.dump(d, fh)
-        if self.commit_hook is not None:
-            # publication gate (publish_mode=per_commit): export the
-            # CANDIDATE state and CAS the external catalog pointer
-            # BEFORE the local atomic point.  A conflict (another
-            # writer owns the catalog row) propagates and the commit
-            # does not advance — the candidate file is removed so the
-            # version slot stays free for a later legitimate commit.
-            try:
-                self.commit_hook(self, meta, new_version)
-            except Exception:
-                try:
-                    os.unlink(path)
-                except OSError:
-                    pass
-                raise
-        tmp = os.path.join(self.meta_dir, f".hint.{uuidlib.uuid4().hex}.tmp")
+        path = self._version_path(new_version)
+        # linking the complete candidate into its slot is the commit point
+        # (Iceberg's Hadoop tables): no version file is ever partial, and a
+        # dead writer leaves at most a temp for remove_orphan_files
+        tmp = os.path.join(self.meta_dir, f".v{new_version:05d}.{uuidlib.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
+            json.dump(d, fh)
+        try:
+            if self.commit_hook is not None:
+                # publish_mode=per_commit: the catalog CAS of the CANDIDATE
+                # state comes BEFORE local visibility; a conflict propagates
+                self.commit_hook(self, meta, new_version)
+            try:
+                os.link(tmp, path)  # ATOMIC POINT
+            except FileExistsError as e:
+                raise CommitConflict(f"version {new_version} already committed") from e
+        finally:
+            os.unlink(tmp)
+        # the hint is a cache readers step forward from
+        hint_tmp = os.path.join(self.meta_dir, f".hint.{uuidlib.uuid4().hex}.tmp")
+        with open(hint_tmp, "w") as fh:
             fh.write(str(new_version))
-        os.replace(tmp, os.path.join(self.meta_dir, _HINT))  # ATOMIC POINT
+        os.replace(hint_tmp, os.path.join(self.meta_dir, _HINT))
 
     def _lineage_on(self, meta: TableMetadata | None = None) -> bool:
         """v3 tables track row lineage (spec: mandatory from format v3).
@@ -374,7 +394,8 @@ class LakeTable:
         took that version) it starts over from a fresh read, up to
         ``_COMMIT_ATTEMPTS`` attempts with linear backoff.  Returns what
         ``mutate`` returned; a mutation that returns ``_NOTHING_TO_COMMIT``
-        writes nothing and ``_commit`` returns None."""
+        writes nothing and ``_commit`` returns None.  What ``mutate``
+        raises (e.g. :class:`StaleBaseConflict`) is never retried."""
         for attempt in range(_COMMIT_ATTEMPTS):
             meta = self.metadata()
             out = mutate(meta)
@@ -425,12 +446,7 @@ class LakeTable:
         head (the base a branch auto-created on write would start from).
         Pass an already-loaded ``meta`` to skip the metadata re-read."""
         meta = meta if meta is not None else self.metadata()
-        if ref == "main":
-            sid = meta.current_snapshot_id
-        else:
-            r = meta.refs.get(ref)
-            sid = r["snapshot_id"] if r else meta.current_snapshot_id
-        return self._manifest_entry(meta, sid)[0]
+        return self._manifest_entry(meta, _ref_head(meta, ref))[0]
 
     def current_deletes(self) -> list[DeleteFile]:
         return self._manifest_entry(self.metadata())[1]
@@ -445,13 +461,17 @@ class LakeTable:
         add_deletes: list[DeleteFile] | None = None,
         drop_deletes: bool = False,
         branch: str = "main",
+        base: TableMetadata | None = None,
     ) -> None:
         """Generic commit: new manifest = (current - removed) + added.
 
-        Delete-file lifecycle: equality-delete files are carried forward
-        snapshot to snapshot (unless ``drop_deletes`` or overwrite), new ones
-        get seq = the new snapshot id, and any delete file that no longer has
-        a live data file older than itself is pruned (it can never match).
+        Equality deletes are carried forward (unless ``drop_deletes`` or
+        overwrite), new ones get seq = the new snapshot id, and one with no
+        older live data file is pruned.  A position entry in
+        ``add_deletes`` replaces its data file's entry; an entry whose file
+        is gone is dropped.  ``base``: the metadata the caller planned
+        from; a removed or re-vectored file must still be live with its
+        ``base`` entry, else :class:`StaleBaseConflict`.
 
         ``branch``: commit on a named branch ref instead of main (Iceberg's
         branch writes / WAP pattern) — the new snapshot's base is the branch
@@ -460,6 +480,8 @@ class LakeTable:
         Each attempt writes its own manifest before the CAS; the manifest
         of an attempt that loses, or of a commit that fails, is removed."""
         written: list[str] = []
+        add_deletes = add_deletes or []
+        guarded = set(remove_paths) | set(_vectors(add_deletes))
 
         def discard_written() -> None:
             while written:
@@ -470,24 +492,22 @@ class LakeTable:
 
         def mutate(meta: TableMetadata) -> None:
             discard_written()  # a retry means the previous attempt lost
-            if branch == "main":
-                base_sid = meta.current_snapshot_id
-            else:
-                ref = meta.refs.get(branch)
-                if ref is None:
-                    # auto-create at the main head on first write (the
-                    # spark.wap.branch behavior)
-                    base_sid = meta.current_snapshot_id
-                elif ref.get("type") != "branch":
-                    raise ValueError(f"{branch!r} is a tag; no branch with that name")
-                else:
-                    base_sid = ref["snapshot_id"]
+            ref = meta.refs.get(branch)
+            if ref is not None and ref.get("type") != "branch":
+                raise ValueError(f"{branch!r} is a tag; no branch with that name")
+            # an unknown branch auto-creates at the main head on first
+            # write (the spark.wap.branch behavior)
+            base_sid = _ref_head(meta, branch)
             current, cur_deletes = self._manifest_entry(meta, base_sid)
-            files = (
-                add
-                if operation == "overwrite"
-                else [f for f in current if f.path not in remove_paths] + add
-            )
+            planned_sid = _ref_head(base, branch) if base is not None else base_sid
+            if guarded and planned_sid != base_sid:
+                was = _vectors(self._manifest_entry(base, planned_sid)[1])
+                now, live = _vectors(cur_deletes), {f.path for f in current}
+                stale = sorted(p for p in guarded if p not in live or was.get(p) != now.get(p))
+                if stale:
+                    raise StaleBaseConflict(f"{operation}: {stale[0]} changed since {planned_sid}")
+            overwrite = operation == "overwrite"
+            files = add if overwrite else [f for f in current if f.path not in remove_paths] + add
             # max-based, not head+1: branch snapshots share one id space, and
             # seq ordering (delete-file applicability) only needs ids to be
             # monotone along each lineage — which max+1 preserves everywhere
@@ -505,12 +525,25 @@ class LakeTable:
                     f.first_row_id = rid
                     rid += f.rows
                 meta.next_row_id = rid
-            deletes = [] if (drop_deletes or operation == "overwrite") else list(cur_deletes)
-            for d in add_deletes or []:
+            keep_eq = not (drop_deletes or overwrite)
+            eq_deletes = [d for d in cur_deletes if keep_eq and d.content != "position"]
+            vectors = {} if overwrite else _vectors(cur_deletes)
+            for d in add_deletes:
                 d.seq = sid
-                deletes.append(d)
-            # prune dead delete files: nothing older than them is live
-            deletes = [d for d in deletes if any(f.seq < d.seq for f in files)]
+                if d.content == "position":
+                    vectors[d.referenced_data_file] = d  # one vector per file
+                else:
+                    eq_deletes.append(d)
+            # prune dead deletes: an equality delete with no older live file,
+            # a vector whose data file is gone
+            live = {f.path for f in files}
+            deletes = [d for d in eq_deletes if any(f.seq < d.seq for f in files)]
+            deletes += [d for p, d in vectors.items() if p in live]
+            # delete files written since the table last had none (the
+            # materialization cadence; replacing a vector must not reset it)
+            parent = next((s for s in meta.snapshots if s.snapshot_id == base_sid), None)
+            carried = int(parent.summary.get("outstanding_delete_writes", 0)) if parent else 0
+            outstanding = carried + len({d.path for d in add_deletes}) if deletes else 0
             manifest_name = f"manifest-{sid:08d}-{uuidlib.uuid4().hex[:8]}.json"
             written.append(manifest_name)
             with open(os.path.join(self.meta_dir, manifest_name), "w") as fh:
@@ -529,12 +562,13 @@ class LakeTable:
                 summary=dict(
                     summary or {},
                     added_files=len(add),
-                    removed_files=len(remove_paths) if operation != "overwrite" else len(current),
+                    removed_files=len(remove_paths) if not overwrite else len(current),
                     total_files=len(files),
                     total_rows=sum(f.rows for f in files),
-                    added_delete_files=len(add_deletes or []),
+                    added_delete_files=len(add_deletes),
                     total_delete_files=len(deletes),
                     total_delete_rows=sum(d.rows for d in deletes),
+                    outstanding_delete_writes=outstanding,
                 ),
                 parent_id=base_sid,
             )
@@ -954,9 +988,9 @@ class LakeTable:
         ``preserve_lineage``: physically materialize ``_row_id`` /
         ``_last_updated_sequence_number`` columns present on ``add_df``
         (rewrite paths only — see ``_stage_write``).  ``meta``: the caller's
-        metadata to stage with instead of a re-read (the CAS still reads).
-        Returns the number of rows added, read from the staged files' own
-        stats."""
+        metadata to stage with instead of a re-read, and the commit's
+        ``base`` (see :meth:`_commit_snapshot`).  Returns the number of rows
+        added, read from the staged files' own stats."""
         meta = meta if meta is not None else self.metadata()
 
         def stage_data() -> list[DataFile]:
@@ -969,7 +1003,7 @@ class LakeTable:
             [stage_data if add_df is not None else None],
             lambda add: self._commit_snapshot(
                 "delta", add, set(remove_paths), summary,
-                drop_deletes=drop_deletes,
+                drop_deletes=drop_deletes, base=meta,
             ),
         )
         return sum(f.rows for f in add)
@@ -982,6 +1016,7 @@ class LakeTable:
         delete_positions_df: DataFrame | None = None,
         branch: str = "main",
         meta: TableMetadata | None = None,
+        dv_files: list[DataFile] | None = None,
     ) -> tuple[int, int]:
         """Merge-on-read upsert commit: append new data files AND delete
         files in ONE atomic snapshot — no existing data file is rewritten.
@@ -990,47 +1025,58 @@ class LakeTable:
         (v2 semantics; the reference's equality-delta writer,
         BaseDeltaTaskWriter.java:60-71 deleteKey-then-write,
         IcebergTableWriterFactory.java:97-108 equality field ids).
-        ``delete_positions_df`` — columns ``(file_name, pos)`` — stages a
-        position-delete file instead (v3 deletion-vector semantics,
-        IcebergConfig.java:106-108 / PartitioningDVWriter).  Both may be
-        combined; the data, position-delete and equality-delete writes
+        ``delete_positions_df`` — ``(file_name, pos)`` of rows in
+        ``dv_files`` (default: every file at the ref head) — instead merges
+        into those files' deletion vectors (v3, the reference's
+        PartitioningDVWriter, IcebergConfig.java:106-108).  The writes
         stage concurrently.  ``meta`` as in :meth:`commit_delta`.  Returns
-        (added_rows, delete_rows)."""
+        (added_rows, newly deleted rows)."""
         meta = meta if meta is not None else self.metadata()
         key_cols = [
             c for c in meta.identifier_fields if c in {f.name for f in meta.schema.fields}
         ]
         if not key_cols:
             raise ValueError("commit_row_delta requires identifier fields")
+        prior: list[DeleteFile] = []
+        if delete_positions_df is not None:
+            head_files, head_deletes = self._manifest_entry(meta, _ref_head(meta, branch))
+            dv_files = head_files if dv_files is None else dv_files
+            targets = {os.path.basename(f.path): f.path for f in dv_files}
+            prior = [d for p, d in _vectors(head_deletes).items() if os.path.basename(p) in targets]
 
         def stage_data() -> list[DataFile]:
             return self._stage_write(add_df, meta)
 
         def stage_position_deletes() -> list[DeleteFile]:
-            staged = self._write_staged(
-                delete_positions_df.select(
-                    F.col("file_name").cast("string"),
-                    F.col("pos").cast("long"),
-                )
-                .coalesce(1)
-                .sortWithinPartitions("file_name", "pos"),
-                meta,
-                prefix="posdel-",
-                # file_name min/max bounds let the read side prune this
-                # delete from scans that keep none of the named files
-                stats={"file_name": T.StringType()},
+            import pyarrow.parquet as pq
+
+            rows = delete_positions_df.select(
+                F.col("file_name").cast("string"), F.col("pos").cast("long")
             )
-            out: list[DeleteFile] = []
-            for f in staged:
-                if f.rows:
-                    out.append(
-                        DeleteFile(
-                            f.path, f.rows, 0, [], f.bounds, f.bytes,
-                            content="position",
-                        )
+            if prior:  # the new vectors contain the files' current ones
+                names = [os.path.basename(d.referenced_data_file) for d in prior]
+                rows = rows.unionByName(
+                    _vector_rows(delete_positions_df.sparkSession, prior).filter(
+                        F.col("file_name").isin(*names)
                     )
-                else:  # empty batch touched nothing: drop the file
+                )
+            out: list[DeleteFile] = []
+            for f in self._write_staged(
+                rows.coalesce(1)
+                .dropDuplicates(["file_name", "pos"])
+                .sortWithinPartitions("file_name", "pos"),
+                meta, prefix="posdel-", stats={},
+            ):
+                # each entry's cardinality, read from the written file: no job
+                counts = pq.read_table(f.path, columns=["file_name"])["file_name"]
+                counts = counts.value_counts().to_pylist()
+                if not counts:  # the batch touched nothing: drop the file
                     os.remove(f.path)
+                out += [
+                    DeleteFile(f.path, c["counts"], 0, [], {}, f.bytes, "position",
+                               targets[c["values"]])
+                    for c in counts
+                ]
             return out
 
         def stage_equality_deletes() -> list[DeleteFile]:
@@ -1053,10 +1099,11 @@ class LakeTable:
             ],
             lambda add, posdel, eqdel: self._commit_snapshot(
                 "rowdelta", add, set(), summary, add_deletes=posdel + eqdel,
-                branch=branch,
+                branch=branch, base=meta,
             ),
         )
-        return (sum(f.rows for f in add), sum(d.rows for d in posdel + eqdel))
+        deleted = sum(d.rows for d in posdel + eqdel) - sum(d.rows for d in prior)
+        return (sum(f.rows for f in add), deleted)
 
     def update_schema(self, new_schema: T.StructType) -> None:
         """Schema-evolution commit; no data movement (ALTER TABLE ADD COLUMNS
@@ -1195,12 +1242,14 @@ class LakeTable:
         converge (each pass strictly reduces small-file count) while
         per-call cost stays O(cap) regardless of table size.
 
-        Returns the number of files removed.
+        Returns the number of files removed: 0 when a concurrent commit
+        removed an input or changed its vector (the next call re-plans).
         """
+        meta = self.metadata()
         target = target_file_bytes or int(
-            self.metadata().properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
+            meta.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
         )
-        files = self.current_files()
+        files, deletes = self._manifest_entry(meta)
         small = [f for f in files if 0 < f.bytes < target * 0.75]
         if max_input_files is not None and len(small) > max_input_files:
             small = sorted(small, key=lambda f: (f.bytes, f.path))[:max_input_files]
@@ -1208,15 +1257,18 @@ class LakeTable:
             return 0
         total = sum(f.bytes for f in small)
         n_out = max(1, -(-total // target))  # ceil
-        ln = self._lineage_on()
-        data = self.scan_files(spark, small, lineage=ln)
-        self.commit_delta(
-            data,
-            [f.path for f in small],
-            summary={"operation_detail": "compact", "input_files": len(small)},
-            target_partitions=int(n_out),
-            preserve_lineage=ln,
-        )
+        ln = self._lineage_on(meta)
+        try:
+            self.commit_delta(
+                self._read(spark, meta, small, deletes, lineage=ln),
+                [f.path for f in small],
+                summary={"operation_detail": "compact", "input_files": len(small)},
+                target_partitions=int(n_out),
+                preserve_lineage=ln,
+                meta=meta,
+            )
+        except StaleBaseConflict:
+            return 0
         return len(small)
 
     def rewrite_sorted(
@@ -1249,13 +1301,14 @@ class LakeTable:
         missing = [c for c in sort_by if c not in names]
         if missing:
             raise ValueError(f"sort columns not in schema: {missing}")
-        files = self._manifest_entry(meta)[0]
+        files, deletes = self._manifest_entry(meta)
         if not files:
             return 0
         # make the cluster keys prunable in future stats BEFORE staging
         self.update_properties(**{"write.stats-columns": ",".join(sort_by)})
+        meta.properties["write.stats-columns"] = ",".join(sort_by)
         ln = self._lineage_on(meta)
-        data = self.to_df(spark, lineage=ln)
+        data = self._read(spark, meta, files, deletes, lineage=ln)
         target = target_file_bytes or int(
             meta.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
         )
@@ -1284,28 +1337,31 @@ class LakeTable:
             drop_deletes=True,
             preserve_layout=True,
             preserve_lineage=ln,
+            meta=meta,
         )
         return len(files)
 
     def materialize_deletes(self, spark: SparkSession) -> int:
         """Rewrite-the-deletes maintenance (Iceberg's rewrite_position_deletes
         / the reference's documented upsert compaction hygiene, docs/faq.md:5-7):
-        rewrite every data file an equality delete could still hit — older
-        than some delete AND key-bounds-overlapping it — with deletes applied,
-        then drop all delete files in the same atomic commit. Read
-        amplification returns to zero; untouched files are not rewritten.
+        rewrite every data file a deletion vector names, and every one an
+        equality delete could still hit — older than some delete AND
+        key-bounds-overlapping it — with deletes applied, then drop the
+        deletes in the same atomic commit. Read amplification returns to
+        zero; untouched files are not rewritten.
 
-        Returns the number of data files rewritten."""
+        Returns the number of data files rewritten: 0 when a concurrent
+        commit removed one or changed its vector (the next call re-plans)."""
         meta = self.metadata()
         files, deletes = self._manifest_entry(meta)
         if not deletes:
             return 0
         types = pruning.column_types(meta.schema)
         eq_dels = [d for d in deletes if d.content != "position"]
-        pos_names = _pos_delete_targets([d for d in deletes if d.content == "position"])
+        vectors = _vectors(deletes)
         affected = [
             f for f in files
-            if os.path.basename(f.path) in pos_names
+            if f.path in vectors
             or any(pruning.delete_may_touch(d, [f], types) for d in eq_dels)
         ]
         ln = self._lineage_on(meta)
@@ -1314,14 +1370,17 @@ class LakeTable:
             if affected
             else None
         )
-        self.commit_delta(
-            clean,
-            [f.path for f in affected],
-            summary={"operation_detail": "materialize-deletes", "input_files": len(affected)},
-            drop_deletes=True,
-            preserve_lineage=ln,
-            meta=meta,
-        )
+        try:
+            self.commit_delta(
+                clean,
+                [f.path for f in affected],
+                summary={"operation_detail": "materialize-deletes", "input_files": len(affected)},
+                drop_deletes=True,
+                preserve_lineage=ln,
+                meta=meta,
+            )
+        except StaleBaseConflict:
+            return 0
         return len(affected)
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
@@ -1334,9 +1393,10 @@ class LakeTable:
         def mutate(meta: TableMetadata):
             if len(meta.snapshots) <= keep_last:
                 return _NOTHING_TO_COMMIT
-            # snapshots pinned by named refs (tags/branch heads) are never
-            # expired — same protection Iceberg's procedure applies
+            # ref heads (main's too: a branch commit may be newer) are
+            # never expired — same protection Iceberg's procedure applies
             pinned = {r["snapshot_id"] for r in meta.refs.values()}
+            pinned.add(meta.current_snapshot_id)
             keep = [
                 s
                 for i, s in enumerate(meta.snapshots)
@@ -1375,11 +1435,12 @@ class LakeTable:
         return len(dead_paths)
 
     def remove_orphan_files(self, older_than_seconds: float = 86400.0) -> list[str]:
-        """Delete data-dir files and ``metadata/manifest-*.json`` files no
-        retained snapshot references (Iceberg's remove_orphan_files
-        maintenance procedure; completes the W12 abort story — a writer
-        that died between staging and ``_abort_staged``, or between writing
-        a manifest and its commit, leaves files this pass reclaims).
+        """Delete data-dir files, ``metadata/manifest-*.json`` files no
+        retained snapshot references and metadata temp files (Iceberg's
+        remove_orphan_files maintenance procedure; completes the W12 abort
+        story — a writer that died between staging and ``_abort_staged``,
+        between writing a manifest and its commit, or before linking its
+        candidate version, leaves files this pass reclaims).
 
         Only files whose mtime is older than ``older_than_seconds`` are
         deleted: anything younger may belong to a concurrent in-flight
@@ -1395,6 +1456,7 @@ class LakeTable:
         cutoff = time.time() - older_than_seconds
         paths = [os.path.join(r, n) for r, _d, ns in os.walk(self.data_dir) for n in ns]
         paths += sorted(glob.glob(os.path.join(self.meta_dir, "manifest-*.json")))
+        paths += sorted(glob.glob(os.path.join(self.meta_dir, ".*.tmp")))
         removed: list[str] = []
         for p in paths:
             try:
@@ -1510,21 +1572,15 @@ class LakeTable:
         fields.  A key deleted and re-inserted surfaces as an upsert
         only, like a MERGE would treat it.
 
-        Scale: manifest pruning does the heavy lifting — a data file whose
-        sequence number is ≤ ``snapshot_id`` can only hold rows last
-        updated at or before it (inheritance assigns the file's own
-        sequence; materialized values from rewrites are always older than
-        the rewrite's sequence), so only files committed after the
-        snapshot are scanned: cost ∝ new + rewritten data, not table
-        size.  The residual filter drops pre-existing rows that rewrites
-        carried into new files.  Delete images are bounded the same way:
-        candidate victims come only from delete files committed after the
-        snapshot, files those deletes target, and files removed from the
-        manifest since (CoW / materializing rewrites); both snapshot
-        scans are then key-bounds-pruned to candidate ranges.  As with
-        Iceberg changelogs, compaction between the two snapshots widens
-        the candidate set to the rewritten files — tail changelogs before
-        compacting."""
+        Scale: only files committed after the snapshot are scanned (a file
+        with seq ≤ ``snapshot_id`` holds only rows last updated at or
+        before it), so cost ∝ new + rewritten data; the residual filter
+        drops old rows that rewrites carried.  Delete-image candidates come
+        only from equality deletes committed after the snapshot, files
+        whose vector was replaced since, and files removed since, and both
+        snapshot scans are key-bounds-pruned to their ranges.  Compaction
+        between the snapshots widens the candidates to the rewritten
+        files — tail changelogs before compacting."""
         meta = self.metadata()
         if not self._lineage_on(meta):
             # without per-row lineage a rewrite re-sequences every carried
@@ -1569,8 +1625,8 @@ class LakeTable:
                 .parquet(*[d.path for d in eq_dels])
                 .select(*key_cols)
             )
-        targeted = _pos_delete_targets([d for d in new_dels if d.content == "position"])
-        pos_targets = [f for f in old_files if os.path.basename(f.path) in targeted]
+        revectored = {d.referenced_data_file for d in new_dels}
+        pos_targets = [f for f in old_files if f.path in revectored]
         # keys of targeted/removed files over-approximate the victims; the
         # anti-join against live keys screens out survivors
         for fl in (pos_targets, removed):
@@ -1652,10 +1708,12 @@ class LakeTable:
         spark: SparkSession,
         files: list[DataFile],
         lineage: bool = False,
+        meta: TableMetadata | None = None,
     ) -> DataFrame:
         """Read a subset of data files with the current snapshot's deletes
-        applied.  ``lineage`` as in :meth:`to_df`."""
-        meta = self.metadata()
+        applied.  ``lineage`` as in :meth:`to_df`; ``meta``: the caller's
+        metadata instead of a re-read."""
+        meta = meta if meta is not None else self.metadata()
         return self._read(spark, meta, files, self._manifest_entry(meta)[1], lineage=lineage)
 
     def _read(
@@ -1669,40 +1727,36 @@ class LakeTable:
         """Scan plan: ONE multi-file parquet read and no side-table job.
         File name and row index come from the scan's deterministic
         ``_metadata`` column, so a filter the caller adds is pushed into
-        the parquet scan.  Position deletes are an anti-join on (file name,
-        row index); equality deletes one anti-join on (key columns,
-        data.seq < del.seq) against a second small parquet read.  Delete
-        sides are broadcast when manifest stats say they are small, so a
-        merge-on-read scan never shuffles its data side (Iceberg's
-        read-path model).  Per-file sequence numbers and first row ids
-        (:func:`file_lookup`) are attached only when something reads them."""
+        the parquet scan.  Deletion vectors are an anti-join on (file name,
+        row index) against the distinct parquet files of the position
+        entries that name a scanned file; equality deletes one anti-join on
+        (key columns, data.seq < del.seq) against a second small parquet
+        read.  Delete sides are broadcast when manifest stats say they are
+        small, so a merge-on-read scan never shuffles its data side
+        (Iceberg's read-path model).  Per-file sequence numbers and first
+        row ids (:func:`file_lookup`) are attached only when something
+        reads them."""
         schema = meta.schema
         read_schema = lineage_read_schema(schema) if lineage else schema
         if not files:
             return spark.createDataFrame([], read_schema)
 
         key_cols = [c for c in meta.identifier_fields if c in {f.name for f in schema.fields}]
-        # a delete file is relevant only if some scanned file is older and
-        # it can touch one: a PRUNED scan (partition_values / row_filter
-        # point lookups) must not pay tombstone-read amplification for
-        # delete files that cannot touch its kept files — position deletes
-        # name files explicitly (file_name bounds vs kept basenames),
-        # equality deletes are range-checked per key column; anything
-        # without usable bounds is kept
-        min_seq = min(f.seq for f in files)
-        basenames = sorted(os.path.basename(f.path) for f in files)
+        # a pruned scan reads only the deletes that can touch its files: a
+        # vector names its file, an equality delete is range-checked
+        scanned = {f.path for f in files}
+        paths = {d.path for d in deletes if d.referenced_data_file in scanned}
+        vectors = [d for d in deletes if d.path in paths]  # all rows of those files
         types = pruning.column_types(schema)
-        touching = [
+        relevant = [
             d for d in deletes
-            if d.seq > min_seq
-            and (key_cols or d.content == "position")
-            and pruning.delete_touches_scan(d, files, basenames, types)
+            if d.content != "position"
+            and key_cols
+            and pruning.delete_may_touch(d, files, types)
         ]
-        pos_relevant = [d for d in touching if d.content == "position"]
-        relevant = [d for d in touching if d.content != "position"]
 
         df = spark.read.schema(read_schema).parquet(*[f.path for f in files])
-        if not relevant and not pos_relevant and not lineage:
+        if not relevant and not vectors and not lineage:
             return df
 
         # file identity and row position from the scan's own metadata:
@@ -1711,13 +1765,11 @@ class LakeTable:
         df = df.withColumn("_fname", F.col("_metadata.file_name")).withColumn(
             "_pos", F.col("_metadata.row_index")
         )
-        if pos_relevant:
-            # positional skipping: anti-join on (file name, parquet row
-            # index) — integer compare per row, no key-tuple comparison
-            pdels = spark.read.schema("file_name string, pos long").parquet(
-                *[d.path for d in pos_relevant]
-            )
-            if sum(d.rows for d in pos_relevant) * 64 <= _BROADCAST_BYTES:
+        if vectors:
+            # positional skipping: anti-join on (file name, row index); a
+            # shared parquet's rows for other files match nothing scanned
+            pdels = _vector_rows(spark, vectors)
+            if sum(d.rows for d in vectors) * 64 <= _BROADCAST_BYTES:
                 pdels = F.broadcast(pdels)
             df = df.join(
                 pdels,
@@ -2026,16 +2078,23 @@ def _zvalue_col(
     return z
 
 
-def _pos_delete_targets(deletes: list[DeleteFile]) -> set[str]:
-    """The data-file names position ``deletes`` name, read driver-side from
-    their ``file_name`` column (bounded by delete rows; no Spark job)."""
-    import pyarrow.parquet as pq
+def _ref_head(meta: TableMetadata, ref: str) -> int | None:
+    """The snapshot id at a ref head; an unknown ref falls back to main's."""
+    if ref == "main":
+        return meta.current_snapshot_id
+    r = meta.refs.get(ref)
+    return r["snapshot_id"] if r else meta.current_snapshot_id
 
-    names: set[str] = set()
-    for d in deletes:
-        col = pq.read_table(d.path, columns=["file_name"]).column("file_name")
-        names.update(col.unique().to_pylist())
-    return names
+
+def _vector_rows(spark: SparkSession, vectors: list[DeleteFile]) -> DataFrame:
+    """The ``(file_name, pos)`` rows of the parquet files of ``vectors``."""
+    paths = sorted({d.path for d in vectors})
+    return spark.read.schema("file_name string, pos long").parquet(*paths)
+
+
+def _vectors(deletes: list[DeleteFile]) -> dict[str, DeleteFile]:
+    """The position entries of ``deletes`` by the data file they name."""
+    return {d.referenced_data_file: d for d in deletes if d.content == "position"}
 
 
 def lineage_read_schema(schema: T.StructType) -> T.StructType:

@@ -24,18 +24,18 @@ returns the candidates plus one column-pruned ``_metadata`` semi-join
 yielding the ``(file_name, pos)`` of matched rows.  The pruning itself —
 typed key ranges, the overlap test and the partition trust rules,
 including that partition fields over non-key columns never prune — lives
-in ``lakehouse/pruning.py``.  The probe reads raw parquet: outstanding
-deletes are not applied, so an already-deleted row version still counts
-as a hit.
+in ``lakehouse/pruning.py``.  The probe reads raw parquet, so an
+already-deleted row version still counts as a hit.
 
 **The sinks**, selected by the ``write.upsert.mode`` table property (or
 ``mode=``) and, for merge-on-read, the table's ``format-version`` (or
 ``delete_style=``):
 
-- *position* (v3 merge-on-read, deletion-vector semantics): the hit frame
-  becomes a position-delete file, committed with the surviving source rows
-  in one ``rowdelta`` snapshot.  No existing file is rewritten; reads do
-  positional skipping.
+- *position* (v3 merge-on-read, the reference's PartitioningDVWriter): the
+  hit frame is merged into the candidates' deletion vectors (one per data
+  file), replaced in one ``rowdelta`` snapshot with the surviving source
+  rows.  No file is rewritten; a re-delete is a no-op.  A candidate changed
+  since the merge's metadata read raises ``StaleBaseConflict`` (replay).
 - *rewrite* (copy-on-write): the files holding a hit are rewritten — their
   rows anti-joined against the source keys, unioned with the surviving
   source rows — and swapped in one delta commit.
@@ -145,6 +145,7 @@ def merge_into(
                 delete_positions_df=plan.hits,
                 branch=branch,
                 meta=meta,
+                dv_files=plan.candidates,
             )
             return MergeStats(
                 len(plan.candidates), 0, plan.rows(added), "merge-on-read", deleted
@@ -163,7 +164,7 @@ def merge_into(
             # v3: carry row lineage through the rewrite — untouched rows in
             # affected files keep their _row_id (upserted rows union in
             # with nulls and inherit fresh ids from the new file's range)
-            kept = table.scan_files(spark, affected, lineage=lineage).join(
+            kept = table.scan_files(spark, affected, lineage=lineage, meta=meta).join(
                 plan.keys, on=key_cols, how="left_anti"
             )
             new_data = kept.unionByName(surviving, allowMissingColumns=lineage)

@@ -362,26 +362,38 @@ class ChangeConsumer:
     def _maybe_compact(self, spark: SparkSession, table) -> None:
         """Scheduled compaction (upsert read-amplification hygiene the
         reference documents at docs/faq.md:5-7): bin-pack small data files
-        and, once enough equality-delete files accumulate, materialize the
-        deletes so merge-on-read scan overhead stays bounded."""
+        and, once enough delete files have been written since the table
+        last had none, materialize the deletes so merge-on-read scan
+        overhead stays bounded."""
         ic = self.config.iceberg
         if ic.write_branch and not ic.write_branch_autopublish:
             # unpublished staged commits outstanding: maintenance rewrites
             # would advance main and block the operator's fast_forward —
             # defer until after publish
             return
-        if len(table.current_deletes()) >= max(1, ic.rewrite_delete_files_min):
+        keep = ic.expire_keep_snapshots
+        if keep:
+            # metadata-growth hygiene: retire history beyond the configured
+            # time-travel horizon and GC files only the expired snapshots
+            # reference (no-op when history is already within the horizon).
+            # Runs first, while this batch's epoch-stamped commit is the
+            # newest snapshot: expiring after a materialization would keep
+            # only that unstamped rewrite and lose the epoch guard's stamp
+            table.expire_snapshots(keep_last=keep)
+        meta = table.metadata()
+        head = next(
+            (s for s in meta.snapshots if s.snapshot_id == meta.current_snapshot_id),
+            None,
+        )
+        # delete files written since the table last had none — a replaced
+        # deletion vector still counts as a write
+        written = int(head.summary.get("outstanding_delete_writes", 0)) if head else 0
+        if written >= max(1, ic.rewrite_delete_files_min):
             table.materialize_deletes(spark)
         if ic.remove_orphans_grace_seconds > 0:
             # reclaim crashed writers' staged files (W12 completion) —
             # grace-period-guarded so in-flight writes are never touched
             table.remove_orphan_files(ic.remove_orphans_grace_seconds)
-        keep = ic.expire_keep_snapshots
-        if keep:
-            # metadata-growth hygiene: retire history beyond the configured
-            # time-travel horizon and GC files only the expired snapshots
-            # reference (no-op when history is already within the horizon)
-            table.expire_snapshots(keep_last=keep)
         n = ic.compact_every_commits
         if not n:
             return
@@ -492,11 +504,11 @@ class ChangeConsumer:
         md_path = export_iceberg_table(
             table, dest, degrade_partitions=degrade_partitions
         )
+        from ..lakehouse.catalog_commit import publish_to_catalog
+
+        ns = self.config.iceberg.namespace
         if rest_uri:
-            from ..lakehouse.rest_catalog import (
-                RestCatalogClient,
-                publish_to_rest_catalog,
-            )
+            from ..lakehouse.rest_catalog import RestCatalogClient
 
             client = RestCatalogClient(
                 rest_uri,
@@ -504,43 +516,29 @@ class ChangeConsumer:
                 warehouse=rest_warehouse,
                 transport=rest_transport,
             )
-            publish_to_rest_catalog(
-                client, self.config.iceberg.namespace, table_name, md_path
-            )
+            publish_to_catalog(client, ns, table_name, md_path)
         if jdbc_uri:
             # the reference's jdbc catalog family (CatalogJdbc.java):
             # same publication contract as REST, but the registered
             # pointer CASes forward IN PLACE (public iceberg_tables
             # schema) — no unregistered window at all
-            from ..lakehouse.jdbc_catalog import (
-                JdbcCatalogClient,
-                publish_to_jdbc_catalog,
-            )
+            from ..lakehouse.jdbc_catalog import JdbcCatalogClient
 
-            publish_to_jdbc_catalog(
+            publish_to_catalog(
                 JdbcCatalogClient(jdbc_uri, catalog_name=jdbc_catalog_name),
-                self.config.iceberg.namespace,
-                table_name,
-                md_path,
+                ns, table_name, md_path,
             )
         if nessie_uri:
             # the reference's third catalog family (CatalogNessie.java):
             # the table becomes an ICEBERG_TABLE content committed on
             # the branch — key-scoped conflicts, no unregistered window
-            from ..lakehouse.nessie_catalog import (
-                NessieCatalogClient,
-                publish_to_nessie_catalog,
-            )
+            from ..lakehouse.nessie_catalog import NessieCatalogClient
 
-            publish_to_nessie_catalog(
+            publish_to_catalog(
                 NessieCatalogClient(
-                    nessie_uri,
-                    branch=nessie_branch,
-                    transport=nessie_transport,
+                    nessie_uri, branch=nessie_branch, transport=nessie_transport
                 ),
-                self.config.iceberg.namespace,
-                table_name,
-                md_path,
+                ns, table_name, md_path,
             )
         return md_path
 

@@ -536,7 +536,7 @@ def test_merge_rejects_unknown_delete_style(spark, warehouse):
 
 def test_upsert_source_rows_counted_once(spark, warehouse):
     """A v3 upsert reports the batch's own row count, not the size of the
-    position-delete file (which still re-deletes older row versions)."""
+    deletion vectors it rewrites."""
     c = build_consumer(warehouse)
     written = []
     for ts in range(4):  # create the 10 keys, then update them three times
@@ -546,6 +546,78 @@ def test_upsert_source_rows_counted_once(spark, warehouse):
     assert written == [10, 10, 10, 10]
     got = {r["id"]: r["first_name"] for r in read_table(c, spark).collect()}
     assert got == {i: "v3" for i in range(10)}
+
+
+def test_repeated_updates_delete_each_row_once(spark, warehouse):
+    """Updating the same 5 keys three times deletes 5 rows per batch: a
+    merge replaces each touched file's deletion vector with the union of
+    the old one and its hits, so re-deleting an older row version is a
+    no-op and delete rows track the versions actually superseded."""
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    cat = LakeCatalog(warehouse)
+    schema = "id long, v string, __op string"
+    base = spark.createDataFrame([(i, f"v{i}", "r") for i in range(20)], schema)
+    t = cat.create_table(
+        "ns", "dv_growth", base.schema, identifier_fields=["id"],
+        properties={"format-version": "3"},
+    )
+    merge_into(t, base)
+    stats, totals = [], []
+    for b in range(3):
+        upd = spark.createDataFrame([(i, f"b{b}", "u") for i in range(5)], schema)
+        stats.append(merge_into(t, upd))
+        totals.append(t.metadata().snapshots[-1].summary["total_delete_rows"])
+        live = {f.path for f in t.current_files()}
+        named = [d.referenced_data_file for d in t.current_deletes()]
+        assert set(named) <= live and len(named) == len(set(named))
+    assert [s.delete_rows for s in stats] == [5, 5, 5]
+    assert [s.source_rows for s in stats] == [5, 5, 5]
+    assert totals == [5, 10, 15]
+    got = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
+    assert got == {i: ("b2" if i < 5 else f"v{i}") for i in range(20)}
+
+    c = build_consumer(warehouse)
+    c.handle_batch(
+        to_df(spark, [customer_event(i, "v0", "c", 0) for i in range(20)]), epoch_id=0
+    )
+    written = [
+        c.handle_batch(
+            to_df(spark, [customer_event(i, f"v{ts}", "u", ts) for i in range(5)]),
+            epoch_id=ts,
+        ).tables_written[DEST]
+        for ts in (1, 2, 3)
+    ]
+    assert written == [5, 5, 5]
+
+
+def test_maintenance_keeps_the_epoch_stamp(spark, warehouse):
+    """With expire_keep_snapshots=1 and a delete materialization at every
+    batch, maintenance must not expire the batch's epoch-stamped commit:
+    a replay of the last epoch writes nothing, and an older epoch still
+    raises instead of applying."""
+    c = build_consumer(warehouse, rewrite_delete_files_min=1, expire_keep_snapshots=1)
+    c.handle_batch(
+        to_df(spark, [customer_event(i, "a", "c", 1) for i in range(3)]), epoch_id=1
+    )
+    batch2 = to_df(spark, [customer_event(i, "b", "u", 2) for i in range(3)])
+    assert c.handle_batch(batch2, epoch_id=2).tables_written == {DEST: 3}
+    table = c.catalog.load_table("debeziumevents", TABLE)
+    assert table.current_deletes() == []  # the batch's vectors materialized
+    ids_before = sorted(
+        r["_row_id"] for r in table.to_df(spark, lineage=True).collect()
+    )
+    assert c.handle_batch(batch2, epoch_id=2).tables_written.get(DEST, 0) == 0
+    assert sorted(
+        r["_row_id"] for r in table.to_df(spark, lineage=True).collect()
+    ) == ids_before
+    with pytest.raises(EpochRegressionError):
+        c.handle_batch(
+            to_df(spark, [customer_event(9, "late", "c", 3)]), epoch_id=1
+        )
+    got = {r["id"]: r["first_name"] for r in read_table(c, spark).collect()}
+    assert got == {0: "b", 1: "b", 2: "b"}
 
 
 def test_expire_snapshots_cadence(spark, warehouse):
@@ -650,7 +722,9 @@ def test_mor_position_deletes_materialize_and_time_travel(spark, warehouse):
         )
         merge_into(t, upd, mode="merge-on-read")
     assert all(d.content == "position" for d in t.current_deletes())
-    assert len(t.current_deletes()) == 2
+    # one deletion vector per data file: batch 1's keys all sit in the base
+    # file, so its merge replaces that file's vector instead of adding one
+    assert len(t.current_deletes()) == 1
     # chained updates: batch 1 position-deletes batch 0's new rows too
     expect = {r["id"]: r["v"] for r in t.to_df(spark).collect()}
     assert len(expect) == 12

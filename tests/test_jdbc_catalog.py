@@ -15,7 +15,9 @@ from debezium_server_iceberg_spark.lakehouse.jdbc_catalog import (
     JdbcCatalogError,
     NoSuchNamespaceError,
     NoSuchTableError,
-    publish_to_jdbc_catalog,
+)
+from debezium_server_iceberg_spark.lakehouse.catalog_commit import (
+    publish_to_catalog,
     read_table_by_name,
 )
 
@@ -77,13 +79,13 @@ def test_republish_cas_moves_pointer_in_place(tmp_path):
     row never disappears (no unregistered window, unlike the REST
     drop+register fallback)."""
     c = _client(tmp_path)
-    publish_to_jdbc_catalog(c, "ns", "t", "/wh/v1.metadata.json")
-    publish_to_jdbc_catalog(c, "ns", "t", "/wh/v2.metadata.json")
+    publish_to_catalog(c, "ns", "t", "/wh/v1.metadata.json")
+    publish_to_catalog(c, "ns", "t", "/wh/v2.metadata.json")
     got = c.load_table("ns", "t")
     assert got["metadata-location"] == "/wh/v2.metadata.json"
     assert got["previous-metadata-location"] == "/wh/v1.metadata.json"
     # idempotent: same location CASes from itself to itself
-    publish_to_jdbc_catalog(c, "ns", "t", "/wh/v2.metadata.json")
+    publish_to_catalog(c, "ns", "t", "/wh/v2.metadata.json")
     assert c.load_table("ns", "t")["metadata-location"] == "/wh/v2.metadata.json"
 
 
@@ -91,7 +93,7 @@ def test_concurrent_commit_fails_cas(tmp_path):
     """Iceberg's CommitFailedException contract: a commit whose expected
     pointer is stale (another writer moved it) matches zero rows."""
     c = _client(tmp_path)
-    publish_to_jdbc_catalog(c, "ns", "t", "/wh/v1.metadata.json")
+    publish_to_catalog(c, "ns", "t", "/wh/v1.metadata.json")
     c.commit_table("ns", "t", "/wh/v2.metadata.json", "/wh/v1.metadata.json")
     with pytest.raises(CommitFailedError):
         c.commit_table("ns", "t", "/wh/v3.metadata.json", "/wh/v1.metadata.json")
@@ -105,9 +107,9 @@ def test_catalog_name_scopes_rows(tmp_path):
     public schema's catalog_name column exists for."""
     a = _client(tmp_path, "cat_a")
     b = _client(tmp_path, "cat_b")
-    publish_to_jdbc_catalog(a, "ns", "t", "/a/v1.metadata.json")
+    publish_to_catalog(a, "ns", "t", "/a/v1.metadata.json")
     assert not b.table_exists("ns", "t")
-    publish_to_jdbc_catalog(b, "ns", "t", "/b/v1.metadata.json")
+    publish_to_catalog(b, "ns", "t", "/b/v1.metadata.json")
     assert a.load_table("ns", "t")["metadata-location"] == "/a/v1.metadata.json"
     assert b.load_table("ns", "t")["metadata-location"] == "/b/v1.metadata.json"
 
@@ -184,7 +186,7 @@ def test_read_table_by_name_resolves_jdbc_catalog_metadata(spark, warehouse, tmp
     md_path = export_iceberg_table(t, dest)
 
     client = _client(tmp_path)
-    publish_to_jdbc_catalog(client, "pub", "cust", md_path)
+    publish_to_catalog(client, "pub", "cust", md_path)
     got = read_table_by_name(spark, client, "pub", "cust")
     assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
 

@@ -300,7 +300,10 @@ def test_stage_failure_aborts_every_stage(spark, warehouse, monkeypatch):
 
     good_add = spark.createDataFrame([(3, "c", None)], SCHEMA)
     good_keys = spark.createDataFrame([(1,)], "id long")
-    positions = spark.createDataFrame([("nothing.parquet", 0)], "file_name string, pos long")
+    # row 0 of the committed file (id 1), which the equality delete also hits
+    positions = spark.createDataFrame(
+        [(os.path.basename(next(iter(committed))), 0)], "file_name string, pos long"
+    )
     finished = []
     orig = t._write_staged
 
@@ -951,15 +954,13 @@ def test_minhash_remove_docs_pruned_probe_skips_delete_file(spark, warehouse):
     # does not touch a scan restricted to b1-only files
     from debezium_server_iceberg_spark.lakehouse.pruning import (
         column_types,
-        delete_touches_scan,
+        delete_may_touch,
     )
-    import os as _os
 
     dels = idx.table.current_deletes()
     assert dels  # remove_docs really committed a delete file
-    names = sorted(_os.path.basename(f.path) for f in b1_only)
     types = column_types(idx.table.metadata().schema)
-    assert all(not delete_touches_scan(d, b1_only, names, types) for d in dels)
+    assert all(not delete_may_touch(d, b1_only, types) for d in dels)
 
 
 def test_single_file_fast_path_requires_estimate_headroom(
@@ -1149,3 +1150,250 @@ def test_decimal_key_footer_stats_need_no_spark_job(spark, warehouse):
     assert counts["dec"] == counts["wide"] == counts["long"]
     assert bounds["dec"] == [["-3.50", "7.00"]] * 2
     assert bounds["wide"] == [["-3.500", "7000000000000.000"]] * 2
+
+
+# ------------------------------------------- deletion vectors and the commit
+
+
+def _one_vector_per_live_file(t, ref: str = "main") -> list:
+    """Assert the manifest invariant at a ref head and return its position
+    entries: each names a live data file, and no file has two."""
+    meta = t.metadata()
+    sid = meta.current_snapshot_id if ref == "main" else meta.refs[ref]["snapshot_id"]
+    files, deletes = t._manifest_entry(meta, sid)
+    vectors = [d for d in deletes if d.content == "position"]
+    named = [d.referenced_data_file for d in vectors]
+    assert set(named) <= {f.path for f in files}
+    assert len(named) == len(set(named))
+    return vectors
+
+
+def _dv_table(spark, warehouse, name: str):
+    """A v3 upsert table of keys 0..99 in two data files, keys 0..4
+    already updated once (so the first file carries a deletion vector)."""
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    schema = "id long, v string, __op string"
+    rows = [(i, f"v{i}", "r") for i in range(100)]
+    t = LakeCatalog(warehouse).create_table(
+        "ns", name, spark.createDataFrame(rows[:1], schema).schema,
+        identifier_fields=["id"], properties={"format-version": "3"},
+    )
+    t.append(spark.createDataFrame(rows[:50], schema))
+    t.append(spark.createDataFrame(rows[50:], schema))
+    merge_into(t, _updates(spark, "u0"))
+    return t
+
+
+def _updates(spark, tag: str):
+    return spark.createDataFrame(
+        [(i, tag, "u") for i in range(5)], "id long, v string, __op string"
+    )
+
+
+def _race_before_commit(handle, race) -> None:
+    """Run ``race`` once, right before ``handle``'s next snapshot commit:
+    a deterministic interleaving of two writers on one table."""
+    commit = handle._commit_snapshot
+
+    def raced(*args, **kwargs):
+        handle._commit_snapshot = commit
+        race()
+        return commit(*args, **kwargs)
+
+    handle._commit_snapshot = raced
+
+
+def _assert_converged(spark, t, tag: str) -> None:
+    rows = t.to_df(spark).collect()
+    assert len(rows) == 100 and len({r.id for r in rows}) == 100
+    assert {r.id: r.v for r in rows if r.id < 5} == {i: tag for i in range(5)}
+    _one_vector_per_live_file(t)
+
+
+def test_deletion_vectors_one_entry_per_live_file(spark, warehouse):
+    """Merges replace vectors, compaction drops the vectors of the files it
+    removed, a branch merge keeps its own vectors, and neither
+    expire_snapshots nor remove_orphan_files reclaims a parquet that an
+    entry still references."""
+    import os
+
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    t = _dv_table(spark, warehouse, "dv_invariant")
+    for n, tag in ((2, "u1"), (3, "u2")):
+        merge_into(t, _updates(spark, tag))
+        # the first file and every earlier batch file hold a version of 0..4
+        assert len(_one_vector_per_live_file(t)) == n
+    assert t.compact(spark, min_input_files=2) >= 2
+    assert _one_vector_per_live_file(t) == []
+    merge_into(t, _updates(spark, "u3"))
+    merge_into(t, _updates(spark, "b1"), branch="audit")
+    assert len(_one_vector_per_live_file(t)) == 1
+    assert len(_one_vector_per_live_file(t, "audit")) == 2
+    main_rows = sorted(t.to_df(spark).collect())
+    t.expire_snapshots(keep_last=1)
+    t.remove_orphan_files(older_than_seconds=0)
+    for ref in ("main", "audit"):
+        assert all(os.path.exists(d.path) for d in _one_vector_per_live_file(t, ref))
+    assert sorted(t.to_df(spark).collect()) == main_rows
+    _assert_converged(spark, t, "u3")
+    assert {r.id: r.v for r in t.to_df(spark, ref="audit").collect() if r.id < 5} == {
+        i: "b1" for i in range(5)
+    }
+
+
+def test_materialize_raced_by_upsert_conflicts_then_converges(spark, warehouse):
+    """materialize_deletes plans, an upsert on a second handle replaces a
+    vector of a file it rewrites, then materialize commits: its commit
+    fails without a retry, leaves the upsert's snapshot, and returns 0; the
+    next call converges."""
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    a = _dv_table(spark, warehouse, "race_mat")
+    b = LakeTable(a.location)
+    heads = []
+    _race_before_commit(
+        a, lambda: heads.append((merge_into(b, _updates(spark, "u1")), b.metadata().version))
+    )
+    assert a.materialize_deletes(spark) == 0
+    assert a.metadata().version == heads[0][1]  # no commit after the upsert's
+    assert a.materialize_deletes(spark) >= 1
+    assert a.current_deletes() == []
+    _assert_converged(spark, a, "u1")
+
+
+def test_compact_raced_by_upsert_conflicts_then_converges(spark, warehouse):
+    """compact plans, an upsert replaces the vector of an input file, then
+    compact commits: no retry, the upsert's snapshot stays, 0 is returned;
+    the next cadence call converges."""
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    a = _dv_table(spark, warehouse, "race_compact")
+    b = LakeTable(a.location)
+    versions = []
+    _race_before_commit(
+        a, lambda: versions.append((merge_into(b, _updates(spark, "u1")), b.metadata().version))
+    )
+    staged = {f.path for f in a.current_files()}
+    assert a.compact(spark, min_input_files=2) == 0
+    assert a.metadata().version == versions[0][1]
+    assert {f.path for f in a.current_files()} > staged  # the upsert's file only
+    assert a.compact(spark, min_input_files=2) >= 2
+    _assert_converged(spark, a, "u1")
+
+
+def test_upsert_raced_by_compact_conflicts_then_converges(spark, warehouse):
+    """An upsert stages its vectors, compaction removes the files they name,
+    then the upsert commits: StaleBaseConflict propagates without a retry
+    and the compaction's snapshot stays; replaying the batch converges."""
+    import os
+
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable, StaleBaseConflict
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    a = _dv_table(spark, warehouse, "race_upsert")
+    b = LakeTable(a.location)
+
+    def on_disk() -> set:
+        return {
+            os.path.join(r, n) for r, _d, ns in os.walk(a.data_dir) for n in ns
+            if n.endswith(".parquet")
+        }
+
+    before = on_disk()
+    versions = []
+    _race_before_commit(
+        a, lambda: versions.append((b.compact(spark, min_input_files=2), b.metadata().version))
+    )
+    with pytest.raises(StaleBaseConflict):
+        merge_into(a, _updates(spark, "u1"))
+    assert versions[0][0] >= 2 and a.metadata().version == versions[0][1]
+    # the upsert's staged data and vector files were aborted
+    assert on_disk() - before == {f.path for f in a.current_files()}
+    merge_into(a, _updates(spark, "u1"))
+    _assert_converged(spark, a, "u1")
+
+
+def test_stacked_position_delete_entry_fails_loudly(spark, warehouse):
+    """A position entry without referenced_data_file (a stacked delete file
+    from an older manifest) refuses to load instead of applying to
+    nothing."""
+    import json
+    import os
+
+    t = _dv_table(spark, warehouse, "dv_legacy")
+    meta = t.metadata()
+    snap = next(s for s in meta.snapshots if s.snapshot_id == meta.current_snapshot_id)
+    path = os.path.join(t.meta_dir, snap.manifest)
+    with open(path) as fh:
+        doc = json.load(fh)
+    for d in doc["delete_files"]:
+        d.pop("referenced_data_file")
+    with open(path, "w") as fh:
+        json.dump(doc, fh)
+    with pytest.raises(ValueError, match="referenced_data_file"):
+        t.to_df(spark)
+
+
+def test_stale_candidate_version_does_not_wedge(warehouse):
+    """A writer that linked v1 and died before swinging the version hint
+    has committed: readers step forward to it, and the next commit takes
+    v2 instead of failing on the taken slot forever."""
+    import os
+    import shutil
+
+    t = LakeCatalog(warehouse).create_table("ns", "wedge", SCHEMA, identifier_fields=["id"])
+    shutil.copy(t._version_path(0), t._version_path(1))  # complete stray v1
+    t.update_properties(owner="a")
+    assert t.metadata().version == 2
+    assert t.metadata().properties["owner"] == "a"
+    with open(os.path.join(t.meta_dir, "version-hint.text")) as fh:
+        assert fh.read().strip() == "2"
+
+
+def test_commit_dying_before_hint_swing_is_visible(warehouse, monkeypatch):
+    """The version file, not the hint, is the commit point: a commit that
+    dies after linking its version and before the hint swing is read by
+    the next handle, and remove_orphan_files later reclaims the dead
+    writer's hint temp."""
+    import os
+
+    from debezium_server_iceberg_spark.lakehouse import table as table_mod
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+
+    t = LakeCatalog(warehouse).create_table("ns", "nohint", SCHEMA, identifier_fields=["id"])
+
+    def die(src, dst):
+        raise OSError("writer died")
+
+    monkeypatch.setattr(table_mod.os, "replace", die)
+    with pytest.raises(OSError, match="writer died"):
+        t.update_properties(owner="b")
+    monkeypatch.undo()
+    with open(os.path.join(t.meta_dir, "version-hint.text")) as fh:
+        assert fh.read().strip() == "0"
+    fresh = LakeTable(t.location).metadata()
+    assert (fresh.version, fresh.properties["owner"]) == (1, "b")
+    (tmp,) = [n for n in os.listdir(t.meta_dir) if n.endswith(".tmp")]
+    assert t.remove_orphan_files(older_than_seconds=-1) == [os.path.join(t.meta_dir, tmp)]
+
+
+def test_rename_table_moves_deletion_vector_references(spark, tmp_path):
+    """A renamed v3 table's position entries name the moved data files, so
+    the vectors still apply after the move."""
+    import os
+
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    cat = LakeCatalog(str(tmp_path / "wh"))
+    t = _dv_table(spark, str(tmp_path / "wh"), "dv_orig")
+    moved = cat.rename_table("ns", "dv_orig", "ns", "dv_moved")
+    files = {f.path for f in moved.current_files()}
+    assert {d.referenced_data_file for d in moved.current_deletes()} <= files
+    assert all(p.startswith(moved.location) for p in files)
+    merge_into(moved, _updates(spark, "u1"))
+    _assert_converged(spark, moved, "u1")
+    assert not os.path.exists(t.location)

@@ -25,14 +25,14 @@ from debezium_server_iceberg_spark.config import EngineConfig
 from debezium_server_iceberg_spark.lakehouse import LakeCatalog
 from debezium_server_iceberg_spark.lakehouse.catalog_commit import (
     attach_catalog_commit_hook,
+    publish_to_catalog,
+    read_table_by_name,
 )
 from debezium_server_iceberg_spark.lakehouse.nessie_catalog import (
     AlreadyExistsError,
     CommitFailedError,
     NessieCatalogClient,
     NoSuchTableError,
-    publish_to_nessie_catalog,
-    read_table_by_name,
 )
 
 
@@ -204,7 +204,7 @@ def test_register_wire_sequence():
     (table key), commit — every URL on the public v2 surface."""
     fake = FakeNessie()
     c = _client(fake)
-    publish_to_nessie_catalog(c, "cdc", "orders", "/pub/v1.metadata.json")
+    publish_to_catalog(c, "cdc", "orders", "/pub/v1.metadata.json")
     trace = [(m, p) for m, p, _ in fake.requests]
     assert trace[0] == ("GET", "/api/v2/config")
     assert ("POST", "/api/v2/trees/main/contents") in trace

@@ -13,7 +13,9 @@ from debezium_server_iceberg_spark.lakehouse.rest_catalog import (
     NoSuchTableError,
     RestCatalogClient,
     RestCatalogError,
-    publish_to_rest_catalog,
+)
+from debezium_server_iceberg_spark.lakehouse.catalog_commit import (
+    publish_to_catalog,
 )
 
 
@@ -49,7 +51,7 @@ def test_publish_sequence_fresh_table_bytes():
         ]
     )
     c = RestCatalogClient("http://cat:8181", transport=t)
-    out = publish_to_rest_catalog(
+    out = publish_to_catalog(
         c, "cdc", "orders", "file:///wh/t/metadata/v1.metadata.json"
     )
     assert out["metadata-location"].endswith("v1.metadata.json")
@@ -84,7 +86,7 @@ def test_republish_drops_and_reregisters():
         ]
     )
     c = RestCatalogClient("http://cat:8181", transport=t)
-    out = publish_to_rest_catalog(
+    out = publish_to_catalog(
         c, "cdc", "orders", "file:///wh/t/metadata/v2.metadata.json"
     )
     assert out["metadata-location"].endswith("v2.metadata.json")
@@ -233,7 +235,7 @@ def test_republish_commits_via_cas(tmp_path):
         ]
     )
     c = RestCatalogClient("http://cat:8181", transport=t)
-    out = publish_to_rest_catalog(c, "cdc", "orders", str(p))
+    out = publish_to_catalog(c, "cdc", "orders", str(p))
     assert out["metadata-location"] == str(p)
     assert [(m, u) for m, u, _, _ in t.requests] == [
         ("GET", "http://cat:8181/v1/config"),
@@ -533,10 +535,11 @@ def test_read_table_by_name_resolves_catalog_metadata(spark, warehouse, tmp_path
         export_iceberg_table,
         read_iceberg_table,
     )
+    from debezium_server_iceberg_spark.lakehouse.catalog_commit import (
+        read_table_by_name,
+    )
     from debezium_server_iceberg_spark.lakehouse.rest_catalog import (
         RestCatalogClient,
-        publish_to_rest_catalog,
-        read_table_by_name,
     )
 
     cat = LakeCatalog(warehouse)
@@ -553,7 +556,7 @@ def test_read_table_by_name_resolves_catalog_metadata(spark, warehouse, tmp_path
 
     fake = FakeRestCatalog()
     client = RestCatalogClient("http://cat:8181", transport=fake)
-    publish_to_rest_catalog(client, "pub", "cust", md_path)
+    publish_to_catalog(client, "pub", "cust", md_path)
 
     got = read_table_by_name(spark, client, "pub", "cust")
     assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
