@@ -32,10 +32,13 @@ already-deleted row version still counts as a hit.
 ``delete_style=``):
 
 - *position* (v3 merge-on-read, the reference's PartitioningDVWriter): the
-  hit frame is merged into the candidates' deletion vectors (one per data
-  file), replaced in one ``rowdelta`` snapshot with the surviving source
-  rows.  No file is rewritten; a re-delete is a no-op.  A candidate changed
-  since the merge's metadata read raises ``StaleBaseConflict`` (replay).
+  hit frame is collected to the driver as Arrow (its one job) and unioned
+  there with the candidates' current deletion vectors (one per data file);
+  the vectors that grew are written as one parquet and replaced in one
+  ``rowdelta`` snapshot with the surviving source rows.  No data file is
+  rewritten; a re-delete is a no-op and leaves the file's entry as it is.
+  A re-vectored file changed since the merge's metadata read raises
+  ``StaleBaseConflict`` (replay).
 - *rewrite* (copy-on-write): the files holding a hit are rewritten — their
   rows anti-joined against the source keys, unioned with the surviving
   source rows — and swapped in one delta commit.

@@ -945,6 +945,34 @@ def test_merge_job_counts_pinned(spark, warehouse):
     assert counts == MERGE_JOBS
 
 
+
+def test_merge_jobs_same_with_or_without_current_vectors(spark, warehouse):
+    """A v3 merge into a file that already carries a deletion vector runs
+    as many Spark jobs as one into a file without: the current vector is
+    read and merged on the driver."""
+    from debezium_server_iceberg_spark.lakehouse import LakeCatalog
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    schema = "id long, v string, __op string"
+
+    def batch(keys, tag):
+        return spark.createDataFrame([(i, tag, "u") for i in keys], schema)
+
+    t = LakeCatalog(warehouse).create_table(
+        "ns", "jobs_vectors", batch([], "r").schema, identifier_fields=["id"],
+        properties={"format-version": "3"},
+    )
+    t.append(batch(range(30), "r"))
+    t.append(batch(range(30, 60), "r"))
+    merge_into(t, batch(range(5), "w"))  # warm; the first file gets a vector
+    counts = []
+    for keys in (range(30, 40), range(10, 20)):  # without, then with a vector
+        j = _jobs(spark)
+        assert merge_into(t, batch(keys, "u")).delete_rows == 10
+        counts.append(_jobs(spark) - j)
+    assert len(t.current_deletes()) == 2
+    assert counts[0] == counts[1]
+
 def test_concurrent_uploads_drain_and_keep_local_properties(spark, warehouse, monkeypatch):
     """concurrent_uploads > 1: a failing destination does not abandon the
     other one (it commits before the batch raises), later failures ride

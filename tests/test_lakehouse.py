@@ -1185,9 +1185,9 @@ def _dv_table(spark, warehouse, name: str):
     return t
 
 
-def _updates(spark, tag: str):
+def _updates(spark, tag: str, keys=range(5)):
     return spark.createDataFrame(
-        [(i, tag, "u") for i in range(5)], "id long, v string, __op string"
+        [(i, tag, "u") for i in keys], "id long, v string, __op string"
     )
 
 
@@ -1204,10 +1204,10 @@ def _race_before_commit(handle, race) -> None:
     handle._commit_snapshot = raced
 
 
-def _assert_converged(spark, t, tag: str) -> None:
+def _assert_converged(spark, t, tag: str, keys=range(5)) -> None:
     rows = t.to_df(spark).collect()
     assert len(rows) == 100 and len({r.id for r in rows}) == 100
-    assert {r.id: r.v for r in rows if r.id < 5} == {i: tag for i in range(5)}
+    assert {r.id: r.v for r in rows if r.id in keys} == {i: tag for i in keys}
     _one_vector_per_live_file(t)
 
 
@@ -1244,23 +1244,45 @@ def test_deletion_vectors_one_entry_per_live_file(spark, warehouse):
 
 
 def test_materialize_raced_by_upsert_conflicts_then_converges(spark, warehouse):
-    """materialize_deletes plans, an upsert on a second handle replaces a
-    vector of a file it rewrites, then materialize commits: its commit
-    fails without a retry, leaves the upsert's snapshot, and returns 0; the
-    next call converges."""
+    """materialize_deletes plans, an upsert on a second handle updates
+    live keys of a file it rewrites (so that file's vector grows), then
+    materialize commits: its commit fails without a retry, leaves the
+    upsert's snapshot, and returns 0; the next call converges."""
     from debezium_server_iceberg_spark.lakehouse.table import LakeTable
     from debezium_server_iceberg_spark.operators.merge import merge_into
 
     a = _dv_table(spark, warehouse, "race_mat")
     b = LakeTable(a.location)
     heads = []
+    live = range(5, 10)
     _race_before_commit(
-        a, lambda: heads.append((merge_into(b, _updates(spark, "u1")), b.metadata().version))
+        a,
+        lambda: heads.append(
+            (merge_into(b, _updates(spark, "u1", live)), b.metadata().version)
+        ),
     )
     assert a.materialize_deletes(spark) == 0
     assert a.metadata().version == heads[0][1]  # no commit after the upsert's
     assert a.materialize_deletes(spark) >= 1
     assert a.current_deletes() == []
+    _assert_converged(spark, a, "u1", live)
+    _assert_converged(spark, a, "u0")
+
+
+def test_materialize_raced_by_stale_hits_commits(spark, warehouse):
+    """An upsert racing materialize_deletes whose hits in the file being
+    materialized are all rows its vector already deletes leaves that
+    file's entry as it is: no conflict, the materialization commits, and
+    the table ends with one row per key."""
+    from debezium_server_iceberg_spark.lakehouse.table import LakeTable
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    a = _dv_table(spark, warehouse, "race_mat_stale")
+    b = LakeTable(a.location)
+    (first,) = [d.referenced_data_file for d in a.current_deletes()]
+    _race_before_commit(a, lambda: merge_into(b, _updates(spark, "u1")))
+    assert a.materialize_deletes(spark) == 1
+    assert first not in {f.path for f in a.current_files()}
     _assert_converged(spark, a, "u1")
 
 
@@ -1316,6 +1338,87 @@ def test_upsert_raced_by_compact_conflicts_then_converges(spark, warehouse):
     merge_into(a, _updates(spark, "u1"))
     _assert_converged(spark, a, "u1")
 
+
+
+def test_merge_without_new_positions_stages_no_vector(spark, warehouse):
+    """A v3 merge whose probe finds no row (an insert inside a file's key
+    bounds) stages nothing: no posdel-* directory and no delete entry.  A
+    re-update whose hits in a file are all rows its vector already
+    deletes leaves that file's entry as it is."""
+    import os
+
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    schema = "id long, v string, __op string"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, schema)
+
+    def staged_vectors() -> list:
+        return [n for n in os.listdir(t.data_dir) if n.startswith("posdel-")]
+
+    t = LakeCatalog(warehouse).create_table(
+        "ns", "dv_empty", batch([(0, "r", "r")]).schema,
+        identifier_fields=["id"], properties={"format-version": "3"},
+    )
+    t.append(batch([(i, "r", "r") for i in range(0, 20, 2)]))
+    assert merge_into(t, batch([(5, "n", "c")])).candidate_files == 1
+    assert staged_vectors() == [] and t.current_deletes() == []
+    merge_into(t, batch([(0, "u1", "u")]))
+    (entry,) = t.current_deletes()
+    # hits: row 0 of the first file (already deleted) and the u1 row
+    assert merge_into(t, batch([(0, "u2", "u")])).delete_rows == 1
+    vectors = {d.referenced_data_file: d for d in _one_vector_per_live_file(t)}
+    assert len(vectors) == 2 and vectors[entry.referenced_data_file] == entry
+    assert len(staged_vectors()) == 2
+    got = {r.id: r.v for r in t.to_df(spark).collect()}
+    assert len(got) == 11 and (got[0], got[5]) == ("u2", "n")
+
+
+def test_vector_parquet_no_larger_than_spark_and_exports(spark, warehouse, tmp_path):
+    """The driver-written vector parquet is no larger than Spark's write of
+    the same sorted rows, reads back through ``_vector_rows``, and
+    publishes as deletion vectors that the v3 export's chain read
+    applies."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from debezium_server_iceberg_spark.lakehouse.iceberg_export import (
+        export_iceberg_table,
+        read_iceberg_table,
+    )
+    from debezium_server_iceberg_spark.lakehouse.table import _vector_rows
+    from debezium_server_iceberg_spark.operators.merge import merge_into
+
+    schema = "id long, v string, __op string"
+    t = LakeCatalog(warehouse).create_table(
+        "ns", "dv_size", spark.createDataFrame([], schema).schema,
+        identifier_fields=["id"], properties={"format-version": "3"},
+    )
+    for lo in (0, 10_000):
+        t.append(spark.range(lo, lo + 10_000).selectExpr("id", "'r' AS v", "'r' AS __op"))
+    merge_into(t, spark.range(0, 20_000, 3).selectExpr("id", "'u' AS v", "'u' AS __op"))
+    vectors = t.current_deletes()
+    (path,) = {d.path for d in vectors}
+    written = pq.read_table(path)
+    assert written.num_rows == sum(d.rows for d in vectors) == 6_667
+    expected = list(zip(written["file_name"].to_pylist(), written["pos"].to_pylist()))
+    assert expected == sorted(expected)
+
+    rows = _vector_rows(spark, vectors)
+    assert [tuple(r) for r in rows.orderBy("file_name", "pos").collect()] == expected
+    spark_dir = str(tmp_path / "spark_vector")
+    rows.coalesce(1).sortWithinPartitions("file_name", "pos").write.parquet(spark_dir)
+    (spark_file,) = glob.glob(f"{spark_dir}/*.parquet")
+    assert os.path.getsize(path) <= os.path.getsize(spark_file)
+
+    dest = str(tmp_path / "pub")
+    export_iceberg_table(t, dest)
+    native = sorted(tuple(r) for r in t.to_df(spark).collect())
+    assert len(native) == 20_000
+    assert sorted(tuple(r) for r in read_iceberg_table(spark, dest).collect()) == native
 
 def test_stacked_position_delete_entry_fails_loudly(spark, warehouse):
     """A position entry without referenced_data_file (a stacked delete file

@@ -8,7 +8,8 @@ way; and ONE pruning model (``lakehouse/pruning.py``), so every planner
 reads manifest bounds with the same typed comparisons.  File identity in
 the table and operator layers comes from the scan's deterministic
 ``_metadata`` column, never ``input_file_name()``, which stops filter
-pushdown."""
+pushdown.  The v3 position stage merges deletion vectors on the driver,
+with no Spark write or read of the vectors."""
 
 import ast
 import pathlib
@@ -96,3 +97,14 @@ def test_no_input_file_name():
         if "input_file_name(" in path.read_text()
     ]
     assert uses == []
+
+
+def test_position_stage_merges_on_the_driver():
+    path = PKG / "lakehouse" / "table.py"
+    text = path.read_text()
+    (stage,) = [
+        n for n in ast.walk(ast.parse(text))
+        if isinstance(n, ast.FunctionDef) and n.name == "stage_position_deletes"
+    ]
+    src = ast.get_source_segment(text, stage)
+    assert "coalesce(" not in src and "_vector_rows" not in src
